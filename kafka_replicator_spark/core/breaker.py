@@ -7,8 +7,8 @@ second); when a mark finds the bucket empty the breaker's action fires
 halts).  Same semantics here, with an injectable clock so tests are
 deterministic.
 
-Reference defaults: Kafka 100 errors/min, S3 10/min, SQS 20/min
-(breaker.go:23-32).
+Reference defaults (breaker.go:23-32): Kafka 100 errors/min, S3 10/min,
+SQS 20/min — e.g. ``ThresholdBreaker(100, 60.0, label="Kafka")``.
 """
 
 from __future__ import annotations
@@ -66,14 +66,3 @@ class ThresholdBreaker:
     def snapshot(self) -> dict:
         return {"label": self.label, "marks": self.marks, "trips": self.trips}
 
-
-def default_kafka_breaker(**kw) -> ThresholdBreaker:
-    return ThresholdBreaker(100, 60.0, label="Kafka", **kw)
-
-
-def default_s3_breaker(**kw) -> ThresholdBreaker:
-    return ThresholdBreaker(10, 60.0, label="S3", **kw)
-
-
-def default_sqs_breaker(**kw) -> ThresholdBreaker:
-    return ThresholdBreaker(20, 60.0, label="SQS", **kw)

@@ -10,6 +10,12 @@ order, and we preserve it.  Provided both as pure-Python functions (driver
 metadata work, property-tested round-trip) and as column expressions
 (distributed: derive segment identity from ``input_file_name()`` on a read,
 reference parse at s3_segment_store.go:320-371).
+
+Segment identity comes from the last five path components only; whatever
+precedes them (``file:///`` scheme, root directories) is never parsed.  The
+column parse cuts those five components off the end of the path, checks
+them with one anchored pattern and splits them, so its cost is linear in
+the path length and flat in the prefix length.
 """
 
 from __future__ import annotations
@@ -30,9 +36,13 @@ _PATH_RE = re.compile(
     r"(?P<start>\d{20})-(?P<end>\d{20})(?:\.parquet)?$"
 )
 
-#: regexp used Spark-side over input_file_name(); group numbers match
-#: parse_segment_path_cols below.
-PATH_COL_RE = r"^.*?([^/]+)/([^/]+)/(\d+)/(\d+)/(\d{20})-(\d{20})(?:\.parquet)?$"
+#: the last five path components of a segment path, anchored at both ends.
+#: Java's ``$`` also matches before one final line terminator.
+_TAIL_COL_RE = r"^[^/]+/[^/]+/\d+/\d+/\d{20}-\d{20}(?:\.parquet)?$"
+#: a line terminator before the region component (at least five ``/`` follow
+#: it).  Such a path is not a segment path: the prefix is whatever comes
+#: before the region, and a prefix never spans a line break.
+_PREFIX_EOL_COL_RE = r"[\n\r\u0085\u2028\u2029](?:[^/]*/){5}"
 
 
 @dataclass(frozen=True)
@@ -99,20 +109,38 @@ def segment_path_col(
     )
 
 
-def parse_segment_path_cols(path: Column | str = None) -> list[Column]:
-    """Derive segment-identity columns from a path column (default:
-    ``input_file_name()``) — the distributed parse used when reading many
-    segment files at once.  Returns columns aliased to SEGMENT_SCHEMA names.
+def segment_path_fields(path: Column | str) -> list[Column]:
+    """The six identity fields of a path column as strings — region, topic,
+    partition, level, start and end offset — or six ``''`` if the path is
+    not a segment path (NULL stays NULL).
+
+    Parse a projected column, not ``input_file_name()`` itself: Spark then
+    evaluates the shared tail and validity subexpressions once per row.
     """
-    if path is None:
-        path = F.input_file_name()
-    elif isinstance(path, str):
+    if isinstance(path, str):
         path = F.col(path)
+    tail = F.substring_index(path, "/", -5)
+    bad = ~tail.rlike(_TAIL_COL_RE) | path.rlike(_PREFIX_EOL_COL_RE)
+    region, topic, partition_id, level, name = (
+        F.split_part(tail, F.lit("/"), F.lit(i)) for i in range(1, 6)
+    )
+    start, end = F.substring(name, 1, 20), F.substring(name, 22, 20)
+    fields = [region, topic, partition_id, level, start, end]
+    return [F.when(bad, F.lit("")).otherwise(f) for f in fields]
+
+
+def parse_segment_path_cols(path: Column | str) -> list[Column]:
+    """Derive segment-identity columns from a path column — the distributed
+    parse used when reading many segment files at once.  Returns columns
+    aliased to SEGMENT_SCHEMA names; a non-segment path fails the numeric
+    casts (``CAST_INVALID_INPUT`` under ANSI mode).
+    """
+    region, topic, partition_id, level, start, end = segment_path_fields(path)
     return [
-        F.regexp_extract(path, PATH_COL_RE, 1).alias("region"),
-        F.regexp_extract(path, PATH_COL_RE, 2).alias("topic"),
-        F.regexp_extract(path, PATH_COL_RE, 3).cast("int").alias("partition_id"),
-        F.regexp_extract(path, PATH_COL_RE, 4).cast("int").alias("level"),
-        F.regexp_extract(path, PATH_COL_RE, 5).cast("long").alias("start_offset"),
-        F.regexp_extract(path, PATH_COL_RE, 6).cast("long").alias("end_offset"),
+        region.alias("region"),
+        topic.alias("topic"),
+        partition_id.cast("int").alias("partition_id"),
+        level.cast("int").alias("level"),
+        start.cast("long").alias("start_offset"),
+        end.cast("long").alias("end_offset"),
     ]

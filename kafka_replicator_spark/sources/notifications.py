@@ -5,7 +5,7 @@ The reference long-polls SQS for S3 bucket-notification JSON and turns each
 record into a SegmentEvent for the consistency overlay (J1).  This module
 is the Spark-native restatement of the *parse* half — everything after the
 transport — as pure JVM-side column expressions (``from_json`` + explode +
-regexp codec), so it runs identically over
+path codec), so it runs identically over
 
   * a batch frame of drained SQS bodies (boto3 dump, Kinesis archive),
   * a streaming frame (``readStream`` of an SQS-to-S3/Kafka bridge)
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_replicator_spark.core.codec import PATH_COL_RE
+from kafka_replicator_spark.core.codec import segment_path_fields
 from kafka_replicator_spark.core.schema import EVENT_CREATED, EVENT_REMOVED
 
 #: the subset of the S3 bucket-notification record the reference reads
@@ -90,18 +90,19 @@ def parse_s3_notification_events(
     # try_* variants throughout: a malformed record must invalidate itself,
     # not abort the job under ANSI mode (the reference skips per record)
     ev_ts = F.try_to_timestamp(F.col("r.eventTime"))  # RFC3339(Nano)
+    region, topic, partition_id, level, start, end = segment_path_fields(key_dec)
     parsed = rec.select(
         ev_type.alias("event_type"),
         ev_ts.alias("event_ts"),
         F.col("r.eventSource").alias("_src"),
         F.col("r.s3.object.size").try_cast("long").alias("size_bytes"),
         key_dec.alias("_key"),
-        F.regexp_extract(key_dec, PATH_COL_RE, 1).alias("region"),
-        F.regexp_extract(key_dec, PATH_COL_RE, 2).alias("topic"),
-        F.regexp_extract(key_dec, PATH_COL_RE, 3).try_cast("int").alias("partition_id"),
-        F.regexp_extract(key_dec, PATH_COL_RE, 4).try_cast("int").alias("level"),
-        F.regexp_extract(key_dec, PATH_COL_RE, 5).try_cast("long").alias("start_offset"),
-        F.regexp_extract(key_dec, PATH_COL_RE, 6).try_cast("long").alias("end_offset"),
+        region.alias("region"),
+        topic.alias("topic"),
+        partition_id.try_cast("int").alias("partition_id"),
+        level.try_cast("int").alias("level"),
+        start.try_cast("long").alias("start_offset"),
+        end.try_cast("long").alias("end_offset"),
     )
     reason = (
         F.when(F.col("_src").isNull(), F.lit("not_s3_event_json"))

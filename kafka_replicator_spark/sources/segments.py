@@ -119,7 +119,9 @@ def read_segment_files(
     df = (
         spark.read.schema(SEGMENT_DATA_DDL)
         .parquet(*paths)
-        .select("*", *parse_segment_path_cols())
+        .select("*", F.input_file_name().alias("__path"))
+        .select("*", *parse_segment_path_cols("__path"))
+        .drop("__path")
     )
     if from_offset is not None:
         df = df.filter(F.col("msg_offset") >= F.lit(from_offset))

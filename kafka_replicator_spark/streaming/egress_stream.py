@@ -59,23 +59,6 @@ def project_kafka_records(raw: DataFrame) -> DataFrame:
     )
 
 
-def kafka_source(spark: SparkSession, brokers: str, topics: str) -> DataFrame:
-    """Kafka source wrapper (S1) + P1 projection.
-
-    Requires the spark-sql-kafka connector on the classpath; this container
-    has no broker, so tests drive :func:`project_kafka_records` directly and
-    the file-source path end-to-end.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topics)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    return project_kafka_records(raw)
-
-
 def run_egress_stream(
     spark: SparkSession,
     source_dir: str,

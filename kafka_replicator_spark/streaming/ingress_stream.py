@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 from dataclasses import dataclass, field
 from datetime import timedelta  # noqa: F401  (signature annotations)
 
@@ -48,6 +47,16 @@ def _local_path(p: str) -> str:
     if p.startswith("file:"):
         return unquote(urlparse(p).path)
     return p
+
+
+def _with_identity(files_df: DataFrame) -> DataFrame:
+    """A segment-file scan plus each row's file path (``src_path``) and the
+    segment identity parsed from it (P4 codec).  The path is projected
+    first, so the parse reads a column and its shared subexpressions run
+    once per row."""
+    return files_df.select("*", F.input_file_name().alias("src_path")).select(
+        "*", *parse_segment_path_cols("src_path")
+    )
 
 
 @dataclass
@@ -199,17 +208,8 @@ def run_ingress_stream(
     )
 
     def deliver(batch_df: DataFrame, epoch_id: int) -> None:
-        _prof = os.environ.get("KRS_INGRESS_PROF") == "1"
-        _t = [_time_mod.perf_counter()]
-
-        def _mark(label: str) -> None:
-            if _prof:
-                now = _time_mod.perf_counter()
-                print(f"# ingress-prof {label}: {now - _t[0]:.3f}s", file=sys.stderr)
-                _t[0] = now
-
         state = IngressState.load(state_path)
-        df = batch_df.select("*", *parse_segment_path_cols(), F.input_file_name().alias("src_path"))
+        df = _with_identity(batch_df)
         # re-read files held back in earlier batches (late/gated) — the file
         # source will never surface them again
         held = sorted(
@@ -218,9 +218,7 @@ def run_ingress_stream(
         held = [p for p in held if os.path.exists(p)]
         if held:
             df = df.unionByName(
-                spark.read.schema(SEGMENT_DATA_SCHEMA)
-                .parquet(*held)
-                .select("*", *parse_segment_path_cols(), F.input_file_name().alias("src_path"))
+                _with_identity(spark.read.schema(SEGMENT_DATA_SCHEMA).parquet(*held))
             )
         # F1/T9 trim vs delivery checkpoints (broadcast metadata join) —
         # BEFORE the dedup exchange (guide §2.3, filter before the shuffle):
@@ -260,7 +258,6 @@ def run_ingress_stream(
         # runs over segment extents, not rows, so an *internal* gap inside a
         # batch holds back exactly the files above the gap (O1 heap order,
         # reference worker.go:110-154)
-        _mark("construct")
         # per-file row count + min event ts ride the same aggregate: the
         # §2.11 meters can then be derived driver-side (below) instead of a
         # separate per-batch collect job over the delivered frame
@@ -274,7 +271,6 @@ def run_ingress_stream(
             )
             .collect()
         )
-        _mark("ranges_collect")
         by_part: dict[str, list] = {}
         for r in ranges:
             by_part.setdefault(f"{r['topic']}/{r['partition_id']}", []).append(r)
@@ -334,7 +330,6 @@ def run_ingress_stream(
                 state.checkpoints[key] = int(frontier)
 
         state.pending_paths = pending
-        _mark("walk")
         if frontiers:
             fr = spark.createDataFrame(
                 [
@@ -372,7 +367,6 @@ def run_ingress_stream(
                 err_state.save()
                 df.unpersist()
                 raise
-            _mark("write")
             # §2.11 meters: produced count + replication lag per partition
             # (A3 min-ts over the produced batch, reference worker.go:438-448).
             # Derived driver-side from the per-file aggregates already in
@@ -419,10 +413,8 @@ def run_ingress_stream(
                     state.messages_produced[key] = state.messages_produced.get(key, 0) + m["n"]
                     if m["min_ts"] is not None:
                         state.last_lag_ns[key] = now_ns - int(m["min_ts"])
-        _mark("meters")
         df.unpersist()
         state.save()  # T8 checkpoint-per-batch
-        _mark("save")
 
     q = (
         stream.writeStream.foreachBatch(deliver)

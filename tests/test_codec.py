@@ -1,6 +1,6 @@
 """Property tests for the segment path codec (FIXTURES.md invariant 5)."""
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from kafka_replicator_spark.core.codec import (
@@ -116,3 +116,152 @@ def test_lpad_filename_equals_codec_format(spark):
     )
     for r in df.collect():
         assert r["codec_name"].split(".")[0] == r["lpad_name"], r
+
+
+# ------------------------------------------- column parse vs reference regex
+#
+# The column parse used to be six ``regexp_extract(path, RE, i)`` calls with
+# the lazy-prefix pattern below, which rescans the whole path per group.
+# It is kept here only as the reference the linear parse must agree with,
+# value for value, on every input — malformed ones included.
+
+REFERENCE_PATH_COL_RE = r"^.*?([^/]+)/([^/]+)/(\d+)/(\d+)/(\d{20})-(\d{20})(?:\.parquet)?$"
+
+#: component characters: ASCII, non-ASCII letters and digits (Java's \d is
+#: ASCII-only), URL-escape characters and every Java line terminator
+_ALPHABET = "abz019.-_ +%é٣\n\r\u0085\u2028\u2029"
+_component = st.text(alphabet=_ALPHABET, min_size=1, max_size=12).filter(lambda s: "/" not in s)
+_digits = st.text(alphabet="0123456789", min_size=1, max_size=12)
+_segment_like = st.builds(lambda p, l: f"r/t/{p}/{l}", _digits, _digits)
+
+
+def _offset(n):
+    return st.text(alphabet="0123456789", min_size=n, max_size=n)
+
+
+_prefix = st.one_of(
+    st.text(alphabet=_ALPHABET + "/", max_size=200),
+    st.builds(
+        lambda scheme, comps: (scheme + "".join(c + "/" for c in comps))[:200],
+        st.sampled_from(["", "/", "file:/", "file:///", "s3://bucket/", "/tmp/x/"]),
+        st.lists(st.one_of(_component, _digits, _segment_like), max_size=12),
+    ),
+)
+_name = st.one_of(_component, _digits)
+
+
+@st.composite
+def _tail(draw, malformed):
+    """Region/topic/partition/level/name; ``malformed`` breaks exactly one
+    part of it."""
+    parts = [draw(_name), draw(_name), draw(_digits), draw(_digits)]
+    start, sep, end = draw(_offset(20)), "-", draw(_offset(20))
+    suffix = draw(st.sampled_from(["", ".parquet"]))
+    how = None
+    if malformed:
+        how = draw(st.sampled_from(["short", "empty", "digits", "offset", "sep", "suffix"]))
+    if how == "empty":  # empty region or topic
+        parts[draw(st.sampled_from([0, 1]))] = ""
+    elif how == "digits":  # non-digit partition or level
+        parts[draw(st.sampled_from([2, 3]))] = draw(_component)
+    elif how == "offset":  # 19- or 21-digit start or end
+        bad = draw(st.one_of(_offset(19), _offset(21)))
+        start, end = draw(st.sampled_from([(bad, end), (start, bad)]))
+    elif how == "sep":
+        sep = draw(st.sampled_from(["_", "", "--"]))
+    elif how == "suffix":
+        suffix = draw(st.sampled_from(
+            [".parq", ".PARQUET", ".parquet.tmp", ".parquet ", "/", ".parquet/",
+             "\n", ".parquet\n", ".parquet\r\n", ".parquet\u2028", ".parquet\n\n"]
+        ))
+    tail = "/".join([*parts, f"{start}{sep}{end}{suffix}"])
+    if how == "short":  # fewer than five components
+        tail = tail.split("/", draw(st.integers(1, 4)))[-1]
+    return tail
+
+
+_path = st.builds(lambda p, t: p + t, _prefix, st.one_of(_tail(False), _tail(True)))
+
+_SEG_NAME = "00000000000000000001-00000000000000000002.parquet"
+
+
+def _collect_or_condition(df):
+    """Rows of ``df``, or the error condition its action raises."""
+    from pyspark.errors import PySparkException
+
+    try:
+        return [tuple(r) for r in df.collect()]
+    except PySparkException as e:
+        return ("error", e.getCondition())
+
+
+# Spark jobs dominate the cost: few examples, many paths per example
+@given(paths=st.lists(st.one_of(_path, st.none()), min_size=1, max_size=40))
+@settings(max_examples=20, deadline=None)
+@example(paths=[f"/x/r/t/0/0/{_SEG_NAME}", f"file:///tmp/a/r/t/0/0/{_SEG_NAME}\n"])
+@example(paths=[f"/x\n/r/t/0/0/{_SEG_NAME}", f"/x/r\nq/t\r/0/0/{_SEG_NAME}"])
+@example(paths=[f"\u0085/r/t/0/0/{_SEG_NAME}", f"r/t/0/0/{_SEG_NAME}", f"t/0/0/{_SEG_NAME}"])
+@example(paths=[f"/r/t/0/0/{_SEG_NAME}/", f"/r/t/0/0/{_SEG_NAME}\r\n", f"//t/0/0/{_SEG_NAME}"])
+def test_column_parse_matches_reference_regex(spark, paths):
+    """segment_path_fields / parse_segment_path_cols return what the six
+    reference ``regexp_extract`` calls returned, or fail with the same
+    error condition (ANSI casts of a non-segment path's ``''``)."""
+    from pyspark.sql import functions as F
+
+    from kafka_replicator_spark.core.codec import (
+        parse_segment_path_cols,
+        segment_path_fields,
+    )
+
+    df = spark.createDataFrame([(p,) for p in paths], "path string")
+    ref = [F.regexp_extract("path", REFERENCE_PATH_COL_RE, i) for i in range(1, 7)]
+    for r in df.select(*segment_path_fields("path"), *ref).collect():
+        assert tuple(r[:6]) == tuple(r[6:]), paths
+
+    casts = ["string", "string", "int", "int", "long", "long"]
+    ref_cols = [c.cast(t) for c, t in zip(ref, casts)]
+    assert _collect_or_condition(df.select(*parse_segment_path_cols("path"))) == (
+        _collect_or_condition(df.select(*ref_cols))
+    ), paths
+
+
+@given(paths=st.lists(_path, min_size=1, max_size=40))
+@settings(max_examples=10, deadline=None)
+@example(paths=[f"p/r/t/0/0/{_SEG_NAME}", f"p%0A/r/t/0/0/{_SEG_NAME}", "p/r/t/0/0/%zz"])
+def test_notification_key_parse_matches_reference_regex(spark, paths):
+    """S3-notification keys: the same identity and ``invalid_segment_key``
+    verdicts as the reference regex under ``try_cast`` (no ANSI failure)."""
+    import json
+    from urllib.parse import quote
+
+    from pyspark.sql import functions as F
+
+    from kafka_replicator_spark.sources.notifications import parse_s3_notification_events
+
+    # raw keys and their URL-encoded form; both go through try_url_decode
+    keys = [k for p in paths for k in (p, quote(p))]
+    bodies = spark.createDataFrame(
+        [
+            (json.dumps({"Records": [{
+                "eventSource": "aws:s3",
+                "eventName": "ObjectCreated:Put",
+                "eventTime": "2024-03-19T17:44:04.772Z",
+                "s3": {"object": {"key": k, "size": 1}},
+            }]}), k)
+            for k in keys
+        ],
+        "body string, key string",
+    )
+    got = parse_s3_notification_events(bodies, keep_invalid=True).select(
+        "region", "topic", "partition_id", "level", "start_offset", "end_offset",
+        "invalid_reason",
+    )
+    key_dec = F.try_url_decode("key")
+    ref = [F.regexp_extract(key_dec, REFERENCE_PATH_COL_RE, i) for i in range(1, 7)]
+    want = bodies.select(
+        ref[0], ref[1],
+        ref[2].try_cast("int"), ref[3].try_cast("int"),
+        ref[4].try_cast("long"), ref[5].try_cast("long"),
+        F.when(F.coalesce(ref[0], F.lit("")) == "", F.lit("invalid_segment_key")),
+    )
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()], keys
