@@ -20,9 +20,11 @@ event-time semantics (watermarks, windows) are needed.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.column import Column
+from pyspark.sql.pandas.types import from_arrow_schema
 
 #: One Kafka message, plus its stream coordinates.
 #: reference: pkg/core/messages.proto:68-79
@@ -50,13 +52,62 @@ MESSAGE_SCHEMA = T.StructType(
 )
 
 #: At-rest columns inside a segment parquet file (reference parquet struct
-#: pkg/formats/s3_parquet.go:99-116: offset, key, value, timestamp, headers).
+#: pkg/formats/s3_parquet.go:99-116: offset, key, value, timestamp, headers),
+#: in the Arrow types every segment writer publishes.  This is the one
+#: definition of the at-rest format; the Spark form below is derived from it.
+SEGMENT_DATA_ARROW = pa.schema(
+    [
+        ("msg_offset", pa.int64()),
+        ("msg_key", pa.binary()),
+        ("payload", pa.binary()),
+        ("ts_ns", pa.int64()),
+        ("headers", pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))),
+    ]
+)
+SEGMENT_DATA_COLS = SEGMENT_DATA_ARROW.names
 #: Readers pass this explicitly so pre-headers files surface NULL headers
 #: instead of steering schema inference.
-SEGMENT_DATA_DDL = (
-    "msg_offset long, msg_key binary, payload binary, ts_ns long, "
-    "headers array<struct<key:string,value:binary>>"
+SEGMENT_DATA_SCHEMA = from_arrow_schema(SEGMENT_DATA_ARROW)
+
+#: Identity of a segment object as recovered from its path.
+_SEGMENT_ID_ARROW = [
+    ("region", pa.string()),
+    ("topic", pa.string()),
+    ("partition_id", pa.int32()),
+    ("level", pa.int32()),
+    ("start_offset", pa.int64()),
+    ("end_offset", pa.int64()),
+]
+
+#: One row per published segment object: the ``applyInArrow`` output of the
+#: egress writer and of the compaction merge.
+WRITTEN_SEGMENT_ARROW = pa.schema(
+    _SEGMENT_ID_ARROW
+    + [("message_count", pa.int64()), ("size_bytes", pa.int64()), ("path", pa.string())]
 )
+WRITTEN_SEGMENT_SCHEMA = from_arrow_schema(WRITTEN_SEGMENT_ARROW)
+
+#: Message rows with their segment identity (the ``kafka_segments`` source).
+SEGMENT_ROWS_ARROW = pa.schema(_SEGMENT_ID_ARROW + list(SEGMENT_DATA_ARROW))
+SEGMENT_ROWS_SCHEMA = from_arrow_schema(SEGMENT_ROWS_ARROW)
+
+
+def conform_segment_data(data, cols: list[str] = SEGMENT_DATA_COLS):
+    """``data`` (an Arrow Table or RecordBatch) as exactly the at-rest
+    columns ``cols``, in at-rest types.  A column is cast only when its type
+    differs (Spark may hand over large_binary); an absent column (files
+    written before it existed) becomes nulls.
+    """
+    schema = pa.schema([SEGMENT_DATA_ARROW.field(c) for c in cols])
+    arrays = []
+    for field in schema:
+        if field.name not in data.schema.names:
+            arrays.append(pa.nulls(data.num_rows, field.type))
+            continue
+        col = data.column(field.name)
+        arrays.append(col if col.type == field.type else col.cast(field.type))
+    return type(data).from_arrays(arrays, schema=schema)
+
 
 #: Segment identity + listing info.
 #: reference: pkg/core/messages.proto:28-35 (identity), pkg/core/core.go:90-94

@@ -12,8 +12,9 @@ Split exactly as the reference splits it:
   * **merge** (``merge_segments``) — data-scale: read the chosen files,
     trim below the floor, drop duplicate offsets from overlapping inputs,
     assert gap-freeness (compactor.go:219-221 "missing message range"),
-    and write ONE output segment per (topic, partition) at
-    ``level = max(input levels) + 1`` (compactor.go:134-150).
+    and write ONE output segment per (topic, partition) — or one per
+    ``max_output_messages`` chunk — at ``level = max(input levels) + 1``
+    (compactor.go:134-150).
   * **delete inputs** only after a successful write (compactor.go:314-351);
     a failed delete is retried implicitly next run via F3.
 
@@ -34,6 +35,12 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from kafka_replicator_spark.core.schema import (
+    SEGMENT_DATA_COLS,
+    WRITTEN_SEGMENT_SCHEMA,
+    conform_segment_data,
+)
 
 #: reference defaults, pkg/compaction/config.go:29-39
 DEFAULT_MIN_SEGMENT_COUNT = 10
@@ -178,10 +185,7 @@ def merge_segments(
     else:
         meta = plan
     if not meta:
-        return spark.createDataFrame(
-            [], schema="region string, topic string, partition_id int, level int, "
-            "start_offset long, end_offset long, message_count long, size_bytes long, path string"
-        )
+        return spark.createDataFrame([], schema=WRITTEN_SEGMENT_SCHEMA)
     out_levels = {}  # (topic, partition) -> max input level + 1
     floors = {}
     by_part: dict = {}
@@ -240,19 +244,12 @@ def merge_segments(
     def merge_task(spec_table):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        from kafka_replicator_spark.operators.egress import (
-            SEGMENT_DATA_COLS,
-            _arrow_segment_types,
-            _publish_segment_table,
-        )
+        from kafka_replicator_spark.operators.egress import _publish_segment_table
 
         spec = spec_table.to_pylist()[0]
         c_lo, c_hi = spec["chunk_lo"], spec["chunk_hi"]
-        arrow_types = _arrow_segment_types()
-        canonical = pa.schema([(c, arrow_types[c]) for c in SEGMENT_DATA_COLS])
         srt = sorted(zip(spec["starts"], spec["ends"], spec["levels"], spec["paths"]))
         plain_parts = []
         for s, e, lvl, path in srt:
@@ -260,16 +257,7 @@ def merge_segments(
                 path,
                 filters=[("msg_offset", ">=", c_lo), ("msg_offset", "<=", c_hi)],
             )
-            cols = []
-            for c in SEGMENT_DATA_COLS:  # fill columns absent in old files
-                if c in t.column_names:
-                    col = t.column(c)
-                    if col.type != arrow_types[c]:
-                        col = pc.cast(col, arrow_types[c])
-                else:
-                    col = pa.nulls(t.num_rows, type=arrow_types[c])
-                cols.append(col)
-            plain_parts.append((s, e, lvl, pa.Table.from_arrays(cols, schema=canonical)))
+            plain_parts.append((s, e, lvl, conform_segment_data(t)))
         # r13 opt: when the input extents are DISJOINT (metadata check — the
         # steady egress case: greedy assignment emits non-overlapping
         # segments) and every file is internally strictly offset-sorted (the
@@ -341,15 +329,10 @@ def merge_segments(
         spark.sparkContext.parallelize([tuple(s.values()) for s in specs], 1),
         schema=spec_schema,
     )
-    result_schema = (
-        "region string, topic string, partition_id int, level int, "
-        "start_offset long, end_offset long, message_count long, "
-        "size_bytes long, path string"
-    )
     return (
         spec_df.repartition(len(specs), "topic", "partition_id", "chunk_lo")
         .groupBy("topic", "partition_id", "chunk_lo")
-        .applyInArrow(lambda t: merge_task(t), schema=result_schema)
+        .applyInArrow(lambda t: merge_task(t), schema=WRITTEN_SEGMENT_SCHEMA)
     )
 
 

@@ -8,7 +8,7 @@ declaratively:
   1. *segment assignment* — a column computation tagging each message with
      the segment it belongs to (two flavors below);
   2. *segment write* — one writer task per segment group
-     (``applyInPandas``), producing exactly one parquet object named
+     (``applyInArrow``), producing exactly one parquet object named
      ``{start:020d}-{end:020d}`` with footer metadata, via a temp-file →
      atomic-rename two-phase publish (reference two-phase CopyObject commit,
      pkg/stores/s3_segment_store.go:275-298).
@@ -31,24 +31,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_replicator_spark.core.codec import SEGMENT_SUFFIX
-from kafka_replicator_spark.core.schema import message_size_col
+from kafka_replicator_spark.core.schema import (
+    SEGMENT_DATA_COLS,
+    WRITTEN_SEGMENT_ARROW,
+    WRITTEN_SEGMENT_SCHEMA,
+    conform_segment_data,
+    message_size_col,
+)
 
 #: reference defaults, pkg/egress/config.go:28-34
 DEFAULT_MAX_SEGMENT_BYTES = 100 * 1024 * 1024
 DEFAULT_MAX_SEGMENT_MESSAGES = 1_000_000
-
-#: parquet footer KV metadata keys (reference stamps SegmentMetadata into the
-#: footer — pkg/formats/s3_parquet.go:379-397, messages.proto:57-66)
-FOOTER_KEYS = (
-    "region",
-    "topic",
-    "partition",
-    "level",
-    "startOffset",
-    "endOffset",
-    "messageCount",
-    "createdTimestamp",
-)
 
 
 def assign_segments_by_count(df: DataFrame, max_messages: int) -> DataFrame:
@@ -228,130 +221,6 @@ def segment_bounds(tagged: DataFrame, region: str, level: int = 0) -> DataFrame:
     )
 
 
-def _write_one_segment(
-    pdf: pd.DataFrame,
-    root: str,
-    region: str,
-    level: int | str,
-    data_cols: list[str],
-    require_dense: bool = False,
-) -> pd.DataFrame:
-    """Write one segment group to its final path (executor-side).
-
-    Two-phase publish: write to ``{root}/temp/{uuid}`` then atomically
-    rename to the final key (reference s3_segment_store.go:135-149,275-312).
-    On object stores without rename, swap for a conditional CopyObject —
-    the call-site contract (temp key, final key, footer) is the same.
-
-    ``require_dense`` performs the compaction gap check inline (count ==
-    end-start+1, reference compactor.go:219-221) — checked here, on data
-    already in hand, instead of a separate full pass; raising before the
-    rename means nothing is published for the failing partition.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = pdf.sort_values("msg_offset", kind="mergesort").reset_index(drop=True)
-    if isinstance(level, str):
-        level = int(pdf[level].iloc[0])  # per-group level column (compaction)
-    topic = str(pdf["topic"].iloc[0])
-    partition_id = int(pdf["partition_id"].iloc[0])
-    start = int(pdf["msg_offset"].iloc[0])
-    end = int(pdf["msg_offset"].iloc[-1])
-    count = len(pdf)
-    if require_dense and count != end - start + 1:
-        raise ValueError(
-            f"missing message range (offset gap) in {topic}/{partition_id}"
-            f"[{start}..{end}] n={count}"
-        )
-    created_ns = pd.Timestamp.utcnow().value
-
-    final_dir = os.path.join(root, region, topic, str(partition_id), str(level))
-    os.makedirs(final_dir, exist_ok=True)
-    tmp_dir = os.path.join(root, "temp")
-    os.makedirs(tmp_dir, exist_ok=True)
-    tmp_path = os.path.join(tmp_dir, uuid.uuid4().hex)
-    final_path = os.path.join(final_dir, f"{start:020d}-{end:020d}{SEGMENT_SUFFIX}")
-
-    # explicit Arrow types — inference over object columns (binary, list of
-    # header structs) is unstable on empty/all-null groups
-    arrow_types = {
-        "msg_offset": pa.int64(),
-        "msg_key": pa.binary(),
-        "payload": pa.binary(),
-        "ts_ns": pa.int64(),
-        "headers": pa.list_(
-            pa.struct([("key", pa.string()), ("value", pa.binary())])
-        ),
-    }
-    table = pa.Table.from_pandas(
-        pdf[data_cols],
-        schema=pa.schema([(c, arrow_types[c]) for c in data_cols]),
-        preserve_index=False,
-    )
-    footer = {
-        "region": region,
-        "topic": topic,
-        "partition": str(partition_id),
-        "level": str(level),
-        "startOffset": str(start),
-        "endOffset": str(end),
-        "messageCount": str(count),
-        "createdTimestamp": str(created_ns),
-    }
-    table = table.replace_schema_metadata(
-        {**(table.schema.metadata or {}), **{k.encode(): v.encode() for k, v in footer.items()}}
-    )
-    pq.write_table(table, tmp_path, compression="snappy")
-    os.replace(tmp_path, final_path)  # atomic publish
-
-    return pd.DataFrame(
-        [
-            {
-                "region": region,
-                "topic": topic,
-                "partition_id": partition_id,
-                "level": level,
-                "start_offset": start,
-                "end_offset": end,
-                "message_count": count,
-                "size_bytes": int(os.path.getsize(final_path)),
-                "path": final_path,
-            }
-        ]
-    )
-
-
-def _arrow_segment_types():
-    import pyarrow as pa
-
-    return {
-        "msg_offset": pa.int64(),
-        "msg_key": pa.binary(),
-        "payload": pa.binary(),
-        "ts_ns": pa.int64(),
-        "headers": pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())])),
-    }
-
-
-def _arrow_result_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("region", pa.string()),
-            ("topic", pa.string()),
-            ("partition_id", pa.int32()),
-            ("level", pa.int32()),
-            ("start_offset", pa.int64()),
-            ("end_offset", pa.int64()),
-            ("message_count", pa.int64()),
-            ("size_bytes", pa.int64()),
-            ("path", pa.string()),
-        ]
-    )
-
-
 def _publish_segment_table(
     out,
     root: str,
@@ -361,10 +230,18 @@ def _publish_segment_table(
     level: int,
     require_dense: bool = False,
 ):
-    """Publish a sorted, canonical-schema Arrow table of message rows as one
-    segment object (footer KV + temp-file → atomic-rename two-phase commit)
-    and return its metadata as a 1-row Arrow table.  Shared by the grouped
-    writer and the shuffle-free compaction merge.
+    """Publish a sorted, at-rest-schema Arrow table of message rows as one
+    segment object and return its metadata as a 1-row Arrow table.  Shared
+    by the egress writer and the shuffle-free compaction merge.
+
+    Two-phase publish: write to ``{root}/temp/{uuid}`` then atomically
+    rename to the final key (reference s3_segment_store.go:135-149,275-312).
+    On object stores without rename, swap for a conditional CopyObject —
+    the call-site contract (temp key, final key, footer) is the same.
+
+    ``require_dense`` performs the compaction gap check (count ==
+    end-start+1, reference compactor.go:219-221) before the rename, so
+    nothing is published for the failing partition.
     """
     import time as _time
 
@@ -419,27 +296,15 @@ def _publish_segment_table(
                 "path": final_path,
             }
         ],
-        schema=_arrow_result_schema(),
+        schema=WRITTEN_SEGMENT_ARROW,
     )
 
 
-def _write_one_segment_arrow(
-    table,
-    root: str,
-    region: str,
-    level: int | str,
-    data_cols: list[str],
-    require_dense: bool = False,
-):
-    """Arrow-native flavor of :func:`_write_one_segment` for
-    ``applyInArrow`` — the group arrives as a ``pyarrow.Table`` and is
-    written without ever materializing pandas objects.  For binary payloads
-    and the repeated-headers column the pandas round-trip is pure
-    conversion overhead (python object boxing of every key/payload/header);
-    staying in Arrow cuts the writer to sort + cast + write.
+def _write_one_segment_arrow(table, root: str, region: str, level: int, data_cols: list[str]):
+    """Write one segment group (executor-side, ``applyInArrow``): the group
+    arrives as a ``pyarrow.Table`` and is written without ever materializing
+    pandas objects — sort, conform, publish.
     """
-    import pyarrow as pa
-
     # r13 opt: the group usually arrives offset-sorted (shuffle readers
     # drain map outputs in map order, and upstream data is offset-ordered
     # per partition), making the full-table sort gather a wasted copy —
@@ -448,153 +313,35 @@ def _write_one_segment_arrow(
     po = table.column("msg_offset").to_numpy()
     if len(po) > 1 and not (po[1:] > po[:-1]).all():
         table = table.sort_by([("msg_offset", "ascending")])
-    if isinstance(level, str):
-        level = int(table.column(level)[0].as_py())
     topic = str(table.column("topic")[0].as_py())
     partition_id = int(table.column("partition_id")[0].as_py())
-    arrow_types = _arrow_segment_types()
-    out = table.select(data_cols)
-    canonical = pa.schema([(c, arrow_types[c]) for c in data_cols])
-    if out.schema != canonical:  # Spark may hand over large_binary etc.
-        out = out.cast(canonical)
     return _publish_segment_table(
-        out, root=root, region=region, topic=topic, partition_id=partition_id,
-        level=int(level), require_dense=require_dense,
+        conform_segment_data(table, data_cols), root=root, region=region,
+        topic=topic, partition_id=partition_id, level=int(level),
     )
 
 
-#: applyInPandas output schema for the writer
-_WRITE_RESULT_SCHEMA = (
-    "region string, topic string, partition_id int, level int, "
-    "start_offset long, end_offset long, message_count long, "
-    "size_bytes long, path string"
-)
-
-#: columns persisted inside a segment file (at-rest message schema; binary
-#: key/payload + repeated headers per reference s3_parquet.go:99-116)
-SEGMENT_DATA_COLS = ["msg_offset", "msg_key", "payload", "ts_ns", "headers"]
-
-
-def write_segments(
-    tagged: DataFrame,
-    root: str,
-    region: str,
-    level: int | str = 0,
-    require_dense: bool = False,
-) -> DataFrame:
+def write_segments(tagged: DataFrame, root: str, region: str, level: int = 0) -> DataFrame:
     """Write one parquet segment per (topic, partition_id, segment_seq)
-    group; returns the written-segment metadata DataFrame (K1).
-
-    ``level`` may be an int (all segments at that level — egress) or the
-    name of a column carrying a per-group output level (compaction).
+    group at ``level``; returns the written-segment metadata DataFrame (K1).
 
     The groupBy shuffles each segment's rows to one task — segments write
     concurrently across the cluster.  Returned metadata comes back from the
-    executors, so nothing is listed or re-read.
+    executors, so nothing is listed or re-read.  At-rest columns absent from
+    ``tagged`` (e.g. headers) are absent from the file too.
     """
     data = tagged.withColumn("msg_key", F.col("msg_key").cast("binary")).withColumn(
         "payload", F.col("payload").cast("binary")
     )
     cols = [c for c in SEGMENT_DATA_COLS if c in data.columns]
-    extra = [level] if isinstance(level, str) else []
-    grouped = data.select(
-        "topic", "partition_id", "segment_seq", *cols, *extra
-    ).groupBy("topic", "partition_id", "segment_seq")
 
-    if hasattr(grouped, "applyInArrow"):  # Spark 4: no pandas round-trip
-
-        def afn(table):
-            return _write_one_segment_arrow(
-                table, root=root, region=region, level=level, data_cols=cols,
-                require_dense=require_dense,
-            )
-
-        return grouped.applyInArrow(afn, schema=_WRITE_RESULT_SCHEMA)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _write_one_segment(
-            pdf, root=root, region=region, level=level, data_cols=cols,
-            require_dense=require_dense,
+    def write(table):
+        return _write_one_segment_arrow(
+            table, root=root, region=region, level=level, data_cols=cols
         )
 
-    return grouped.applyInPandas(fn, schema=_WRITE_RESULT_SCHEMA)
-
-
-def write_segments_native(
-    tagged: DataFrame,
-    root: str,
-    region: str,
-    level: int | str = 0,
-    require_dense: bool = False,
-) -> DataFrame:
-    """JVM-native fast path of :func:`write_segments`: the data never leaves
-    Tungsten — Spark's parquet writer emits one file per (topic, partition,
-    segment) directory (rows pre-sorted within each task), and a metadata-
-    scale rename pass derives the final ``%020d-%020d`` names from the
-    files' parquet column statistics (no data re-read).
-
-    Trade-off vs the default writer: no custom footer KV metadata (segment
-    identity lives in the path, counts/extents in the parquet stats) — the
-    sidecar-manifest flavor SURVEY §1.1 allows.  Same layout, same two-phase
-    atomicity (stage dir → rename).
-    """
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    level_col = F.col(level) if isinstance(level, str) else F.lit(int(level))
-    data = (
-        tagged.withColumn("msg_key", F.col("msg_key").cast("binary"))
-        .withColumn("payload", F.col("payload").cast("binary"))
-        .withColumn("__level", level_col.cast("int"))
+    return (
+        data.select("topic", "partition_id", "segment_seq", *cols)
+        .groupBy("topic", "partition_id", "segment_seq")
+        .applyInArrow(write, schema=WRITTEN_SEGMENT_SCHEMA)
     )
-    cols = [c for c in SEGMENT_DATA_COLS if c in data.columns]
-    stage = tempfile.mkdtemp(prefix="krs_stage_", dir=root)
-    (
-        data.select("topic", "partition_id", "segment_seq", "__level", *cols)
-        .repartition("topic", "partition_id", "segment_seq")
-        .sortWithinPartitions("topic", "partition_id", "segment_seq", "msg_offset")
-        .write.partitionBy("topic", "partition_id", "segment_seq", "__level")
-        .parquet(stage, mode="overwrite")
-    )
-
-    # rename pass (metadata-scale): stats give the offset extent per file
-    out_rows = []
-    for dirpath, _dn, filenames in os.walk(stage):
-        parts = dict(
-            kv.split("=", 1) for kv in dirpath[len(stage):].strip("/").split("/") if "=" in kv
-        )
-        for fn in filenames:
-            if not fn.endswith(".parquet"):
-                continue
-            src = os.path.join(dirpath, fn)
-            meta = pq.ParquetFile(src).metadata
-            idx = next(
-                i for i in range(meta.num_columns)
-                if meta.row_group(0).column(i).path_in_schema == "msg_offset"
-            )
-            start = min(meta.row_group(g).column(idx).statistics.min for g in range(meta.num_row_groups))
-            end = max(meta.row_group(g).column(idx).statistics.max for g in range(meta.num_row_groups))
-            count = meta.num_rows
-            lvl = int(parts["__level"])
-            if require_dense and count != end - start + 1:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise ValueError(
-                    f"missing message range (offset gap) in {parts['topic']}/"
-                    f"{parts['partition_id']}[{start}..{end}] n={count}"
-                )
-            final_dir = os.path.join(
-                root, region, parts["topic"], parts["partition_id"], str(lvl)
-            )
-            os.makedirs(final_dir, exist_ok=True)
-            final = os.path.join(final_dir, f"{start:020d}-{end:020d}{SEGMENT_SUFFIX}")
-            os.replace(src, final)
-            out_rows.append(
-                (
-                    region, parts["topic"], int(parts["partition_id"]), lvl,
-                    int(start), int(end), int(count), int(os.path.getsize(final)), final,
-                )
-            )
-    shutil.rmtree(stage, ignore_errors=True)
-    return tagged.sparkSession.createDataFrame(out_rows, schema=_WRITE_RESULT_SCHEMA)

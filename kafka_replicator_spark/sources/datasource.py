@@ -21,13 +21,14 @@ row, the identity is constant per partition.
 from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
-SEGMENT_SOURCE_SCHEMA = (
-    "region string, topic string, partition_id int, level int, "
-    "start_offset long, end_offset long, "
-    "msg_offset long, msg_key binary, payload binary, ts_ns long, "
-    "headers array<struct<key:string,value:binary>>"
+from kafka_replicator_spark.core.schema import (
+    SEGMENT_ROWS_ARROW,
+    SEGMENT_ROWS_SCHEMA,
+    conform_segment_data,
 )
+from kafka_replicator_spark.sources.segments import walk_segments
 
 
 class SegmentInputPartition(InputPartition):
@@ -54,36 +55,18 @@ class SegmentReader(DataSourceReader):
         self.from_offset = int(options.get("from_offset", "-1"))
 
     def partitions(self):
-        # driver-side listing — identical scope rules as list_segments (S3)
-        import os
-
-        from kafka_replicator_spark.core.codec import parse_segment_path
-
-        base = self.root.rstrip("/")
-        for p in (self.region, self.topic,
-                  None if self.partition_id is None else str(self.partition_id)):
-            if p is None:
-                break
-            base = f"{base}/{p}"
-        out = []
-        for dirpath, _dn, filenames in os.walk(base):
-            if os.path.basename(os.path.normpath(dirpath)) == "temp":
-                continue
-            for fn in filenames:
-                path = os.path.join(dirpath, fn)
-                try:
-                    seg = parse_segment_path(path)
-                except ValueError:
-                    continue
-                if self.from_offset >= 0 and seg.end_offset < self.from_offset:
-                    continue  # F2: fully-delivered segments pruned at plan time
-                out.append(
-                    SegmentInputPartition(
-                        path, seg.region, seg.topic, seg.partition_id,
-                        seg.level, seg.start_offset, seg.end_offset,
-                    )
-                )
-        return out
+        # driver-side listing — the same walk as list_segments (S3)
+        return [
+            SegmentInputPartition(
+                path, seg.region, seg.topic, seg.partition_id,
+                seg.level, seg.start_offset, seg.end_offset,
+            )
+            for path, seg in walk_segments(
+                self.root, self.region, self.topic, self.partition_id
+            )
+            # F2: fully-delivered segments pruned at plan time
+            if self.from_offset < 0 or seg.end_offset >= self.from_offset
+        ]
 
     def read(self, partition: SegmentInputPartition):
         # executor-side: stream the file as Arrow batches with constant
@@ -93,44 +76,24 @@ class SegmentReader(DataSourceReader):
 
         pf = pq.ParquetFile(partition.path)
         for batch in pf.iter_batches():
-            n = batch.num_rows
             if self.from_offset >= 0:
                 mask = pa.compute.greater_equal(
                     batch.column("msg_offset"), pa.scalar(self.from_offset)
                 )
                 batch = batch.filter(mask)
-                n = batch.num_rows
-                if n == 0:
+                if batch.num_rows == 0:
                     continue
             ident = [
-                pa.array([partition.region] * n, pa.string()),
-                pa.array([partition.topic] * n, pa.string()),
-                pa.array([partition.partition_id] * n, pa.int32()),
-                pa.array([partition.level] * n, pa.int32()),
-                pa.array([partition.start_offset] * n, pa.int64()),
-                pa.array([partition.end_offset] * n, pa.int64()),
+                partition.region, partition.topic, partition.partition_id,
+                partition.level, partition.start_offset, partition.end_offset,
             ]
-            header_type = pa.list_(
-                pa.struct([("key", pa.string()), ("value", pa.binary())])
-            )
-            if "headers" in batch.schema.names:
-                headers = batch.column("headers").cast(header_type)
-            else:  # pre-headers segment files: surface as NULL
-                headers = pa.nulls(n, header_type)
             yield pa.RecordBatch.from_arrays(
-                ident
-                + [
-                    batch.column("msg_offset"),
-                    batch.column("msg_key"),
-                    batch.column("payload"),
-                    batch.column("ts_ns"),
-                    headers,
-                ],
-                names=[
-                    "region", "topic", "partition_id", "level",
-                    "start_offset", "end_offset",
-                    "msg_offset", "msg_key", "payload", "ts_ns", "headers",
-                ],
+                [
+                    pa.array([v] * batch.num_rows, field.type)
+                    for v, field in zip(ident, SEGMENT_ROWS_ARROW)
+                ]
+                + conform_segment_data(batch).columns,
+                schema=SEGMENT_ROWS_ARROW,
             )
 
 
@@ -141,8 +104,8 @@ class SegmentDataSource(DataSource):
     def name(cls) -> str:
         return "kafka_segments"
 
-    def schema(self) -> str:
-        return SEGMENT_SOURCE_SCHEMA
+    def schema(self) -> StructType:
+        return SEGMENT_ROWS_SCHEMA
 
     def reader(self, schema) -> SegmentReader:
         return SegmentReader(self.options)

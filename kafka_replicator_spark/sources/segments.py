@@ -13,13 +13,54 @@ pushdown into the scan.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_replicator_spark.core.codec import parse_segment_path, parse_segment_path_cols
-from kafka_replicator_spark.core.schema import SEGMENT_DATA_DDL, SEGMENT_SCHEMA
+from kafka_replicator_spark.core.codec import (
+    SegmentId,
+    parse_segment_path,
+    parse_segment_path_cols,
+)
+from kafka_replicator_spark.core.schema import SEGMENT_DATA_SCHEMA, SEGMENT_SCHEMA
+
+
+def walk_segments(
+    root: str,
+    region: str | None = None,
+    topic: str | None = None,
+    partition_id: int | None = None,
+) -> Iterator[tuple[str, SegmentId]]:
+    """Yield ``(path, identity)`` of every committed segment file under
+    ``root`` whose identity matches every given filter.
+
+    The leading run of given filters narrows the walk prefix like the
+    reference's scoped LIST (s3_segment_store.go:212-215) — partition
+    pruning at the listing layer; every filter is then also checked on the
+    parsed identity, so one given without the level above it (``topic``
+    alone, ``region`` + ``partition_id``) still applies.  Files under
+    ``temp/`` are uncommitted (two-phase publish) and never yielded.
+    """
+    want = (region, topic, None if partition_id is None else int(partition_id))
+    base = root.rstrip("/")
+    for part in want:
+        if part is None:
+            break
+        base = f"{base}/{part}"
+    for dirpath, _dirnames, filenames in os.walk(base):
+        if os.path.basename(os.path.normpath(dirpath)) == "temp":
+            continue
+        for fn in filenames:
+            path = os.path.join(dirpath, fn)
+            try:
+                seg = parse_segment_path(path)
+            except ValueError:
+                continue
+            got = (seg.region, seg.topic, seg.partition_id)
+            if all(w is None or w == g for w, g in zip(want, got)):
+                yield path, seg
 
 
 def list_segments(
@@ -30,51 +71,36 @@ def list_segments(
     partition_id: int | None = None,
     read_footers: bool = False,
 ) -> DataFrame:
-    """List segment files under ``root`` → SEGMENT_SCHEMA DataFrame.
+    """List segment files under ``root`` → SEGMENT_SCHEMA DataFrame, scoped
+    by :func:`walk_segments`.
 
-    Filters narrow the walk prefix like the reference's scoped LIST
-    (s3_segment_store.go:212-215) — partition pruning at the listing layer.
     ``read_footers=True`` also loads messageCount from each parquet footer
     (an extra HEAD-scale read per file; off by default).
     """
-    base = root.rstrip("/")
-    for part in (region, topic, partition_id if partition_id is None else str(partition_id)):
-        if part is None:
-            break
-        base = f"{base}/{part}"
-
     rows = []
-    for dirpath, _dirnames, filenames in os.walk(base):
-        if os.path.basename(os.path.normpath(dirpath)) == "temp":
-            continue  # uncommitted temp objects are invisible (two-phase publish)
-        for fn in filenames:
-            path = os.path.join(dirpath, fn)
-            try:
-                seg = parse_segment_path(path)
-            except ValueError:
-                continue
-            st = os.stat(path)
-            count = None
-            if read_footers:
-                import pyarrow.parquet as pq
+    for path, seg in walk_segments(root, region, topic, partition_id):
+        st = os.stat(path)
+        count = None
+        if read_footers:
+            import pyarrow.parquet as pq
 
-                meta = pq.ParquetFile(path).metadata.metadata or {}
-                raw = meta.get(b"messageCount")
-                count = int(raw) if raw is not None else None
-            rows.append(
-                (
-                    seg.region,
-                    seg.topic,
-                    seg.partition_id,
-                    seg.level,
-                    seg.start_offset,
-                    seg.end_offset,
-                    count,
-                    int(st.st_size),
-                    datetime.fromtimestamp(st.st_mtime, tz=timezone.utc).replace(tzinfo=None),
-                    path,
-                )
+            meta = pq.ParquetFile(path).metadata.metadata or {}
+            raw = meta.get(b"messageCount")
+            count = int(raw) if raw is not None else None
+        rows.append(
+            (
+                seg.region,
+                seg.topic,
+                seg.partition_id,
+                seg.level,
+                seg.start_offset,
+                seg.end_offset,
+                count,
+                int(st.st_size),
+                datetime.fromtimestamp(st.st_mtime, tz=timezone.utc).replace(tzinfo=None),
+                path,
             )
+        )
     # ONE partition: the listing is metadata-scale (path strings, not
     # data), and the default 32-slice parallelize makes every downstream
     # metadata job a 32-task job of empty partitions — measured ~35% of
@@ -117,7 +143,7 @@ def read_segment_files(
     if not paths:
         raise ValueError("no segment paths to read")
     df = (
-        spark.read.schema(SEGMENT_DATA_DDL)
+        spark.read.schema(SEGMENT_DATA_SCHEMA)
         .parquet(*paths)
         .select("*", F.input_file_name().alias("__path"))
         .select("*", *parse_segment_path_cols("__path"))

@@ -35,9 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_replicator_spark.core.codec import parse_segment_path_cols
-from kafka_replicator_spark.core.schema import SEGMENT_DATA_DDL
-
-SEGMENT_DATA_SCHEMA = SEGMENT_DATA_DDL
+from kafka_replicator_spark.core.schema import SEGMENT_DATA_SCHEMA
 
 
 def _local_path(p: str) -> str:

@@ -4,6 +4,7 @@ tests/compaction_test.go coverage: golden merge flow, overlap dedup
 count/size threshold gating (FIXTURES.md invariant 4).
 """
 
+import time
 from datetime import datetime, timedelta
 
 import pytest
@@ -230,6 +231,44 @@ def test_superseded_kept_when_partition_skips(spark, tmp_path):
     assert os.path.exists(sup[0]["path"])
 
 
+def test_failed_input_delete_is_superseded_next_run(spark, tmp_path, monkeypatch):
+    """A merge input that cannot be deleted (compactor.go:314-351 tolerates
+    it) leaves an overlap that reads dedup away, and the next compaction of
+    its partition deletes it as superseded (F3)."""
+    import os
+
+    root = str(tmp_path)
+    written = [_write_range(spark, root, 0, s, e)[0] for s, e in [(0, 9), (10, 19), (20, 29)]]
+    stuck = written[1]["path"]
+    real_remove = os.remove
+
+    def remove(path, *args, **kwargs):
+        if path == stuck:
+            raise PermissionError(f"cannot delete {path}")
+        return real_remove(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "remove", remove)
+        out = compact(spark, root, region=REGION, min_count=2, min_bytes=1).collect()
+    assert [(r["start_offset"], r["end_offset"], r["level"]) for r in out] == [(0, 29, 1)]
+    listed = list_segments(spark, root).collect()
+    assert sorted(r["path"] for r in listed) == sorted([out[0]["path"], stuck])
+    back = read_segment_files(spark, [r["path"] for r in listed], dedup_overlaps=True)
+    assert sorted(r["msg_offset"] for r in back.select("msg_offset").collect()) == list(range(30))
+
+    # the partition qualifies again once new level-0 input arrives; the
+    # leftover sits below the level-1 floor and goes with the inputs
+    for s, e in [(30, 39), (40, 49)]:
+        _write_range(spark, root, 0, s, e)
+    out2 = compact(spark, root, region=REGION, min_count=2, min_bytes=1).collect()
+    assert [(r["start_offset"], r["end_offset"]) for r in out2] == [(30, 49)]
+    assert not os.path.exists(stuck)
+    assert sorted(
+        (r["start_offset"], r["end_offset"], r["level"])
+        for r in list_segments(spark, root).collect()
+    ) == [(0, 29, 1), (30, 49, 1)]
+
+
 def test_multi_partition_independent_merge(spark, tmp_path):
     root = str(tmp_path)
     for p in (0, 1, 2):
@@ -294,8 +333,15 @@ def test_disjoint_merge_physical_order_and_payloads(spark, tmp_path):
     assert payloads == [f"value_{o}".encode() for o in range(35)]
     footer = {
         k.decode(): v.decode() for k, v in (t.schema.metadata or {}).items()
+        if k != b"ARROW:schema"
     }
-    assert footer["startOffset"] == "0" and footer["messageCount"] == "35"
+    # the reference's full SegmentMetadata key set (s3_parquet.go:379-397)
+    created = footer.pop("createdTimestamp")
+    assert footer == {
+        "region": REGION, "topic": "t", "partition": "0", "level": "1",
+        "startOffset": "0", "endOffset": "34", "messageCount": "35",
+    }
+    assert abs(int(created) - time.time_ns()) < 3600 * 10**9
 
 
 def test_disjoint_fast_path_rejects_extent_lying_file(spark, tmp_path):
@@ -311,15 +357,12 @@ def test_disjoint_fast_path_rejects_extent_lying_file(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_replicator_spark.operators.egress import (
-        SEGMENT_DATA_COLS,
-        _arrow_segment_types,
-    )
+    from kafka_replicator_spark.core.schema import SEGMENT_DATA_ARROW
 
     root = str(tmp_path)
     _write_range(spark, root, 0, 10, 19)  # honest file
     # forged file: named 0-9, actually holds 0-12 (duplicating 10-12)
-    types = _arrow_segment_types()
+    types = {f.name: f.type for f in SEGMENT_DATA_ARROW}
     offs = list(range(0, 13))
     forged = pa.Table.from_arrays(
         [
@@ -329,7 +372,7 @@ def test_disjoint_fast_path_rejects_extent_lying_file(spark, tmp_path):
             pa.array([1_553_000_000_000 + o for o in offs], types["ts_ns"]),
             pa.array([None] * len(offs), types["headers"]),
         ],
-        schema=pa.schema([(c, types[c]) for c in SEGMENT_DATA_COLS]),
+        schema=SEGMENT_DATA_ARROW,
     )
     seg_dir = os.path.join(root, REGION, "t", "0", "0")
     pq.write_table(
@@ -356,13 +399,10 @@ def test_writer_fallback_sorts_shuffled_group(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_replicator_spark.operators.egress import (
-        SEGMENT_DATA_COLS,
-        _arrow_segment_types,
-        _write_one_segment_arrow,
-    )
+    from kafka_replicator_spark.core.schema import SEGMENT_DATA_ARROW, SEGMENT_DATA_COLS
+    from kafka_replicator_spark.operators.egress import _write_one_segment_arrow
 
-    types = _arrow_segment_types()
+    types = {f.name: f.type for f in SEGMENT_DATA_ARROW}
     offs = [5, 2, 9, 0, 7, 1, 8, 3, 6, 4]  # shuffled, dense 0..9
     group = pa.Table.from_arrays(
         [
@@ -378,7 +418,7 @@ def test_writer_fallback_sorts_shuffled_group(tmp_path):
     )
     res = _write_one_segment_arrow(
         group, root=str(tmp_path), region=REGION, level=0,
-        data_cols=SEGMENT_DATA_COLS, require_dense=True,
+        data_cols=SEGMENT_DATA_COLS,
     )
     row = res.to_pylist()[0]
     assert (row["start_offset"], row["end_offset"], row["message_count"]) == (0, 9, 10)

@@ -1,6 +1,7 @@
 """Custom kafka_segments DataSource: format-registry read path equals the
 library read path; option-based pruning works."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_replicator_spark.operators.egress import assign_segments_by_count, write_segments
@@ -76,3 +77,46 @@ def test_streaming_source_discovers_incrementally(spark, messages, tmp_path):
         ]
     finally:
         q.stop()
+
+
+@pytest.fixture(scope="module")
+def scoped_root(spark, tmp_path_factory):
+    """Region r1 holds topics a, b × partitions 0, 1; region r2 holds a/0."""
+    root = str(tmp_path_factory.mktemp("scoped"))
+    for region, parts in (("r1", [("a", 0), ("a", 1), ("b", 0), ("b", 1)]), ("r2", [("a", 0)])):
+        rows = [(t, p, o, b"k", b"v", 0) for t, p in parts for o in range(3)]
+        df = spark.createDataFrame(
+            rows, "topic string, partition_id int, msg_offset long, "
+            "msg_key binary, payload binary, ts_ns long",
+        ).withColumn("segment_seq", F.lit(0))
+        write_segments(df, root=root, region=region, level=0).collect()
+    return root
+
+
+@pytest.mark.parametrize("via", ["list_segments", "kafka_segments"])
+@pytest.mark.parametrize(
+    "filters, expected",
+    [
+        ({"region": "r2"}, {("r2", "a", 0)}),
+        ({"region": "r1", "topic": "b"}, {("r1", "b", 0), ("r1", "b", 1)}),
+        ({"topic": "a"}, {("r1", "a", 0), ("r1", "a", 1), ("r2", "a", 0)}),
+        ({"partition": 1}, {("r1", "a", 1), ("r1", "b", 1)}),
+        ({"region": "r1", "partition": 1}, {("r1", "a", 1), ("r1", "b", 1)}),
+        ({"topic": "a", "partition": 0}, {("r1", "a", 0), ("r2", "a", 0)}),
+    ],
+    ids=["region", "region+topic", "topic", "partition", "region+partition", "topic+partition"],
+)
+def test_scope_filters_apply_without_the_level_above(spark, scoped_root, via, filters, expected):
+    """Every given scope filter applies, also one given without the level
+    above it (the walk prefix covers only the leading run of filters)."""
+    if via == "list_segments":
+        kwargs = {("partition_id" if k == "partition" else k): v for k, v in filters.items()}
+        df = list_segments(spark, scoped_root, **kwargs)
+    else:
+        datasource.register(spark)
+        reader = spark.read.format("kafka_segments").option("root", scoped_root)
+        for k, v in filters.items():
+            reader = reader.option(k, str(v))
+        df = reader.load()
+    got = {tuple(r) for r in df.select("region", "topic", "partition_id").distinct().collect()}
+    assert got == expected

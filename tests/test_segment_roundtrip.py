@@ -40,6 +40,10 @@ def test_write_produces_expected_segments(spark, messages, written):
 
 
 def test_listing_matches_write_metadata(spark, seg_root, written):
+    import time
+
+    import pyarrow.parquet as pq
+
     listed = list_segments(spark, seg_root, read_footers=True).collect()
     assert len(listed) == len(written)
     by_path = {r["path"]: r for r in written}
@@ -48,6 +52,23 @@ def test_listing_matches_write_metadata(spark, seg_root, written):
         assert (seg["start_offset"], seg["end_offset"]) == (w["start_offset"], w["end_offset"])
         assert seg["message_count"] == w["message_count"]  # footer KV metadata
         assert seg["size_bytes"] > 0
+        # the reference's full SegmentMetadata key set (s3_parquet.go:379-397)
+        footer = {
+            k.decode(): v.decode()
+            for k, v in pq.ParquetFile(seg["path"]).metadata.metadata.items()
+            if k != b"ARROW:schema"
+        }
+        created = footer.pop("createdTimestamp")
+        assert footer == {
+            "region": REGION,
+            "topic": w["topic"],
+            "partition": str(w["partition_id"]),
+            "level": "0",
+            "startOffset": str(w["start_offset"]),
+            "endOffset": str(w["end_offset"]),
+            "messageCount": str(w["message_count"]),
+        }
+        assert abs(int(created) - time.time_ns()) < 3600 * 10**9
 
 
 def test_roundtrip_stream_identical(spark, messages, seg_root, written):
@@ -121,33 +142,6 @@ def test_heap_order_prefers_longer_on_tie(spark):
     assert [r["path"] for r in ordered] == ["b", "a", "c"]
 
 
-def test_native_writer_roundtrip(spark, messages, tmp_path):
-    """write_segments_native: same layout and stream contents as the
-    default writer, metadata from parquet stats instead of footer KV."""
-    from kafka_replicator_spark.operators.egress import write_segments_native
-
-    root = str(tmp_path)
-    tagged = assign_segments_by_count(messages, max_messages=100)
-    meta = write_segments_native(tagged, root=root, region=REGION, level=0).collect()
-    assert sum(r["message_count"] for r in meta) == messages.count()
-    for r in meta:
-        assert r["end_offset"] - r["start_offset"] + 1 == r["message_count"]
-    listed = list_segments(spark, root)
-    assert listed.count() == len(meta)
-    back = read_segment_files(spark, [r["path"] for r in meta])
-    assert back.count() == messages.count()
-    # order within each file preserved (O3)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("topic", "partition_id").orderBy("msg_offset")
-    gaps = (
-        back.withColumn("prev", F.lag("msg_offset").over(w))
-        .filter(F.col("prev").isNotNull() & (F.col("msg_offset") != F.col("prev") + 1))
-        .count()
-    )
-    assert gaps == 0
-
-
 def test_headers_survive_lifecycle(spark, messages, tmp_path):
     """K1 headers: messages carrying Kafka headers keep them byte-identical
     through egress → compact → replay (reference parquet struct
@@ -200,17 +194,3 @@ def test_message_size_includes_headers(spark):
     )
     got = df.select(message_size_col().alias("sz")).collect()[0]["sz"]
     assert got == 16 + 1 + 3 + (2 + 2) + (4 + 4)
-
-
-def test_native_writer_gap_check(spark, messages, tmp_path):
-    import pytest as _pytest
-
-    from kafka_replicator_spark.operators.egress import write_segments_native
-
-    gappy = messages.filter(
-        (F.col("msg_offset") < 50) | (F.col("msg_offset") >= 60)
-    ).withColumn("segment_seq", F.lit(0))
-    with _pytest.raises(ValueError, match="missing message range"):
-        write_segments_native(
-            gappy, root=str(tmp_path), region=REGION, level=0, require_dense=True
-        )
