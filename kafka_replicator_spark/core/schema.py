@@ -21,10 +21,11 @@ event-time semantics (watermarks, windows) are needed.
 from __future__ import annotations
 
 import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.column import Column
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 #: One Kafka message, plus its stream coordinates.
 #: reference: pkg/core/messages.proto:68-79
@@ -107,6 +108,29 @@ def conform_segment_data(data, cols: list[str] = SEGMENT_DATA_COLS):
         col = data.column(field.name)
         arrays.append(col if col.type == field.type else col.cast(field.type))
     return type(data).from_arrays(arrays, schema=schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-held metadata ``rows`` (tuples, dicts or Rows in ``schema``
+    order) as a DataFrame over a JVM ``LocalRelation``.
+
+    The rows travel as one Arrow table, so a job that reads the frame needs
+    no Python worker, a ``collect()`` of it runs no job, and a broadcast of
+    it builds on the driver — where ``createDataFrame(list)`` /
+    ``parallelize`` make every read a Python-worker job.  Values go through
+    ``schema.toInternal`` first, exactly as on that path, so a naive
+    datetime maps to the same instant in every process time zone.
+    """
+    arrow = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    if internal:
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(zip(*internal), arrow)],
+            schema=arrow,
+        )
+    else:
+        table = arrow.empty_table()
+    return spark.createDataFrame(table, schema=schema)
 
 
 #: Segment identity + listing info.

@@ -35,11 +35,13 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_replicator_spark.core.schema import (
     SEGMENT_DATA_COLS,
     WRITTEN_SEGMENT_SCHEMA,
     conform_segment_data,
+    local_frame,
 )
 
 #: reference defaults, pkg/compaction/config.go:29-39
@@ -50,6 +52,21 @@ DEFAULT_MAX_SEGMENT_BYTES = 4 << 30
 DEFAULT_MIN_SEGMENT_AGE = timedelta(hours=1)
 #: reference pkg/compaction/compactor.go:27-29
 DELETE_PARALLELISM = 16
+
+#: One merge task spec per output segment (``merge_segments``).
+MERGE_SPEC_SCHEMA = T.StructType(
+    [
+        T.StructField("topic", T.StringType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("out_level", T.IntegerType()),
+        T.StructField("chunk_lo", T.LongType()),
+        T.StructField("chunk_hi", T.LongType()),
+        T.StructField("starts", T.ArrayType(T.LongType())),
+        T.StructField("ends", T.ArrayType(T.LongType())),
+        T.StructField("levels", T.ArrayType(T.IntegerType())),
+        T.StructField("paths", T.ArrayType(T.StringType())),
+    ]
+)
 
 
 def plan_compaction(
@@ -166,12 +183,15 @@ def merge_segments(
     same read path, bounded writer-task memory.  Default None = reference-
     exact N→1.
 
-    Execution is shuffle-free: the plan expands to one task spec per output
-    segment; each task pyarrow-reads exactly its input files (row-group
-    pruned to its offset chunk), heap-order-dedups overlaps in Arrow, and
-    publishes via the shared two-phase commit.  Spark schedules the task
-    fan-out; no message bytes cross the network (compactor.go:219-311 as a
-    distributed task set).
+    Execution is shuffle-free: the plan expands on the driver to one task
+    spec per output segment, and the specs become a JVM ``LocalRelation``
+    (``core.schema.local_frame``), so scheduling the fan-out needs no
+    Python worker beyond the merge tasks themselves.  Each task
+    pyarrow-reads exactly its input files (row-group pruned to its offset
+    chunk), heap-order-dedups overlaps in Arrow, and publishes via the
+    shared two-phase commit; no message bytes cross the network
+    (compactor.go:219-311 as a distributed task set).  An empty plan
+    returns an empty LocalRelation.
 
     Raises ValueError on an offset gap (reference errors with
     ``missing message range``, compactor.go:219-221); the gapped partition
@@ -185,7 +205,7 @@ def merge_segments(
     else:
         meta = plan
     if not meta:
-        return spark.createDataFrame([], schema=WRITTEN_SEGMENT_SCHEMA)
+        return local_frame(spark, [], WRITTEN_SEGMENT_SCHEMA)
     out_levels = {}  # (topic, partition) -> max input level + 1
     floors = {}
     by_part: dict = {}
@@ -320,15 +340,7 @@ def merge_segments(
             require_dense=True,
         )
 
-    spec_schema = (
-        "topic string, partition_id int, out_level int, chunk_lo long, "
-        "chunk_hi long, starts array<long>, ends array<long>, "
-        "levels array<int>, paths array<string>"
-    )
-    spec_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([tuple(s.values()) for s in specs], 1),
-        schema=spec_schema,
-    )
+    spec_df = local_frame(spark, specs, MERGE_SPEC_SCHEMA)
     return (
         spec_df.repartition(len(specs), "topic", "partition_id", "chunk_lo")
         .groupBy("topic", "partition_id", "chunk_lo")
@@ -364,8 +376,9 @@ def compact(
 ) -> DataFrame:
     """End-to-end compaction run: list → plan → merge → delete inputs.
 
-    Returns the metadata of the newly written segments (materialized before
-    deletion so the pipeline is list-once).  Fully-superseded in-band
+    Returns the metadata of the newly written segments, materialized before
+    deletion (so the pipeline is list-once) and handed back as a
+    ``LocalRelation`` that collects without a job.  Fully-superseded in-band
     segments are deleted alongside the merge inputs once their partition's
     compaction succeeds (reference compactor.go:192-203 + 314-351).
     """
@@ -374,7 +387,7 @@ def compact(
     segments = list_segments(spark, root)
     all_rows = plan_compaction(
         segments, include_superseded=True, **plan_kwargs
-    ).collect()  # one tiny job
+    ).collect()
     plan_rows = [r for r in all_rows if not r["superseded"]]
     superseded_paths = sorted({r["path"] for r in all_rows if r["superseded"]})
     input_paths = sorted({r["path"] for r in plan_rows} | set(superseded_paths))
@@ -394,4 +407,4 @@ def compact(
         raise
     if delete_inputs and result:
         delete_segment_files(input_paths)
-    return spark.createDataFrame(result, schema=written.schema)
+    return local_frame(spark, result, WRITTEN_SEGMENT_SCHEMA)

@@ -3,8 +3,10 @@
 Listing mirrors the reference's prefix-scoped ``ListObjectsV2`` scan
 (pkg/stores/s3_segment_store.go:183-221): it is *metadata-scale* work —
 thousands of path strings, not data — so it runs on the driver (exactly as
-the reference's single LIST loop does) and becomes a small DataFrame that
-joins broadcast against everything else.  Reading is a plain
+the reference's single LIST loop does) and the rows become a JVM
+``LocalRelation`` (``core.schema.local_frame``): collecting, planning over
+or broadcasting the listing needs no Python worker, and a ``collect()`` of
+it runs no Spark job.  Reading is a plain
 ``spark.read.parquet`` over the selected files with segment identity
 recovered from ``input_file_name()`` — fully distributed, with Catalyst
 pushdown into the scan.
@@ -24,7 +26,11 @@ from kafka_replicator_spark.core.codec import (
     parse_segment_path,
     parse_segment_path_cols,
 )
-from kafka_replicator_spark.core.schema import SEGMENT_DATA_SCHEMA, SEGMENT_SCHEMA
+from kafka_replicator_spark.core.schema import (
+    SEGMENT_DATA_SCHEMA,
+    SEGMENT_SCHEMA,
+    local_frame,
+)
 
 
 def walk_segments(
@@ -101,15 +107,7 @@ def list_segments(
                 path,
             )
         )
-    # ONE partition: the listing is metadata-scale (path strings, not
-    # data), and the default 32-slice parallelize makes every downstream
-    # metadata job a 32-task job of empty partitions — measured ~35% of
-    # each tiny plan/collect's cost at bench scale.  Anything data-scale
-    # downstream (the merge fan-out, segment reads) repartitions by its
-    # own keys anyway.
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema=SEGMENT_SCHEMA
-    )
+    return local_frame(spark, rows, SEGMENT_SCHEMA)
 
 
 def heap_order(segments: DataFrame) -> DataFrame:

@@ -33,9 +33,10 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_replicator_spark.core.codec import parse_segment_path_cols
-from kafka_replicator_spark.core.schema import SEGMENT_DATA_SCHEMA
+from kafka_replicator_spark.core.schema import SEGMENT_DATA_SCHEMA, local_frame
 
 
 def _local_path(p: str) -> str:
@@ -45,6 +46,36 @@ def _local_path(p: str) -> str:
     if p.startswith("file:"):
         return unquote(urlparse(p).path)
     return p
+
+
+#: Driver-held per-partition offsets joined against a batch: the delivery
+#: checkpoints (F1/T9 trim) and the delivery frontiers.
+CHECKPOINT_TRIM_SCHEMA = T.StructType(
+    [
+        T.StructField("topic", T.StringType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("cp_offset", T.LongType()),
+    ]
+)
+FRONTIER_SCHEMA = T.StructType(
+    [
+        T.StructField("topic", T.StringType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("frontier", T.LongType()),
+    ]
+)
+
+
+def _partition_frame(
+    spark: SparkSession, offsets: dict[str, int], schema: T.StructType
+) -> DataFrame:
+    """``{"topic/partition": offset}`` as a ``schema`` LocalRelation for a
+    broadcast join against a batch."""
+    rows = []
+    for key, offset in offsets.items():
+        topic, pid = key.rsplit("/", 1)
+        rows.append((topic, int(pid), offset))
+    return local_frame(spark, rows, schema)
 
 
 def _with_identity(files_df: DataFrame) -> DataFrame:
@@ -226,13 +257,7 @@ def run_ingress_stream(
         # (topic, partition, offset), so the surviving KEY set is the same
         # either way and the kept instance is arbitrary in both orders.
         if state.checkpoints:
-            cps = spark.createDataFrame(
-                [
-                    (k.rsplit("/", 1)[0], int(k.rsplit("/", 1)[1]), v)
-                    for k, v in state.checkpoints.items()
-                ],
-                schema="topic string, partition_id int, cp_offset long",
-            )
+            cps = _partition_frame(spark, state.checkpoints, CHECKPOINT_TRIM_SCHEMA)
             df = (
                 df.join(F.broadcast(cps), ["topic", "partition_id"], "left")
                 .filter(F.col("cp_offset").isNull() | (F.col("msg_offset") > F.col("cp_offset")))
@@ -251,168 +276,165 @@ def run_ingress_stream(
             .dropDuplicates(["topic", "partition_id", "msg_offset"])
             .cache()
         )
-
-        # per-partition file ranges (metadata-scale): the continuity walk
-        # runs over segment extents, not rows, so an *internal* gap inside a
-        # batch holds back exactly the files above the gap (O1 heap order,
-        # reference worker.go:110-154)
-        # per-file row count + min event ts ride the same aggregate: the
-        # §2.11 meters can then be derived driver-side (below) instead of a
-        # separate per-batch collect job over the delivered frame
-        ranges = (
-            df.groupBy("topic", "partition_id", "src_path")
-            .agg(
-                F.min("msg_offset").alias("lo"),
-                F.max("msg_offset").alias("hi"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("ts_ns").alias("min_ts"),
-            )
-            .collect()
-        )
-        by_part: dict[str, list] = {}
-        for r in ranges:
-            by_part.setdefault(f"{r['topic']}/{r['partition_id']}", []).append(r)
-
-        state.batches_run += 1
-        now_s = clock()
-        frontiers: dict[str, int] = {}
-        pending: dict[str, list[str]] = {}
-        for key, rs in by_part.items():
-            # T5 first-segment delay gate (batch cadence AND/OR wall clock)
-            if key not in state.first_seen_batch:
-                state.first_seen_batch[key] = state.batches_run
-            if key not in state.first_seen_ts:
-                state.first_seen_ts[key] = now_s
-            gated = (
-                state.batches_run - state.first_seen_batch[key]
-                < first_segment_delay_batches
-            ) or (now_s - state.first_seen_ts[key] < delay_s)
-            if gated:
-                pending[key] = [_local_path(r["src_path"]) for r in rs]
-                continue
-            rs.sort(key=lambda r: (r["lo"], -r["hi"]))
-            next_needed = state.checkpoints.get(key, -1) + 1
-            frontier = next_needed - 1
-            held_paths: list[str] = []
-            lost_skip_used = False
-            bumped = False  # one late-retry tick per partition per batch
-            for r in rs:
-                if r["lo"] <= frontier + 1:
-                    frontier = max(frontier, r["hi"])
-                    continue
-                # gap before this file: late → hold, or lost → skip once
-                if not bumped:
-                    state.late_counts[key] = state.late_counts.get(key, 0) + 1
-                    state.gap_since_ts.setdefault(key, now_s)
-                    bumped = True
-                escalate = (
-                    now_s - state.gap_since_ts.get(key, now_s) > lost_timeout_s
-                    if lost_timeout_s is not None
-                    else state.late_counts[key] > max_gap_retries
+        try:
+            # per-partition file ranges (metadata-scale): the continuity walk
+            # runs over segment extents, not rows, so an *internal* gap inside a
+            # batch holds back exactly the files above the gap (O1 heap order,
+            # reference worker.go:110-154)
+            # per-file row count + min event ts ride the same aggregate: the
+            # §2.11 meters can then be derived driver-side (below) instead of a
+            # separate per-batch collect job over the delivered frame
+            ranges = (
+                df.groupBy("topic", "partition_id", "src_path")
+                .agg(
+                    F.min("msg_offset").alias("lo"),
+                    F.max("msg_offset").alias("hi"),
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.min("ts_ns").alias("min_ts"),
                 )
-                if escalate and not lost_skip_used:
-                    state.messages_lost += r["lo"] - (frontier + 1)  # T7
+                .collect()
+            )
+            by_part: dict[str, list] = {}
+            for r in ranges:
+                by_part.setdefault(f"{r['topic']}/{r['partition_id']}", []).append(r)
+
+            state.batches_run += 1
+            now_s = clock()
+            frontiers: dict[str, int] = {}
+            pending: dict[str, list[str]] = {}
+            for key, rs in by_part.items():
+                # T5 first-segment delay gate (batch cadence AND/OR wall clock)
+                if key not in state.first_seen_batch:
+                    state.first_seen_batch[key] = state.batches_run
+                if key not in state.first_seen_ts:
+                    state.first_seen_ts[key] = now_s
+                gated = (
+                    state.batches_run - state.first_seen_batch[key]
+                    < first_segment_delay_batches
+                ) or (now_s - state.first_seen_ts[key] < delay_s)
+                if gated:
+                    pending[key] = [_local_path(r["src_path"]) for r in rs]
+                    continue
+                rs.sort(key=lambda r: (r["lo"], -r["hi"]))
+                next_needed = state.checkpoints.get(key, -1) + 1
+                frontier = next_needed - 1
+                held_paths: list[str] = []
+                lost_skip_used = False
+                bumped = False  # one late-retry tick per partition per batch
+                for r in rs:
+                    if r["lo"] <= frontier + 1:
+                        frontier = max(frontier, r["hi"])
+                        continue
+                    # gap before this file: late → hold, or lost → skip once
+                    if not bumped:
+                        state.late_counts[key] = state.late_counts.get(key, 0) + 1
+                        state.gap_since_ts.setdefault(key, now_s)
+                        bumped = True
+                    escalate = (
+                        now_s - state.gap_since_ts.get(key, now_s) > lost_timeout_s
+                        if lost_timeout_s is not None
+                        else state.late_counts[key] > max_gap_retries
+                    )
+                    if escalate and not lost_skip_used:
+                        state.messages_lost += r["lo"] - (frontier + 1)  # T7
+                        state.late_counts.pop(key, None)
+                        state.gap_since_ts.pop(key, None)
+                        lost_skip_used = True
+                        frontier = r["hi"]
+                        continue
+                    held_paths.append(_local_path(r["src_path"]))  # T6: retry next batch
+                if held_paths:
+                    pending[key] = held_paths
+                else:
                     state.late_counts.pop(key, None)
                     state.gap_since_ts.pop(key, None)
-                    lost_skip_used = True
-                    frontier = r["hi"]
-                    continue
-                held_paths.append(_local_path(r["src_path"]))  # T6: retry next batch
-            if held_paths:
-                pending[key] = held_paths
-            else:
-                state.late_counts.pop(key, None)
-                state.gap_since_ts.pop(key, None)
-            if frontier >= next_needed:
-                frontiers[key] = frontier
-                state.checkpoints[key] = int(frontier)
+                if frontier >= next_needed:
+                    frontiers[key] = frontier
+                    state.checkpoints[key] = int(frontier)
 
-        state.pending_paths = pending
-        if frontiers:
-            fr = spark.createDataFrame(
-                [
-                    (k.rsplit("/", 1)[0], int(k.rsplit("/", 1)[1]), v)
-                    for k, v in frontiers.items()
-                ],
-                schema="topic string, partition_id int, frontier long",
-            )
-            out = df.join(F.broadcast(fr), ["topic", "partition_id"]).filter(
-                F.col("msg_offset") <= F.col("frontier")
-            )
-            # O3: per-partition offset order into the sink (K2 analog) —
-            # the batch frame is already hash-partitioned by
-            # (topic, partition_id) above, and the broadcast join + filter
-            # preserve that layout, so only the in-partition sort remains
-            try:
-                (
-                    out.sortWithinPartitions("msg_offset")
-                    .withColumn("epoch_id", F.lit(int(epoch_id)))
-                    .drop("frontier", "src_path")
-                    .write.mode("append")
-                    .partitionBy("topic", "partition_id")
-                    .parquet(sink_dir)
+            state.pending_paths = pending
+            if frontiers:
+                fr = _partition_frame(spark, frontiers, FRONTIER_SCHEMA)
+                out = df.join(F.broadcast(fr), ["topic", "partition_id"]).filter(
+                    F.col("msg_offset") <= F.col("frontier")
                 )
-            except Exception:
-                # error meters + breaker marks, persisted WITHOUT the advanced
-                # checkpoints (a failed delivery must replay, not skip) — the
-                # reference marks its Kafka breaker per produce error
-                # (pkg/core/breaker.go) and leaves the checkpoint untouched.
-                err_state = IngressState.load(state_path)
-                for key in frontiers:
-                    err_state.errors[key] = err_state.errors.get(key, 0) + 1
-                    if breaker is not None:
-                        breaker.mark()
-                err_state.save()
-                df.unpersist()
-                raise
-            # §2.11 meters: produced count + replication lag per partition
-            # (A3 min-ts over the produced batch, reference worker.go:438-448).
-            # Derived driver-side from the per-file aggregates already in
-            # ``ranges`` whenever that is provably exact: with pairwise
-            # disjoint per-partition file extents and no file straddling the
-            # frontier, every row of a file with hi <= frontier — and no
-            # other row — satisfies the delivery filter, so the per-file sums
-            # equal the delivered-frame aggregate.  Extents here are
-            # post-dedup/post-trim DATA extents (min/max over actual rows),
-            # so the equivalence needs no trust in filenames.  Any overlap or
-            # straddle falls back to the aggregate-over-``out`` collect.
-            import time as _time
-
-            now_ns = _time.time_ns()
-            fast_meters: dict[str, tuple[int, int | None]] = {}
-            for key in frontiers:
-                rs = sorted(by_part.get(key, []), key=lambda r: r["lo"])
-                frontier = frontiers[key]
-                if any(b["lo"] <= a["hi"] for a, b in zip(rs, rs[1:])) or any(
-                    r["lo"] <= frontier < r["hi"] for r in rs
-                ):
-                    fast_meters = {}
-                    break
-                delivered = [r for r in rs if r["hi"] <= frontier]
-                n = sum(int(r["n_rows"]) for r in delivered)
-                ts = [int(r["min_ts"]) for r in delivered if r["min_ts"] is not None]
-                fast_meters[key] = (n, min(ts) if ts else None)
-            if fast_meters:
-                for key, (n, min_ts) in fast_meters.items():
-                    if n == 0:
-                        continue
-                    state.messages_produced[key] = (
-                        state.messages_produced.get(key, 0) + n
+                # O3: per-partition offset order into the sink (K2 analog) —
+                # the batch frame is already hash-partitioned by
+                # (topic, partition_id) above, and the broadcast join + filter
+                # preserve that layout, so only the in-partition sort remains
+                try:
+                    (
+                        out.sortWithinPartitions("msg_offset")
+                        .withColumn("epoch_id", F.lit(int(epoch_id)))
+                        .drop("frontier", "src_path")
+                        .write.mode("append")
+                        .partitionBy("topic", "partition_id")
+                        .parquet(sink_dir)
                     )
-                    if min_ts is not None:
-                        state.last_lag_ns[key] = now_ns - min_ts
-            else:
-                for m in (
-                    out.groupBy("topic", "partition_id")
-                    .agg(F.count(F.lit(1)).alias("n"), F.min("ts_ns").alias("min_ts"))
-                    .collect()
-                ):
-                    key = f"{m['topic']}/{m['partition_id']}"
-                    state.messages_produced[key] = state.messages_produced.get(key, 0) + m["n"]
-                    if m["min_ts"] is not None:
-                        state.last_lag_ns[key] = now_ns - int(m["min_ts"])
-        df.unpersist()
-        state.save()  # T8 checkpoint-per-batch
+                except Exception:
+                    # error meters + breaker marks, persisted WITHOUT the advanced
+                    # checkpoints (a failed delivery must replay, not skip) — the
+                    # reference marks its Kafka breaker per produce error
+                    # (pkg/core/breaker.go) and leaves the checkpoint untouched.
+                    err_state = IngressState.load(state_path)
+                    for key in frontiers:
+                        err_state.errors[key] = err_state.errors.get(key, 0) + 1
+                        if breaker is not None:
+                            breaker.mark()
+                    err_state.save()
+                    raise
+                # §2.11 meters: produced count + replication lag per partition
+                # (A3 min-ts over the produced batch, reference worker.go:438-448).
+                # Derived driver-side from the per-file aggregates already in
+                # ``ranges`` whenever that is provably exact: with pairwise
+                # disjoint per-partition file extents and no file straddling the
+                # frontier, every row of a file with hi <= frontier — and no
+                # other row — satisfies the delivery filter, so the per-file sums
+                # equal the delivered-frame aggregate.  Extents here are
+                # post-dedup/post-trim DATA extents (min/max over actual rows),
+                # so the equivalence needs no trust in filenames.  Any overlap or
+                # straddle falls back to the aggregate-over-``out`` collect.
+                import time as _time
+
+                now_ns = _time.time_ns()
+                fast_meters: dict[str, tuple[int, int | None]] = {}
+                for key in frontiers:
+                    rs = sorted(by_part.get(key, []), key=lambda r: r["lo"])
+                    frontier = frontiers[key]
+                    if any(b["lo"] <= a["hi"] for a, b in zip(rs, rs[1:])) or any(
+                        r["lo"] <= frontier < r["hi"] for r in rs
+                    ):
+                        fast_meters = {}
+                        break
+                    delivered = [r for r in rs if r["hi"] <= frontier]
+                    n = sum(int(r["n_rows"]) for r in delivered)
+                    ts = [int(r["min_ts"]) for r in delivered if r["min_ts"] is not None]
+                    fast_meters[key] = (n, min(ts) if ts else None)
+                if fast_meters:
+                    for key, (n, min_ts) in fast_meters.items():
+                        if n == 0:
+                            continue
+                        state.messages_produced[key] = (
+                            state.messages_produced.get(key, 0) + n
+                        )
+                        if min_ts is not None:
+                            state.last_lag_ns[key] = now_ns - min_ts
+                else:
+                    for m in (
+                        out.groupBy("topic", "partition_id")
+                        .agg(F.count(F.lit(1)).alias("n"), F.min("ts_ns").alias("min_ts"))
+                        .collect()
+                    ):
+                        key = f"{m['topic']}/{m['partition_id']}"
+                        state.messages_produced[key] = state.messages_produced.get(key, 0) + m["n"]
+                        if m["min_ts"] is not None:
+                            state.last_lag_ns[key] = now_ns - int(m["min_ts"])
+            state.save()  # T8 checkpoint-per-batch
+        finally:
+            # release the batch cache on every path, including a failure
+            # before the sink write (an unreadable segment file first
+            # surfaces in the ranges collect)
+            df.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(deliver)

@@ -1,0 +1,155 @@
+"""``core.schema.local_frame`` — driver-held metadata rows as a JVM
+LocalRelation.
+
+Pins the Arrow construction against the Python-RDD construction it
+replaced (``spark.createDataFrame(rows, schema)``) for every schema it
+serves, in a UTC and a non-UTC process time zone, and pins the structural
+gain: collecting a listing or a compaction result runs no Spark job.
+"""
+
+import os
+import time
+import uuid
+from contextlib import contextmanager
+from datetime import datetime, timedelta
+
+import pytest
+from pyspark.sql import functions as F
+
+from kafka_replicator_spark.core.schema import (
+    SEGMENT_SCHEMA,
+    WRITTEN_SEGMENT_SCHEMA,
+    local_frame,
+)
+from kafka_replicator_spark.operators.compaction import (
+    MERGE_SPEC_SCHEMA,
+    compact,
+    plan_compaction,
+)
+from kafka_replicator_spark.sources.segments import list_segments
+from kafka_replicator_spark.streaming.ingress_stream import (
+    CHECKPOINT_TRIM_SCHEMA,
+    FRONTIER_SCHEMA,
+)
+from tests.test_compaction import REGION, _write_range
+
+
+@pytest.fixture(params=["UTC", "America/New_York"])
+def process_tz(request, monkeypatch):
+    """Run the test with the Python process in the given time zone (naive
+    datetimes convert through ``time.mktime``, i.e. the process zone)."""
+    monkeypatch.setenv("TZ", request.param)
+    time.tzset()
+    yield request.param
+    monkeypatch.undo()
+    time.tzset()
+
+
+def _listing_rows():
+    """A SEGMENT_SCHEMA listing: three partitions, a level-1 segment that
+    sets a resume floor on partition 0, null message counts, and naive
+    modification times on both sides of a summer/winter offset change."""
+    rows = []
+    for pid in range(3):
+        for i in range(6):
+            month = 1 if i % 2 else 7
+            rows.append(
+                (
+                    "r", "t", pid, 0, i * 10, i * 10 + 9,
+                    None if i % 3 == 0 else 10,
+                    100 + i,
+                    datetime(2026, month, 1 + i, 12, 30, i, 123),
+                    f"/seg/{pid}/0/{i}",
+                )
+            )
+    rows.append(("r", "t", 0, 1, 0, 19, 20, 400, datetime(2026, 3, 8, 2, 30), "/seg/0/1/0"))
+    return rows
+
+
+def _spec_rows():
+    """Merge task specs, as ``merge_segments`` builds them."""
+    return [
+        {
+            "topic": "t", "partition_id": 0, "out_level": 1, "chunk_lo": 0,
+            "chunk_hi": 99, "starts": [0, 50], "ends": [49, 99],
+            "levels": [0, 0], "paths": ["/seg/a", "/seg/b"],
+        },
+        {
+            "topic": "u", "partition_id": 3, "out_level": 2, "chunk_lo": 100,
+            "chunk_hi": 100, "starts": [100], "ends": [100],
+            "levels": [1], "paths": ["/seg/c"],
+        },
+    ]
+
+
+CASES = {
+    "segment": (SEGMENT_SCHEMA, _listing_rows()),
+    "written": (
+        WRITTEN_SEGMENT_SCHEMA,
+        [("r", "t", 0, 1, 0, 99, 100, 2048, "/seg/x"), ("r", "t", 1, 2, 5, 5, 1, 90, "/seg/y")],
+    ),
+    "merge_spec": (MERGE_SPEC_SCHEMA, _spec_rows()),
+    "checkpoint_trim": (CHECKPOINT_TRIM_SCHEMA, [("t", 0, 41), ("u/v", 7, 0)]),
+    "frontier": (FRONTIER_SCHEMA, [("t", 0, 99)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "empty"])
+def test_local_frame_matches_python_rows(spark, process_tz, case, empty):
+    schema, rows = CASES[case]
+    rows = [] if empty else rows
+    # the replaced construction: tuples for the spec dicts, as it passed them
+    old_rows = [tuple(r.values()) if isinstance(r, dict) else r for r in rows]
+    old = spark.createDataFrame(old_rows, schema=schema)
+    new = local_frame(spark, rows, schema)
+    assert new.select("*").schema == old.select("*").schema
+    assert new.collect() == old.collect()
+    if "modified_ts" in schema.names:
+        # the same instant, not just the same wall time read back
+        micros = F.unix_micros("modified_ts")
+        assert new.select(micros).collect() == old.select(micros).collect()
+
+
+def test_age_gate_selects_the_same_rows(spark, process_tz):
+    rows = _listing_rows()
+    kwargs = dict(
+        min_count=1, min_bytes=1, include_superseded=True,
+        min_age=timedelta(days=30), now=datetime(2026, 7, 2, 0, 0),
+    )
+    old = plan_compaction(spark.createDataFrame(rows, SEGMENT_SCHEMA), **kwargs).collect()
+    new = plan_compaction(local_frame(spark, rows, SEGMENT_SCHEMA), **kwargs).collect()
+    assert sorted(new) == sorted(old)
+    # the gate actually splits the listing: some rows are too young
+    assert 0 < len(new) < len(rows)
+
+
+@contextmanager
+def _jobs_launched(spark):
+    """Count the Spark jobs launched inside the block (its own job group)."""
+    sc = spark.sparkContext
+    group = f"local-frame-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    launched = []
+    try:
+        yield launched
+    finally:
+        launched.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_listing_and_compaction_result_collect_without_jobs(spark, tmp_path):
+    root = str(tmp_path)
+    for start in (0, 10, 20):
+        _write_range(spark, root, 0, start, start + 9)
+    with _jobs_launched(spark) as n:
+        listed = list_segments(spark, root).collect()
+    assert len(listed) == 3 and n == [0]
+
+    out = compact(spark, root, region=REGION, min_count=2, min_bytes=1)
+    with _jobs_launched(spark) as n:
+        written = out.collect()
+    assert n == [0]
+    assert [(r["start_offset"], r["end_offset"], r["level"]) for r in written] == [(0, 29, 1)]
+    assert os.path.exists(written[0]["path"])

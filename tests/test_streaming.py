@@ -390,3 +390,108 @@ def test_lost_segment_timeout_wall_clock(spark, messages, staged, tmp_path):
     assert state.messages_lost == expected_lost
     delivered = spark.read.parquet(sink).filter(F.col("partition_id") == 0)
     assert delivered.agg(F.min("msg_offset")).collect()[0][0] == first_p0["end_offset"] + 1
+
+
+def _write_segment(seg_root, partition_id, start, end, offsets):
+    """Hand-write one level-0 segment file named ``start-end`` that holds
+    exactly ``offsets`` (at-rest columns, no footer)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_replicator_spark.core.codec import SegmentId, format_segment_path
+    from kafka_replicator_spark.core.schema import SEGMENT_DATA_ARROW
+
+    path = format_segment_path(
+        seg_root, SegmentId(REGION, "events", partition_id, 0, start, end)
+    )
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    table = pa.table(
+        {
+            "msg_offset": offsets,
+            "msg_key": [f"k{o}".encode() for o in offsets],
+            "payload": [f"v{partition_id}-{o}".encode() for o in offsets],
+            "ts_ns": [1_700_000_000_000_000_000 + o for o in offsets],
+            "headers": [None] * len(offsets),
+        },
+        schema=SEGMENT_DATA_ARROW,
+    )
+    pq.write_table(table, path)
+    return path
+
+
+def test_ingress_failure_before_sink_write_releases_batch_cache(spark, tmp_path):
+    """A batch that fails after its dedup frame is cached — here a truncated
+    segment file, which first surfaces in the ranges collect — must not
+    leave that frame pinned in the session cache; a rerun after the file is
+    repaired delivers every offset exactly once."""
+    seg_root = str(tmp_path / "segs")
+    _write_segment(seg_root, 0, 0, 49, list(range(50)))
+    victim = _write_segment(seg_root, 0, 50, 99, list(range(50, 100)))
+    _write_segment(seg_root, 1, 0, 29, list(range(30)))
+    with open(victim, "rb") as f:
+        valid = f.read()
+    with open(victim, "wb") as f:
+        f.write(valid[: len(valid) // 2])
+
+    sink = str(tmp_path / "sink")
+    cp, state_path = str(tmp_path / "cp"), str(tmp_path / "state.json")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.numCachedEntries()
+    with pytest.raises(Exception):
+        run_ingress_stream(spark, seg_root, sink, cp, state_path)
+    assert cache.numCachedEntries() == cached_before
+    assert IngressState.load(state_path).checkpoints == {}
+
+    with open(victim, "wb") as f:
+        f.write(valid)
+    run_ingress_stream(spark, seg_root, sink, cp, state_path)
+    assert cache.numCachedEntries() == cached_before
+    got = sorted(
+        (r["partition_id"], r["msg_offset"])
+        for r in spark.read.parquet(sink).select("partition_id", "msg_offset").collect()
+    )
+    assert got == [(0, o) for o in range(100)] + [(1, o) for o in range(30)]
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        # disjoint extents: the meters are derived driver-side from the
+        # per-file aggregates
+        {(0, 0, 49): range(50), (0, 50, 99): range(50, 100), (1, 0, 29): range(30)},
+        # no shared offsets, but the extents 0-99 and 50-149 overlap: the
+        # meters fall back to the aggregate over the delivered frame
+        {
+            (0, 0, 99): [*range(50), *range(60, 100)],
+            (0, 50, 149): [*range(50, 60), *range(100, 150)],
+            (1, 0, 29): range(30),
+        },
+    ],
+    ids=["driver_derived", "aggregate_fallback"],
+)
+def test_ingress_meters_conserve_delivered_rows(spark, tmp_path, layout):
+    """``messages_produced`` equals the rows the sink received per
+    partition, and every delivered partition has a lag reading, on both
+    branches of the meter derivation."""
+    seg_root = str(tmp_path / "segs")
+    for (pid, start, end), offsets in layout.items():
+        _write_segment(seg_root, pid, start, end, list(offsets))
+    sink, state_path = str(tmp_path / "sink"), str(tmp_path / "state.json")
+    run_ingress_stream(spark, seg_root, sink, str(tmp_path / "cp"), state_path)
+
+    delivered = spark.read.parquet(sink)
+    sink_counts = {
+        f"events/{r['partition_id']}": r["count"]
+        for r in delivered.groupBy("partition_id").count().collect()
+    }
+    expected = {}
+    for (pid, _s, _e), offsets in layout.items():
+        expected[f"events/{pid}"] = expected.get(f"events/{pid}", 0) + len(offsets)
+    assert sink_counts == expected
+    assert delivered.select("partition_id", "msg_offset").distinct().count() == sum(
+        expected.values()
+    )
+    state = IngressState.load(state_path)
+    assert state.messages_produced == sink_counts
+    assert set(state.last_lag_ns) == set(sink_counts)
+    assert all(v > 0 for v in state.last_lag_ns.values())
