@@ -22,9 +22,11 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.column import Column
 
 from kafka_replicator_spark.cacheutil import track_cached
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions.litfast import (
     lit_doubles,
     lit_doubles2d,
@@ -433,6 +435,41 @@ FROM ranked WHERE rank <= {k}
 
 # ------------------------------------------------------- k-means training
 
+#: Largest k·dim the model family embeds as plan literals; above it the
+#: distributed window/join paths run, with bit-identical output.
+_INLINE_MAX_LITERALS = 65536
+
+#: The broadcast-ready model: one row per cluster, components as doubles.
+KMEANS_MODEL_SCHEMA = T.StructType(
+    [
+        T.StructField("cluster", T.LongType()),
+        T.StructField("cd", T.ArrayType(T.DoubleType())),
+    ]
+)
+
+#: :func:`kmeans_train`'s long format: one row per (cluster, dim).
+KMEANS_TRAIN_SCHEMA = T.StructType(
+    [
+        T.StructField(c, T.LongType())
+        for c in ("cluster", "dim", "centroid_micro", "n_members")
+    ]
+)
+
+
+def _require_iters(iters: int) -> None:
+    """The model IS the last Lloyd round's sums: zero rounds have none."""
+    if iters < 1:
+        raise ValueError(f"k-means needs iters >= 1; got {iters}")
+
+
+def _model_rows(model: DataFrame) -> list[tuple[int, list[float]]]:
+    """A (cluster, cd) model frame's rows, sorted by cluster.  Collecting
+    a :func:`local_frame` model runs no job."""
+    return sorted(
+        (int(r["cluster"]), [float(x) for x in r["cd"]])
+        for r in model.select("cluster", "cd").collect()
+    )
+
 def _micro_sum_rows(frame: DataFrame, keys: list[str]) -> list[tuple]:
     """Collect per-``keys`` integer micro-unit component sums of the ``e``
     column as ``keys + (dim, s_micro, n_members)`` tuples — the one
@@ -490,6 +527,7 @@ def _kmeans_inline_final_sums(
     an iteration-ladder consumer trains ONCE instead of once per rung;
     each prefix's sums are exactly the sums its own shorter run returns.
     """
+    _require_iters(iters)
     emb = track_cached(  # scanned once per iteration; tracked so sweep/
         # bench harnesses can release it between queries (this loop
         # materializes it EAGERLY at construction via the init collect)
@@ -600,6 +638,7 @@ def _kmeans_inline_final_sums_fused(
     callers fall back to the per-arm path, which reproduces the empty
     output).
     """
+    _require_iters(iters)
     base = track_cached(  # ONE cached corpus scan shared by every arm
         _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
     )
@@ -681,7 +720,6 @@ def kmeans_train(
     k: int = 8,
     iters: int = 2,
     dim: int = 64,
-    inline: bool | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding corpus in pure DataFrame ops —
     the trainer that turns ``ivf_assign``'s stride-picked stand-in centroids
@@ -708,16 +746,14 @@ def kmeans_train(
     the integer micro-unit centroid component and the cluster's member
     count — integer-only output, no float compare anywhere.
 
-    ``inline`` (default: auto — on when k·dim ≤ 65536 literals) is the
-    VERDICT r12 #4 restructuring of the training constant: each
+    While k·dim ≤ ``_INLINE_MAX_LITERALS`` (VERDICT r12 #4) each
     iteration's centroids are K rows of metadata, so they are COLLECTED
-    (init once + one k·dim-row collect per non-final iteration) and the
-    per-vector argmin becomes one whole-stage-codegen map expression —
-    the N·K row_number window (a full shuffle+sort of N·K rows carrying
-    the 64-double vectors, per iteration) disappears entirely; the only
-    remaining per-iteration shuffle is the map-side-combined
-    groupBy(cluster, dim) component-sum agg.  Bit-identity with the
-    window path: cd = cm/1e6 is the same IEEE divide driver-side, the
+    (init once + one k·dim-row collect per iteration), the per-vector
+    argmin becomes one whole-stage-codegen map expression, and the result
+    is a :func:`local_frame` — the N·K row_number window of
+    :func:`_kmeans_train_window` (a full shuffle+sort of N·K rows carrying
+    the 64-double vectors, per iteration) disappears.  Bit-identity with
+    the window path: cd = cm/1e6 is the same IEEE divide driver-side, the
     distance is the identical ``ee − 2·e·c + c·c`` fold chain
     (:func:`_py_dot` for c·c over the identical doubles), ``array_min``
     over (d, c) structs replays the (dist asc, cluster asc) tie-break,
@@ -725,35 +761,26 @@ def kmeans_train(
     long→double division on both sides.  The SQL oracle is unchanged.
     Pinned by the inline-vs-window bit-identity test.
     """
-    if inline is None:
-        inline = k * dim <= 65536
-    if inline:
+    if k * dim <= _INLINE_MAX_LITERALS:
         rows = _kmeans_inline_final_sums(embeddings, k, iters)
         if rows is not None:
-            # the final sums are k·dim rows of METADATA, already collected
-            # by the driver-driven loop — return them as a LOCAL relation
-            # so every downstream consumer (model fold, save, the inline
-            # assignment's collect, broadcast joins) pays ZERO Spark jobs
-            # instead of re-running the final training job per
-            # materialization.  centroid_micro is the same rounding mean,
-            # driver-side: float(s)/float(n) mirrors the column's
-            # long→double division exactly (both operands converted first).
-            data = [
-                (c, d, math.floor(float(s) / float(n) + 0.5), n)
-                for c, d, s, n in rows
-            ]
-            sc = embeddings.sparkSession.sparkContext
-            df = embeddings.sparkSession.createDataFrame(
-                sc.parallelize(data, 1),
-                "cluster long, dim long, centroid_micro long, n_members long",
+            # centroid_micro is the same rounding mean, driver-side:
+            # float(s)/float(n) mirrors the column's long→double division
+            # exactly (both operands converted first)
+            return local_frame(
+                embeddings.sparkSession,
+                [
+                    (c, d, math.floor(float(s) / float(n) + 0.5), n)
+                    for c, d, s, n in rows
+                ],
+                KMEANS_TRAIN_SCHEMA,
             )
-            # advisory driver-known rows (the _krs_model_rows pattern):
-            # consumers that only need the trained components can read
-            # them without a collect job; any transform drops the
-            # attribute and they fall back to collecting the same rows
-            df._krs_train_rows = data
-            return df
-        inline = False  # empty corpus: empty literals have no type
+    return _kmeans_train_window(embeddings, k, iters)
+
+
+def _kmeans_train_window(embeddings: DataFrame, k: int, iters: int) -> DataFrame:
+    """:func:`kmeans_train` above the literal limit or on an empty corpus."""
+    _require_iters(iters)
     w_init = Window.orderBy("vec_id")
     emb = track_cached(  # scanned once per iteration
         _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
@@ -768,7 +795,6 @@ def kmeans_train(
             ).alias("cm"),
         )
     )
-    sums = None
     for _ in range(iters):
         cd = F.transform(F.col("cm"), lambda m: m / F.lit(1e6))
         scored = emb.join(F.broadcast(cents)).select(
@@ -912,24 +938,6 @@ def _model_rows_from_sums(
     )
 
 
-def _local_model_frame(
-    spark, model_rows: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """The k-row (cluster, cd) model as a LOCAL relation (1-slice
-    parallelize — the metadata-frame rule), with the driver-known rows
-    stamped on the DataFrame object (``_krs_model_rows``) so inline
-    consumers can fold the model without a collect job.  The attribute is
-    advisory: any transformation returns a fresh DataFrame without it and
-    consumers fall back to collecting — same rows either way (the frame
-    IS built from these rows)."""
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(model_rows, 1),
-        "cluster long, cd array<double>",
-    )
-    df._krs_model_rows = model_rows
-    return df
-
-
 def kmeans_model(
     embeddings: DataFrame, n_clusters: int = 8, iters: int = 2, dim: int = 64
 ) -> DataFrame:
@@ -938,18 +946,21 @@ def kmeans_model(
     components divided once — THE one Spark-side builder of the model
     frame, shared by :func:`ivf_assign_trained` and the inertia audits.
 
-    Inline regime (k·dim ≤ 65536, the same gate as :func:`kmeans_train`):
-    the model is folded driver-side from the collected final sums and
-    returned as a LOCAL k-row relation — consumers' collects and
-    broadcasts pay no recompute and need no cache."""
-    if n_clusters * dim <= 65536:
+    While k·dim ≤ ``_INLINE_MAX_LITERALS`` (the same gate as
+    :func:`kmeans_train`) the model is folded driver-side from the
+    collected final sums and returned as a k-row :func:`local_frame` —
+    consumers' collects run no job and their broadcasts build on the
+    driver."""
+    if n_clusters * dim <= _INLINE_MAX_LITERALS:
         rows = _kmeans_inline_final_sums(embeddings, n_clusters, iters)
         if rows is not None:
-            return _local_model_frame(
-                embeddings.sparkSession, _model_rows_from_sums(rows)
+            return local_frame(
+                embeddings.sparkSession,
+                _model_rows_from_sums(rows),
+                KMEANS_MODEL_SCHEMA,
             )
     return kmeans_model_from_train(
-        kmeans_train(embeddings, k=n_clusters, iters=iters, dim=dim, inline=False)
+        _kmeans_train_window(embeddings, n_clusters, iters)
     )
 
 
@@ -967,7 +978,7 @@ def kmeans_models_fused(
     half-corpus model and a full-corpus model back to back.  Each arm's
     model is BIT-IDENTICAL to its own :func:`kmeans_model` call (same
     per-row expressions, associative integer sums, same driver fold);
-    outside the inline regime (or for an empty arm) it falls back to the
+    above the literal limit (or for an empty arm) it falls back to the
     per-arm path, which reproduces the same output by the existing
     bit-identity pins.  ``None`` in ``arm_filters`` means the whole
     corpus."""
@@ -976,12 +987,12 @@ def kmeans_models_fused(
     def _arm_frame(f: Column | None) -> DataFrame:
         return embeddings if f is None else embeddings.filter(f)
 
-    if n_clusters * dim <= 65536:
+    if n_clusters * dim <= _INLINE_MAX_LITERALS:
         finals = _kmeans_inline_final_sums_fused(
             embeddings, arm_filters, n_clusters, iters
         )
         return [
-            _local_model_frame(spark, _model_rows_from_sums(rows))
+            local_frame(spark, _model_rows_from_sums(rows), KMEANS_MODEL_SCHEMA)
             if rows is not None
             else kmeans_model(
                 _arm_frame(f), n_clusters=n_clusters, iters=iters, dim=dim
@@ -1007,22 +1018,21 @@ def kmeans_models_prefix(
     deepest rung, so each rung's model is folded from the snapshot its
     own shorter run would have returned — bit-identical by construction
     (same init, same per-iteration expressions; pinned by
-    test_kmeans_models_prefix_matches_separate).  Rungs the snapshot
-    cannot serve (iters < 1, empty corpus, outside the inline regime)
-    fall back to their own :func:`kmeans_model` call."""
+    test_kmeans_models_prefix_matches_separate).  Above the literal limit
+    or on an empty corpus every rung takes its own :func:`kmeans_model`
+    call.  Raises ``ValueError`` if any rung is below 1."""
+    _require_iters(min(iters_list, default=1))
     spark = embeddings.sparkSession
-    if n_clusters * dim <= 65536 and iters_list and max(iters_list) >= 1:
+    if n_clusters * dim <= _INLINE_MAX_LITERALS and iters_list:
         snaps: dict[int, list[tuple[int, int, int, int]]] = {
-            i: [] for i in iters_list if i >= 1
+            i: [] for i in iters_list
         }
         rows = _kmeans_inline_final_sums(
             embeddings, n_clusters, max(iters_list), snapshots=snaps
         )
         if rows is not None:
             return [
-                _local_model_frame(spark, _model_rows_from_sums(snaps[i]))
-                if i >= 1
-                else kmeans_model(embeddings, n_clusters=n_clusters, iters=i, dim=dim)
+                local_frame(spark, _model_rows_from_sums(snaps[i]), KMEANS_MODEL_SCHEMA)
                 for i in iters_list
             ]
     return [
@@ -1077,10 +1087,10 @@ def save_kmeans_model(
     # r14 opt (fresh-plan floor): the model is k rows of METADATA by
     # contract, so validate on rows collected ONCE driver-side instead of
     # a separate aggregate job (the agg compiled to 3 tiny AQE jobs), and
-    # feed the write from the collected local relation — the model lineage
-    # is computed exactly once and the write is a single local-scan task.
-    # Values are the same doubles either way (collect preserves them
-    # bit-exactly), so the artifact bytes' CONTENT is unchanged.
+    # feed the write from those rows — the model lineage is computed
+    # exactly once.  Values are the same doubles either way (collect
+    # preserves them bit-exactly), so the artifact bytes' CONTENT is
+    # unchanged.
     rows = model.select(
         F.col("cluster").cast("long").alias("cluster"),
         F.col("cd").cast("array<double>").alias("cd"),
@@ -1093,17 +1103,8 @@ def save_kmeans_model(
             f"save_kmeans_model: expected {n_clusters} clusters of dim {dim}; "
             f"got {len(rows)} rows with dim range [{dmin}, {dmax}]"
         )
-    spark = model.sparkSession
     (
-        spark.createDataFrame(
-            # parallelize(rows, 1), NOT a bare local relation: writing a
-            # LocalTableScan-backed frame measured ~6 s for 8 rows (vs
-            # 0.4 s from a 1-slice RDD) — the r13 metadata-frame rule
-            spark.sparkContext.parallelize(
-                [(int(r["cluster"]), list(r["cd"])) for r in rows], 1
-            ),
-            schema="cluster long, cd array<double>",
-        )
+        local_frame(model.sparkSession, rows, KMEANS_MODEL_SCHEMA)
         .select(
             "cluster",
             "cd",
@@ -1111,6 +1112,8 @@ def save_kmeans_model(
             F.lit(iters).cast("int").alias("iters"),
             F.lit(dim).cast("int").alias("dim"),
         )
+        # a local relation scans in min(k, defaultParallelism) slices
+        .coalesce(1)
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -1158,12 +1161,10 @@ def load_kmeans_model(spark, path: str) -> tuple[DataFrame, dict[str, int]]:
             f"load_kmeans_model: artifact claims dim={dim} but cd "
             f"lengths span [{dmin}, {dmax}]"
         )
-    # 1-slice RDD, not a bare local relation (the r13 metadata-frame rule —
-    # actions over LocalTableScan-backed frames measured pathologically slow
-    # in this build); rows stamped for the inline serve path
-    model = _local_model_frame(
+    model = local_frame(
         spark,
         sorted((int(r["cluster"]), [float(x) for x in r["cd"]]) for r in rows),
+        KMEANS_MODEL_SCHEMA,
     )
     return model, meta
 
@@ -1196,7 +1197,6 @@ def ivf_assign_trained(
     iters: int = 2,
     dim: int = 64,
     model: DataFrame | None = None,
-    inline_model: bool | None = None,
 ) -> DataFrame:
     """Assign every vector to its nearest TRAINED k-means centroid — the
     fixed-K coarse quantizer that makes IVF assignment LINEAR in the corpus
@@ -1222,75 +1222,50 @@ def ivf_assign_trained(
     frame share it instead of paying the training iterations twice (the
     multiprobe path ranks probe cells against the same model).
 
-    ``inline_model`` (default: auto — on when K·dim ≤ 65536 literals) is
-    the VERDICT r12 #4 restructuring of the serve-path hot spot: the
-    k-row model is collected ONCE (metadata scale — the same frame the
-    persisted-artifact path materializes anyway) and embedded as literal
-    arrays, and the argmin becomes ONE whole-stage-codegen map expression
-    per vector (``array_min`` over a transform of the K cells) — no N·K
-    row inflation, no groupBy(vec_id) shuffle, no join-back.  The plan
-    drops from two N-row exchanges to ZERO.  Output is bit-identical to
-    the join path: the distance is the same ``ee − 2·e·c + c·c`` with the
-    same in-order folds (``ee`` hoisted to a column — the same double the
-    per-row fold produced K times; ``c·c`` folded driver-side by
+    While K·dim ≤ ``_INLINE_MAX_LITERALS`` (the VERDICT r12 #4
+    restructuring of the serve-path hot spot) the k-row model is read ONCE
+    on the driver (:func:`_model_rows`; free for a :func:`local_frame`
+    model, and in-lineage training folds it from the collected sums) and
+    embedded as literal arrays, and the argmin becomes ONE
+    whole-stage-codegen map expression per vector (``array_min`` over a
+    transform of the K cells) — no N·K row inflation, no groupBy(vec_id)
+    shuffle, no join-back.  The plan drops from two N-row exchanges to
+    ZERO.  Output is bit-identical to the join path taken above the limit
+    (and for an empty model): the distance is the same ``ee − 2·e·c + c·c``
+    with the same in-order folds (``ee`` hoisted to a column — the same
+    double the per-row fold produced K times; ``c·c`` folded driver-side by
     :func:`_py_dot`, IEEE-identical over the identical collected
     components), and ``array_min`` over (d, c) structs is exactly the
     lexicographic ``min(struct(dist, cluster))`` tie-break.  The SQL
     oracle is unchanged (its row_number window replays the same ordering
     key).  Pinned by the inline-vs-join bit-identity test.
     """
-    if inline_model is None:
-        inline_model = n_clusters * dim <= 65536
-    rows = None
-    if model is None and inline_model:
+    inline = n_clusters * dim <= _INLINE_MAX_LITERALS
+    if model is None:
         # in-lineage training: fold the model rows driver-side from the
         # shared inline loop — no intermediate model frame, no collect
-        sums = _kmeans_inline_final_sums(embeddings, n_clusters, iters)
-        if sums is not None:
-            rows = _model_rows_from_sums(sums)
-    if model is None and rows is None:
-        cents = kmeans_model(embeddings, n_clusters=n_clusters, iters=iters, dim=dim)
-    elif not inline_model:
+        sums = _kmeans_inline_final_sums(embeddings, n_clusters, iters) if inline else None
+        rows = None if sums is None else _model_rows_from_sums(sums)
+        if rows is None:  # above the limit, or an empty corpus
+            model = kmeans_model(embeddings, n_clusters=n_clusters, iters=iters, dim=dim)
+    else:
         # the forwarding contract: the supplied frame must be the model the
         # n_clusters param claims — a k-mismatched (or foreign-corpus) frame
         # would silently assign against the wrong cells (the minhash_bands
-        # sig= guard's spirit; one count job on a k-row, typically cached
-        # frame).  The inline path enforces the same contract on its
-        # collected rows below — no separate count job.
-        n_model = model.count()
+        # sig= guard's spirit).  Inline, the check runs on the rows the
+        # literals need anyway; otherwise it is one count job on a k-row,
+        # typically cached frame.
+        rows = _model_rows(model) if inline else None
+        n_model = model.count() if rows is None else len(rows)
         if n_model != n_clusters:
             raise ValueError(
                 f"ivf_assign_trained(model=...) expects a {n_clusters}-row "
                 f"kmeans_model frame; supplied frame has {n_model} clusters"
             )
-        cents = model
-    else:
-        cents = model
     emb = track_cached(
         _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
     )
-    if inline_model and rows is None:
-        # a _local_model_frame carries its driver-known rows — skip the
-        # round-trip collect job (same rows: the frame is built from them)
-        attr_rows = getattr(cents, "_krs_model_rows", None)
-        rows = (
-            sorted((int(c), [float(x) for x in cd]) for c, cd in attr_rows)
-            if attr_rows is not None
-            else sorted(
-                (int(r["cluster"]), [float(x) for x in r["cd"]])
-                for r in cents.select("cluster", "cd").collect()
-            )
-        )
-        if model is not None and len(rows) != n_clusters:
-            raise ValueError(
-                f"ivf_assign_trained(model=...) expects a {n_clusters}-row "
-                f"kmeans_model frame; supplied frame has {len(rows)} clusters"
-            )
-        if not rows:
-            # degenerate empty-corpus model: an empty literal array has no
-            # inferable type — the join path reproduces the (empty) output
-            inline_model = False
-    if inline_model:
+    if rows:
         ids = lit_longs(c for c, _ in rows)
         cds = lit_doubles2d(cd for _, cd in rows)
         ccs = lit_doubles(_py_dot(cd, cd) for _, cd in rows)
@@ -1309,7 +1284,7 @@ def ivf_assign_trained(
             emb.withColumn("ee", dot_col(F.col("e"), F.col("e")))
             .select("vec_id", "e", F.array_min(scored)["c"].alias("centroid_id"))
         )
-    scored = emb.join(F.broadcast(cents)).select(
+    scored = emb.join(F.broadcast(model)).select(
         "vec_id",
         "cluster",
         (
@@ -3203,13 +3178,14 @@ def trained_multiprobe_scored(
     artifact, or a stale index-build-time model for the staleness audit)
     serves BOTH the probe-cell ranking and the assignment, exactly the
     persisted-artifact serve path."""
+    inline = n_clusters * dim <= _INLINE_MAX_LITERALS
     if model is None:
         model = kmeans_model(embeddings, n_clusters=n_clusters, iters=iters, dim=dim)
-        if n_clusters * dim > 65536:
-            # outside the inline regime kmeans_model is a distributed
+        if not inline:
+            # above the literal limit kmeans_model is a distributed
             # training lineage — cache it so the probe-cell ranking and
-            # the assignment don't train twice (inline models are LOCAL
-            # k-row relations: caching them only adds scan jobs)
+            # the assignment don't train twice (inline models are
+            # local_frame k-row relations: caching them only adds scan jobs)
             model = track_cached(model)
     assigned = track_cached(
         ivf_assign_trained(
@@ -3221,8 +3197,8 @@ def trained_multiprobe_scored(
         F.col("vec_id").alias("probe_id"), F.col("e").alias("pe"),
         F.col("en").alias("pn"),
     )
-    model_rows = getattr(model, "_krs_model_rows", None)
-    if model_rows:
+    rows_sorted = _model_rows(model) if inline else None
+    if rows_sorted:
         # r14 (fresh-plan floor): a driver-known k-row model embeds as
         # literal arrays — the probe-cell ranking becomes array_sort over
         # a transform instead of broadcast-join + row_number window (no
@@ -3234,7 +3210,6 @@ def trained_multiprobe_scored(
         # row_number over ORDER BY dist, cluster exactly (cluster ids are
         # distinct).  slice() past the array end returns the whole array,
         # matching the rn <= nprobe filter when nprobe >= k.
-        rows_sorted = sorted((int(c), [float(x) for x in cd]) for c, cd in model_rows)
         ids = lit_longs(c for c, _ in rows_sorted)
         cds = lit_doubles2d(cd for _, cd in rows_sorted)
         ccs = lit_doubles(_py_dot(cd, cd) for _, cd in rows_sorted)

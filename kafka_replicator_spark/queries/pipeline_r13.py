@@ -33,8 +33,10 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_replicator_spark.cacheutil import track_cached
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions import similarity as _sim
 from kafka_replicator_spark.queries import register
 from kafka_replicator_spark.sources.tables import load_table
@@ -52,6 +54,16 @@ _HALF_REL = (
 
 _RETRAIN_K = 8
 _RETRAIN_ITERS = 2
+
+#: p_model_retrain_decision's result: one row per frozen cell.
+RETRAIN_DECISION_SCHEMA = T.StructType(
+    [
+        T.StructField("cluster", T.LongType()),
+        T.StructField("n_members_now", T.LongType()),
+        T.StructField("shift_sq_micro2", T.LongType()),
+        T.StructField("retrain", T.IntegerType()),
+    ]
+)
 
 
 def _half_model_assign_block() -> str:
@@ -124,8 +136,8 @@ def q_model_retrain_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).collect()[0]
     mid = int(lo) + (int(hi) - int(lo) + 1) // 2
     half = emb.filter(F.col("vec_id") < mid)
-    # kmeans_train in the inline regime returns a LOCAL k·dim-row relation
-    # (the r13-opt restructuring) — no cache needed, collects are free
+    # at K=8 kmeans_train returns a k·dim-row local_frame — no cache
+    # needed, collects run no job
     kt = _sim.kmeans_train(half, k=_RETRAIN_K, iters=_RETRAIN_ITERS)
     # the REAL persisted path: save the trained model, load it back, and
     # assign from the LOADED frame (the artifact dir must outlive this
@@ -158,22 +170,15 @@ def q_model_retrain_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact IEEE twin of the column expression (both operands converted to
     # double first), the same rule mu_frozen uses (kmeans_train's
     # centroid_micro), so an unchanged cell reports shift EXACTLY zero.
-    # The frozen components come from the trainer's driver-known rows
-    # (collected once by the inline loop; fallback collect of the same
-    # k·dim-row local relation), and the squared shift, the total, and
-    # the relative gate are pure Python ints — the per-cell join, the
-    # 8-row cache, and the total crossJoin disappear from the plan.
+    # The frozen components are the trainer's rows (one collect of the
+    # local_frame), and the squared shift, the total, and the relative
+    # gate are pure Python ints — the per-cell join, the 8-row cache, and
+    # the total crossJoin disappear from the plan.
     cur_rows = _sim._micro_sum_rows(
         assigned.select(F.col("centroid_id").alias("cluster"), "e"), ["cluster"]
     )
-    train_rows = getattr(kt, "_krs_train_rows", None)
-    if train_rows is None:
-        train_rows = [
-            (int(r["cluster"]), int(r["dim"]), int(r["centroid_micro"]), 0)
-            for r in kt.select("cluster", "dim", "centroid_micro").collect()
-        ]
     frozen: dict[int, dict[int, int]] = {}
-    for c, d, m, _n in train_rows:
+    for c, d, m in kt.select("cluster", "dim", "centroid_micro").collect():
         frozen.setdefault(int(c), {})[int(d)] = int(m)
     # mirror the replaced inner join + min(n) exactly: (cluster, dim)
     # pairs with no frozen component drop from BOTH aggregates (the join
@@ -193,12 +198,13 @@ def q_model_retrain_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_by_c[c] = min(n_by_c.get(c, n), n)
     per = [(c, n_by_c[c], shift_by_c[c]) for c in sorted(shift_by_c)]
     tot = sum(s for _c, _n, s in per)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (c, n, s, 1 if 10 * s * _RETRAIN_K > 12 * tot else 0)
             for c, n, s in per
         ],
-        schema="cluster long, n_members_now long, shift_sq_micro2 long, retrain int",
+        RETRAIN_DECISION_SCHEMA,
     )
 
 

@@ -4,7 +4,8 @@ LocalRelation.
 Pins the Arrow construction against the Python-RDD construction it
 replaced (``spark.createDataFrame(rows, schema)``) for every schema it
 serves, in a UTC and a non-UTC process time zone, and pins the structural
-gain: collecting a listing or a compaction result runs no Spark job.
+gain: collecting a listing, a compaction result or a driver-built k-means
+model runs no Spark job.
 """
 
 import os
@@ -16,17 +17,21 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.cacheutil import release_cached
 from kafka_replicator_spark.core.schema import (
     SEGMENT_SCHEMA,
     WRITTEN_SEGMENT_SCHEMA,
     local_frame,
 )
+from kafka_replicator_spark.functions import similarity as sim
 from kafka_replicator_spark.operators.compaction import (
     MERGE_SPEC_SCHEMA,
     compact,
     plan_compaction,
 )
+from kafka_replicator_spark.queries.pipeline_r13 import RETRAIN_DECISION_SCHEMA
 from kafka_replicator_spark.sources.segments import list_segments
+from kafka_replicator_spark.sources.tables import load_table
 from kafka_replicator_spark.streaming.ingress_stream import (
     CHECKPOINT_TRIM_SCHEMA,
     FRONTIER_SCHEMA,
@@ -91,6 +96,18 @@ CASES = {
     "merge_spec": (MERGE_SPEC_SCHEMA, _spec_rows()),
     "checkpoint_trim": (CHECKPOINT_TRIM_SCHEMA, [("t", 0, 41), ("u/v", 7, 0)]),
     "frontier": (FRONTIER_SCHEMA, [("t", 0, 99)]),
+    "kmeans_model": (
+        sim.KMEANS_MODEL_SCHEMA,
+        [(0, [0.123456, -1e-06, 2.5]), (7, [0.1 + 0.2, -0.0, 1e300])],
+    ),
+    "kmeans_train": (
+        sim.KMEANS_TRAIN_SCHEMA,
+        [(0, 1, 123456, 40), (0, 2, -7, 40), (3, 64, 2**40, 1)],
+    ),
+    "retrain_decision": (
+        RETRAIN_DECISION_SCHEMA,
+        [(0, 31, 1250, 1), (5, 0, 0, 0)],
+    ),
 }
 
 
@@ -153,3 +170,26 @@ def test_listing_and_compaction_result_collect_without_jobs(spark, tmp_path):
     assert n == [0]
     assert [(r["start_offset"], r["end_offset"], r["level"]) for r in written] == [(0, 29, 1)]
     assert os.path.exists(written[0]["path"])
+
+
+def test_kmeans_model_frames_collect_without_jobs(spark, sf_dir, tmp_path):
+    """Every driver-built k-means frame is a LocalRelation: once built,
+    reading its rows back (what the inline consumers do) runs no job."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    model = sim.kmeans_model(emb, n_clusters=8, iters=2)
+    path = str(tmp_path / "kmeans")
+    sim.save_kmeans_model(model, path, n_clusters=8, iters=2, dim=64)
+    frames = {
+        "kmeans_train": sim.kmeans_train(emb, k=8, iters=2),
+        "kmeans_model": model,
+        "load_kmeans_model": sim.load_kmeans_model(spark, path)[0],
+    }
+    for i, m in enumerate(sim.kmeans_models_fused(emb, [F.col("vec_id") % 2 == 0, None])):
+        frames[f"kmeans_models_fused[{i}]"] = m
+    for i, m in enumerate(sim.kmeans_models_prefix(emb, [1, 2])):
+        frames[f"kmeans_models_prefix[{i}]"] = m
+    release_cached()
+    for name, df in frames.items():
+        with _jobs_launched(spark) as n:
+            rows = df.collect()
+        assert rows and n == [0], (name, n)

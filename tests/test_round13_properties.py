@@ -48,11 +48,13 @@ def test_kmeans_model_save_load_roundtrip(spark, sf_dir, tmp_path):
     """VERDICT r12 #2: the persisted-model artifact roundtrips
     bit-exactly — save → load returns the identical (cluster, cd) rows
     and the training metadata, and assignment from the LOADED frame is
-    bit-identical to assignment from the in-lineage frame."""
+    bit-identical to assignment from the in-lineage frame.  The artifact
+    is one part file."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=8, iters=2)
     path = str(tmp_path / "kmeans")
     sim.save_kmeans_model(model, path, n_clusters=8, iters=2, dim=64)
+    assert len(list((tmp_path / "kmeans").glob("part-*"))) == 1
     loaded, meta = sim.load_kmeans_model(spark, path)
     assert meta == {"n_clusters": 8, "iters": 2, "dim": 64}
     want = sorted((r["cluster"], tuple(r["cd"])) for r in model.collect())
@@ -120,30 +122,70 @@ def test_derive_n_planes_sql_empty_relation_matches_spark(spark):
     assert got == 4
 
 
-def test_ivf_assign_trained_inline_matches_join_path(spark, sf_dir):
+def test_ivf_assign_trained_inline_matches_join_path(spark, sf_dir, monkeypatch):
     """VERDICT r12 #4: the inline-literal argmin (model collected once,
     zero exchanges) must be BIT-IDENTICAL to the broadcast-join +
-    min(struct) path — same fold chain, same (dist, cluster) tie-break."""
+    min(struct) path — same fold chain, same (dist, cluster) tie-break —
+    both over one shared model frame and with in-lineage training (the
+    distributed run also trains through the window path)."""
     emb = _emb(spark, sf_dir)
-    a = sorted(
-        (r["vec_id"], r["centroid_id"])
-        for r in sim.ivf_assign_trained(emb, n_clusters=16, iters=2, inline_model=True).collect()
-    )
-    b = sorted(
-        (r["vec_id"], r["centroid_id"])
-        for r in sim.ivf_assign_trained(emb, n_clusters=16, iters=2, inline_model=False).collect()
-    )
-    assert a == b and len(a) > 0
+    model = sim.kmeans_model(emb, n_clusters=16, iters=2)
+
+    def assign(**kw):
+        return sorted(
+            (r["vec_id"], r["centroid_id"])
+            for r in sim.ivf_assign_trained(emb, n_clusters=16, iters=2, **kw).collect()
+        )
+
+    inline_model, inline_lineage = assign(model=model), assign()
+    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+    assert assign(model=model) == inline_model and len(inline_model) > 0
+    assert assign() == inline_lineage == inline_model
 
 
-def test_kmeans_train_inline_matches_window_path(spark, sf_dir):
+def test_kmeans_train_inline_matches_window_path(spark, sf_dir, monkeypatch):
     """The per-iteration inline argmin (centroids collected per round)
     must reproduce the N*K row_number window path bit-for-bit, including
     the next-round integer micro-mean."""
     emb = _emb(spark, sf_dir)
-    a = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2, inline=True).collect())
-    b = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2, inline=False).collect())
+    a = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2).collect())
+    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+    b = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2).collect())
     assert a == b and len(a) == 8 * 64
+
+
+@pytest.mark.parametrize("regime", ["inline", "distributed"])
+def test_kmeans_rejects_iters_below_one(spark, sf_dir, monkeypatch, regime):
+    """iters < 1 has no model: every trainer raises the same error in
+    both regimes instead of returning an empty model or crashing."""
+    if regime == "distributed":
+        monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+    emb = _emb(spark, sf_dir)
+    calls = [
+        lambda: sim.kmeans_train(emb, k=8, iters=0),
+        lambda: sim.kmeans_model(emb, n_clusters=8, iters=0),
+        lambda: sim.kmeans_models_fused(emb, [None], n_clusters=8, iters=0),
+        lambda: sim.kmeans_models_prefix(emb, [0, 2], n_clusters=8),
+        lambda: sim.ivf_assign_trained(emb, n_clusters=8, iters=-1),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="iters >= 1"):
+            call()
+
+
+def test_kmeans_empty_corpus_gives_empty_frames(spark, sf_dir):
+    """An empty corpus has no literal centroids: training, the model and
+    the assignment take the distributed paths and return empty frames
+    with their declared columns."""
+    empty = _emb(spark, sf_dir).limit(0)
+    frames = {
+        ("cluster", "dim", "centroid_micro", "n_members"): sim.kmeans_train(empty),
+        ("cluster", "cd"): sim.kmeans_model(empty),
+        ("vec_id", "e", "centroid_id"): sim.ivf_assign_trained(empty),
+    }
+    for cols, df in frames.items():
+        assert tuple(df.columns) == cols
+        assert df.collect() == []
 
 
 def test_ivf_assign_trained_inline_plan_has_no_join_or_shuffle(spark, sf_dir):

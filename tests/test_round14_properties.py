@@ -28,64 +28,57 @@ def _probes(emb, n=4):
     ]
 
 
-def test_multiprobe_inline_probe_cells_matches_join(spark, sf_dir):
+def test_multiprobe_inline_probe_cells_matches_join(spark, sf_dir, monkeypatch):
     """trained_multiprobe_scored's literal-embedded probe-cell ranking
-    (taken when the model frame carries driver-known rows) must be
-    bit-identical to the broadcast-join + row_number window path —
-    stripping the advisory ``_krs_model_rows`` attribute via a select
-    forces the join path over the SAME model rows."""
+    (the default at K·dim within the literal limit) must be bit-identical
+    to the broadcast-join + row_number window path over the SAME model
+    frame (forced by setting the limit to 0)."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=8, iters=2)
-    assert getattr(model, "_krs_model_rows", None), "local model must carry rows"
     probes = _probes(emb)
-    inline = sim.trained_multiprobe_scored(emb, probes, nprobe=2, model=model)
-    stripped = model.select("cluster", "cd")  # drops the python attribute
-    assert getattr(stripped, "_krs_model_rows", None) is None
-    joined = sim.trained_multiprobe_scored(emb, probes, nprobe=2, model=stripped)
-    a = sorted(tuple(r) for r in inline.collect())
-    b = sorted(tuple(r) for r in joined.collect())
-    assert a == b  # exact — including the cos doubles
+
+    def scored():
+        return sorted(
+            tuple(r)
+            for r in sim.trained_multiprobe_scored(
+                emb, probes, nprobe=2, model=model
+            ).collect()
+        )
+
+    a = scored()
+    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+    assert scored() == a and a  # exact — including the cos doubles
 
 
-def test_multiprobe_inline_nprobe_past_k(spark, sf_dir):
+def test_multiprobe_inline_nprobe_past_k(spark, sf_dir, monkeypatch):
     """nprobe beyond the cluster count: slice() past the array end must
     reproduce the window path's rn <= nprobe (keep all k cells)."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=4, iters=1, dim=64)
     probes = _probes(emb, n=2)
-    inline = sim.trained_multiprobe_scored(
-        emb, probes, nprobe=9, n_clusters=4, iters=1, model=model
-    )
-    joined = sim.trained_multiprobe_scored(
-        emb, probes, nprobe=9, n_clusters=4, iters=1,
-        model=model.select("cluster", "cd"),
-    )
-    a = sorted(tuple(r) for r in inline.collect())
-    b = sorted(tuple(r) for r in joined.collect())
-    assert a == b
+
+    def scored():
+        return sorted(
+            tuple(r)
+            for r in sim.trained_multiprobe_scored(
+                emb, probes, nprobe=9, n_clusters=4, iters=1, model=model
+            ).collect()
+        )
+
+    a = scored()
+    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+    assert scored() == a
     assert max(r[1] for r in a) == 4  # every cell probed, rank caps at k
 
 
-def test_assign_trained_attribute_rows_match_collect(spark, sf_dir):
-    """ivf_assign_trained fed a model WITH the rows attribute must be
-    bit-identical to the same model frame with the attribute stripped
-    (which collects the rows instead)."""
-    emb = _emb(spark, sf_dir)
-    model = sim.kmeans_model(emb, n_clusters=8, iters=2)
-    fast = sim.ivf_assign_trained(emb, n_clusters=8, iters=2, model=model)
-    slow = sim.ivf_assign_trained(
-        emb, n_clusters=8, iters=2, model=model.select("cluster", "cd")
-    )
-    a = sorted((r["vec_id"], r["centroid_id"]) for r in fast.collect())
-    b = sorted((r["vec_id"], r["centroid_id"]) for r in slow.collect())
-    assert a == b
-
-
-def test_attribute_rows_validation_still_fires(spark, sf_dir):
-    """The model= k-mismatch guard must fire on attribute rows exactly as
-    it does on collected rows."""
+def test_attribute_rows_validation_still_fires(spark, sf_dir, monkeypatch):
+    """The model= k-mismatch guard must fire on the inline path's
+    collected rows exactly as it does on the distributed path's count."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=4, iters=1)
+    with pytest.raises(ValueError, match="expects a 8-row"):
+        sim.ivf_assign_trained(emb, n_clusters=8, iters=2, model=model)
+    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
     with pytest.raises(ValueError, match="expects a 8-row"):
         sim.ivf_assign_trained(emb, n_clusters=8, iters=2, model=model)
 
