@@ -16,7 +16,7 @@ Layout:
     functions/   beyond-parity data-pipeline ops: dedup (exact / MinHash-LSH /
                  SimHash / n-gram Jaccard), similarity search, text analysis,
                  multimodal column plumbing
-    streaming/   Structured Streaming egress/ingress + metrics listeners
+    streaming/   Structured Streaming egress/ingress + stateful operators
     plans/       plan-inspection helpers (pushdown / broadcast assertions)
 
 Design rules (SURVEY.md §4, §7):

@@ -12,11 +12,11 @@ included:
                    3: partition (uint32), 4: level (uint32),
                    5: startOffset (uint64), 6: endOffset (uint64) }
     SegmentEvent { 1: type (enum CREATED=0 | REMOVED=1),
-                   2: timestamp (google.protobuf.Timestamp),
+                   2: timestamp (well-known Timestamp),
                    3: segment (Segment), 4: segmentSize (uint64) }
     Checkpoint   { 1: region, 2: topic, 3: partition (uint32),
                    4: offset (uint64),
-                   5: timestamp (google.protobuf.Timestamp) }
+                   5: timestamp (well-known Timestamp) }
     Message      { 1: key (bytes), 2: value (bytes), 3: offset (uint64),
                    4: timestamp (Timestamp),
                    5: repeated Header { 1: key (string), 2: value (bytes) } }
@@ -25,7 +25,8 @@ Encoding follows proto3 canonical rules so bytes interoperate with the
 reference's gogo-generated marshaller: zero-valued scalars are omitted;
 the (gogoproto.nullable) = false submessages (timestamp, segment) are
 always emitted, as gogo's generated Marshal does for non-pointer fields.
-google.protobuf.Timestamp is { 1: seconds (int64), 2: nanos (int32) }.
+The well-known Timestamp (timestamp.proto) is
+{ 1: seconds (int64), 2: nanos (int32) }.
 
 Spark-side use: `encode_checkpoint_udf` / `decode_checkpoint_udf` are
 Arrow-batched pandas UDFs for K3/S5 topic interop.
@@ -139,7 +140,7 @@ def _decode_repeated(buf: bytes, want_field: int) -> list[bytes]:
     return out
 
 
-# ----------------------------------------------- google.protobuf.Timestamp
+# --------------------------------------------- well-known Timestamp type
 
 def _encode_timestamp(ts_ns: int) -> bytes:
     """Timestamp { 1: seconds (int64), 2: nanos (int32) } from epoch nanos."""

@@ -9,14 +9,10 @@ report (contiguous? gap size? regression?) without any global scan.  State
 is one long per partition — bounded regardless of stream length, the
 property that matters at 1000 partitions × unbounded retention.
 
-Two engines, same semantics (the event_store.py pattern):
-
-* ``classic`` — ``applyInPandasWithState`` with NoTimeout (the monitor has
-  no TTL semantics, so the availableNow/ProcessingTimeTimeout quirk never
-  applies here).
-* ``tws`` — ``transformWithStateInPandas`` (Spark 4 successor API,
-  SPARK-46815); auto-selected when the API, protobuf, and the RocksDB
-  state store provider are all present.
+The operator is ``applyInPandasWithState`` with NoTimeout: the monitor has
+no TTL semantics, so the availableNow/ProcessingTimeTimeout trap of
+``event_store.streaming_event_store(retention_ms=)`` never applies here,
+and state survives idle partitions.
 
 Batch-shape equivalent (window lag over msg_offset) is oracle-checked as
 ``r_f6_sanity_offsets``; this processor is its cross-batch streaming form.
@@ -36,7 +32,7 @@ CONTINUITY_SCHEMA = (
 
 
 def _report(key, last_offset, offs: pd.Series):
-    """Continuity math shared by both engines: one report row + new state."""
+    """Continuity math: one report row + the new last-offset state."""
     lo, hi = int(offs.min()), int(offs.max())
     n, n_distinct = len(offs), int(offs.nunique())
     expected = int(last_offset) + 1 if last_offset is not None else lo
@@ -62,63 +58,17 @@ def _continuity_fn(key, pdfs, state):
     yield pd.DataFrame([row])
 
 
-def offset_continuity_stream(messages: DataFrame, engine: str = "auto") -> DataFrame:
-    """Attach the continuity monitor to a (streaming) message frame.
-
-    ``engine``: ``classic`` (applyInPandasWithState, NoTimeout — state must
-    survive idle partitions), ``tws`` (transformWithStateInPandas), or
-    ``auto`` (tws when API + protobuf + RocksDB provider are all present).
-    """
-    if engine not in ("auto", "classic", "tws"):
-        raise ValueError(f"engine must be auto|classic|tws, got {engine!r}")
-    from kafka_replicator_spark.streaming.event_store import _tws_available
+def offset_continuity_stream(messages: DataFrame) -> DataFrame:
+    """Attach the continuity monitor to a (streaming) message frame."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     grouped = messages.select("topic", "partition_id", "msg_offset").groupBy(
         "topic", "partition_id"
     )
-    if engine == "tws" or (engine == "auto" and _tws_available(messages)):
-        return _continuity_tws(grouped)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     return grouped.applyInPandasWithState(
         _continuity_fn,
         outputStructType=CONTINUITY_SCHEMA,
         stateStructType="last_offset long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _continuity_tws(grouped) -> DataFrame:
-    """transformWithStateInPandas engine: value state holds the same single
-    long; no time semantics (timeMode None)."""
-    from collections.abc import Iterator
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _ContinuityProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("last_offset", "last_offset long")
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            last = self._state.get()[0] if self._state.exists() else None
-            offs = pd.concat(
-                [pdf["msg_offset"] for pdf in rows], ignore_index=True
-            )
-            row, new_last = _report(key, last, offs)
-            self._state.update((new_last,))
-            yield pd.DataFrame([row])
-
-        def close(self) -> None:
-            pass
-
-    return grouped.transformWithStateInPandas(
-        statefulProcessor=_ContinuityProcessor(),
-        outputStructType=CONTINUITY_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

@@ -6,7 +6,9 @@ custom Spark stateful operator.
 the winning (event_type, event_ts) under the A7 resolution rule (newest
 wins; REMOVED beats CREATED on a tie).  A processing-time timeout expires
 idle entries after ``retention_ms`` — the reference's 1-minute background
-sweep, done by the state store instead of a goroutine.
+sweep, done by the state store instead of a goroutine.  This is the
+engine's one keyed-state operator (the Structured Streaming paper's
+``mapGroupsWithState``); ``continuity.py`` uses the same one.
 
 Each microbatch emits the keys whose resolved state *changed*, i.e. the
 overlay delta that a ConsistentSegmentStore consumer needs.
@@ -61,57 +63,18 @@ def _resolve(best_type, best_ts, pdf: pd.DataFrame):
     return best_type, best_ts
 
 
-def _tws_available(events: DataFrame) -> bool:
-    """transformWithStateInPandas (Spark ≥ 4.0) needs the RocksDB state
-    store provider AND the ``protobuf`` package (its state-server protocol
-    is protobuf-framed; pyspark lists it as an optional dependency) —
-    auto-select it only when both are present."""
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    provider = events.sparkSession.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    return "RocksDB" in (provider or "")
-
-
 def streaming_event_store(
-    events: DataFrame, retention_ms: int | None = None, engine: str = "auto"
+    events: DataFrame, retention_ms: int | None = None
 ) -> DataFrame:
     """events: streaming DataFrame with SEG_KEY + event_type + event_ts
     (long).  Returns the per-batch state-change stream.
 
-    ``engine`` selects the stateful operator API:
-
-    * ``"classic"`` — ``applyInPandasWithState``.  Here ``retention_ms``
-      rides on processing-time timeouts — use it ONLY with continuous
-      triggers: under ``availableNow`` a pending timeout makes Spark keep
-      scheduling state-cleanup batches and the query never terminates.
-    * ``"tws"`` — ``transformWithStateInPandas`` (Spark 4's successor
-      API; requires the RocksDB state store provider,
-      ``spark.sql.streaming.stateStore.providerClass`` =
-      ``...state.RocksDBStateStoreProvider``).  ``retention_ms`` becomes a
-      native value-state TTL — storage-level eviction, no timer callbacks.
-      CAUTION: TTL forces ProcessingTime timeMode, and under availableNow
-      the engine then keeps scheduling EMPTY microbatches forever after
-      draining the input (measured: batch 500+ within minutes) — the input
-      batches COMMIT, but ``awaitTermination`` never returns.  Callers
-      must poll the sink for the expected output and ``stop()`` the query.
-      Registered TIMERS hit the same trap (measured round 8): the drain
-      runs one timer-flush batch, then loops empty microbatches forever —
-      poll-and-stop applies to EVERY tws ProcessingTime drain.
-    * ``"auto"`` — ``tws`` when the API exists AND the session already runs
-      the RocksDB provider; ``classic`` otherwise.
+    ``retention_ms`` rides on a processing-time timeout — use it ONLY with
+    a ``processingTime`` (or other continuous) trigger: under
+    ``availableNow`` a pending timeout makes Spark keep scheduling
+    state-cleanup batches and the query never terminates.  Callers poll
+    the sink for the expected output and ``stop()`` the query.
     """
-    if engine not in ("auto", "classic", "tws"):
-        raise ValueError(f"engine must be auto|classic|tws, got {engine!r}")
-    if engine == "tws" or (engine == "auto" and _tws_available(events)):
-        return _event_store_tws(events, retention_ms)
 
     def update(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -154,62 +117,4 @@ def streaming_event_store(
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=timeout_conf,
-    )
-
-
-def _event_store_tws(events: DataFrame, retention_ms: int | None) -> DataFrame:
-    """transformWithStateInPandas implementation (Spark 4 successor API,
-    SPARK-46815): same A7 semantics, value state with native TTL.
-
-    TTL eviction happens inside the state store — no timer callbacks, no
-    extra cleanup batches — so ``retention_ms`` composes with availableNow
-    replays, which the classic processing-time-timeout path cannot do.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_cols = [f.name for f in OUTPUT_SCHEMA.fields]
-
-    class _EventStoreProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "seg_state", STATE_SCHEMA, ttlDurationMs=retention_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._state.exists():
-                cur = self._state.get()
-                prev = (cur[0], int(cur[1]))
-            else:
-                prev = None
-            best_type, best_ts = prev if prev is not None else (None, -1)
-            for pdf in rows:
-                best_type, best_ts = _resolve(best_type, best_ts, pdf)
-            self._state.update((best_type, best_ts))
-            if prev != (best_type, best_ts):
-                yield pd.DataFrame(
-                    [
-                        {
-                            **dict(zip(SEG_KEY, key)),
-                            "event_type": best_type,
-                            "event_ts": best_ts,
-                        }
-                    ]
-                )
-            else:
-                yield pd.DataFrame(columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    # value-state TTL needs the processing-time clock; otherwise no time
-    # semantics are involved
-    time_mode = "ProcessingTime" if retention_ms is not None else "None"
-    return events.groupBy(*SEG_KEY).transformWithStateInPandas(
-        statefulProcessor=_EventStoreProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode=time_mode,
     )

@@ -1,55 +1,11 @@
-"""Observability (SURVEY.md §2.11): per-query volume/lag metrics via
-StreamingQueryListener, preserving the reference's metric names
-(consumed / written / lag at topic+partition grain where available).
+"""Observability (SURVEY.md §2.11): in-plan volume metrics.
 
 The reference meters per-partition counters with go-metrics
-(pkg/egress/metrics.go, pkg/ingress/metrics.go); Spark's listener gives the
-same signals per microbatch without touching the data path.
+(pkg/egress/metrics.go, pkg/ingress/metrics.go); ``Dataset.observe`` gives
+the same signals per action or microbatch without touching the data path.
 """
 
 from __future__ import annotations
-
-from pyspark.sql.streaming import StreamingQueryListener
-
-
-class MetricsListener(StreamingQueryListener):
-    """Collects per-batch progress: rows consumed, processing rate, and
-    batch duration.  ``snapshot()`` returns the accumulated counters —
-    the shape the reference exports (messagesConsumed/messagesWritten,
-    replication lag).
-    """
-
-    def __init__(self) -> None:
-        self.batches: list[dict] = []
-        self.totals = {"messagesConsumed": 0, "batches": 0, "durationMs": 0}
-
-    # -- StreamingQueryListener interface ---------------------------------
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        rec = {
-            "id": str(p.id),
-            "batchId": p.batchId,
-            "numInputRows": p.numInputRows,
-            "processedRowsPerSecond": p.processedRowsPerSecond,
-            "durationMs": (p.durationMs or {}).get("triggerExecution"),
-        }
-        self.batches.append(rec)
-        self.totals["messagesConsumed"] += p.numInputRows or 0
-        self.totals["batches"] += 1
-        self.totals["durationMs"] += rec["durationMs"] or 0
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    # ----------------------------------------------------------------------
-    def snapshot(self) -> dict:
-        return dict(self.totals)
 
 
 def observed_volume(df, name: str = "volume", size_col: str | None = "msg_size"):
@@ -61,8 +17,8 @@ def observed_volume(df, name: str = "volume", size_col: str | None = "msg_size")
 
     Batch: returns ``(df, observation)`` — read ``observation.get`` after
     any action.  Streaming: metrics surface per batch in
-    ``StreamingQueryProgress.observedMetrics[name]`` (pair with
-    :class:`MetricsListener`).
+    ``StreamingQueryProgress.observedMetrics[name]``, read from the query
+    handle's progress.
     """
     from pyspark.sql import functions as F
 

@@ -6,16 +6,6 @@ from kafka_replicator_spark import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Vendored minimal protobuf runtime (protoshim): pyspark's
-# transformWithState state protocol needs `google.protobuf`, which is not
-# installed here.  ensure_protoshim() prepends the shim to sys.path
-# (driver) and PYTHONPATH (inherited by the JVM and thus by Spark's
-# Python workers, where the state-server client runs); a real protobuf
-# install wins.  Must run before any SparkSession is created.
-from kafka_replicator_spark.vendor import ensure_protoshim
-
-ensure_protoshim()
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -32,12 +22,12 @@ def spark():
 def _no_leaked_streams():
     """Fail the offending test if it leaves a streaming query running.
 
-    The round-6 tws-TTL engine trap (ttlDurationMs + availableNow never
-    terminating) leaked a live query into the rest of the suite and taxed
-    every later test for a full round before being caught.  This guard
-    makes the NEXT such trap fail the test that caused it instead:
-    after each test in a module that touches streaming, any still-active
-    query is stopped and the test is failed by name.
+    A stateful query with a pending processing-time timeout
+    (``streaming_event_store(retention_ms=)``) never terminates under
+    ``availableNow``, and a query left running taxes every later test in
+    the suite.  This guard makes such a leak fail the test that caused
+    it instead: after each test, any still-active query is stopped and
+    the test is failed by name.
     """
     yield
     # Only inspect when a session already exists — never create one here
@@ -62,7 +52,7 @@ def _no_leaked_streams():
             f"test leaked {len(leaked)} active streaming quer"
             f"{'y' if len(leaked) == 1 else 'ies'}: {names} — "
             "stop() every query (poll the sink, never rely on "
-            "awaitTermination under availableNow+TTL)"
+            "awaitTermination under availableNow with a pending timeout)"
         )
 
 

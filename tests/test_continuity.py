@@ -1,5 +1,5 @@
-"""transformWithStateInPandas continuity monitor: cross-batch state must
-carry the last offset between microbatches and flag the injected gap.
+"""Streaming continuity monitor (applyInPandasWithState): cross-batch state
+must carry the last offset between microbatches and flag the injected gap.
 """
 
 import pytest
@@ -55,64 +55,3 @@ def test_continuity_monitor_flags_gap_across_batches(spark, staged_gappy, tmp_pa
     assert third["batch_lo"] == 200 and third["missing_from_last"] == 49
     assert all(not r["regressed"] for r in rows)
     assert all(r["internal_gaps"] == 0 for r in rows)
-
-
-def test_continuity_tws_engine_matches_classic(spark, tmp_path):
-    """transformWithStateInPandas path: identical continuity reports across
-    microbatches (engine switch mirrors event_store.py)."""
-    import pytest
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        pytest.skip("Spark < 4.0: no transformWithState")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf not installed: transformWithState unavailable")
-
-    import pandas as pd
-
-    from kafka_replicator_spark.streaming.continuity import offset_continuity_stream
-
-    schema = "topic string, partition_id int, msg_offset long"
-    src = str(tmp_path / "cont_src")
-    spark.createDataFrame(
-        [("t", 0, 0), ("t", 0, 1), ("t", 0, 2)], schema=schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [("t", 0, 5), ("t", 0, 6)], schema=schema  # gap of 2 from last=2
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            offset_continuity_stream(stream, engine="tws")
-            .writeStream.format("memory")
-            .queryName("cont_tws_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = sorted(
-            spark.sql("SELECT * FROM cont_tws_out").collect(),
-            key=lambda r: r["batch_lo"],
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    assert len(rows) == 2
-    assert rows[0]["missing_from_last"] == 0 and not rows[0]["regressed"]
-    # second batch starts at 5 after last=2: 2 offsets missing
-    assert rows[1]["missing_from_last"] == 2
-    assert rows[1]["internal_gaps"] == 0 and not rows[1]["regressed"]

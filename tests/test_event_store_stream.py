@@ -52,80 +52,6 @@ def test_event_store_state_across_batches(spark, tmp_path):
     assert len(by_seg[0]) == 1
 
 
-def test_event_store_tws_engine_matches_classic(spark, tmp_path):
-    """transformWithStateInPandas path (engine='tws', RocksDB provider):
-    identical change-stream semantics across microbatches.  retention_ms
-    (native value-state TTL) forces ProcessingTime timeMode, and under
-    availableNow the query then NEVER self-terminates (empty batches loop
-    after the drain) — the test polls the memory sink for the expected
-    rows and stops explicitly."""
-    import pytest
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        pytest.skip("Spark < 4.0: no transformWithState")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf not installed: transformWithState state protocol unavailable")
-
-    src = str(tmp_path / "events_src")
-    spark.createDataFrame(
-        [(*SEG_A, "CREATED", 5), (*SEG_B, "CREATED", 6)], schema=EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [(*SEG_A, "REMOVED", 3), (*SEG_A, "CREATED", 5), (*SEG_B, "REMOVED", 9)],
-        schema=EVENT_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        # retention_ms forces ProcessingTime timeMode: under availableNow
-        # tws then NEVER terminates (it keeps scheduling empty batches
-        # after the drain) — poll for the 3 expected change rows, then
-        # stop() explicitly.  awaitTermination here would burn its full
-        # timeout AND leak a running query into the rest of the suite.
-        import time
-
-        out = streaming_event_store(stream, retention_ms=3_600_000, engine="tws")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("event_store_tws_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = time.time() + 180
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM event_store_tws_out").collect()
-            if len(rows) >= 3:
-                break
-            time.sleep(1)
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    by_seg = {}
-    for r in rows:
-        by_seg.setdefault(r["start_offset"], []).append((r["event_type"], r["event_ts"]))
-    assert ("CREATED", 5) in by_seg[0]
-    assert by_seg[10][-1] == ("REMOVED", 9)
-    assert len(by_seg[0]) == 1
-
-
 def test_event_store_state_survives_restart(spark, tmp_path):
     """A7 last-writer state RECOVERY: run 1 stores CREATED for both
     segments and stops; run 2 (same checkpoint) delivers a STALE
@@ -172,112 +98,49 @@ def test_event_store_state_survives_restart(spark, tmp_path):
     assert sorted(by_seg[SEG_B[4]]) == [("CREATED", 6), ("REMOVED", 9)]
 
 
-def test_event_store_tws_ttl_expiry_survives_restart(spark, tmp_path):
-    """tws ValueState WITH TTL across a kill-and-restart (VERDICT r06 #6):
-    the reference's retention sweep (consistent_segment_store.go:323-397)
-    must hold across recovery — the exact protocol path the protoshim's
-    cascading-lazy-attachment fix protects (state_call_command.ttl.durationMs).
 
-    Scenario EXPIRED (ttl=2s, sleep 6s between runs): run 1 stores
-    CREATED(ts=5) for A; by run 2 the recovered state has EXPIRED, so a
-    STALE REMOVED(ts=3) now WINS and emits — an emission only possible if
-    recovery + TTL eviction both happened.
-
-    Scenario RETAINED (ttl=1h, same cadence): the stale REMOVED is
-    REJECTED — proving tws value state does recover (the expiry above is
-    TTL, not lost state)."""
+def test_event_store_retention_evicts_idle_state(spark, tmp_path):
+    """``retention_ms`` expires an idle segment's state: after A's CREATED
+    (ts=5) has been stored and the retention has passed, a STALE REMOVED
+    (ts=3) for A is emitted — possible only if A's state was evicted (the
+    no-retention control, where the stale event is rejected, is
+    test_event_store_state_survives_restart).  A pending processing-time
+    timeout never lets an availableNow query terminate, so this runs on
+    a processingTime trigger, polls the sink and stops the query."""
     import time
 
-    import pytest
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        pytest.skip("Spark < 4.0: no transformWithState")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf not installed")
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    src = str(tmp_path / "events_src_ttl")
+    spark.createDataFrame(
+        [(*SEG_A, "CREATED", 5)], schema=EVENT_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
+    q = (
+        streaming_event_store(stream, retention_ms=2_000)
+        .writeStream.format("memory")
+        .queryName("event_store_ttl_out")
+        .outputMode("append")
+        .trigger(processingTime="500 milliseconds")
+        .start()
     )
-    # 4 streaming runs × N state partitions × RocksDB instances dominate
-    # wall time — 1-key scenarios need few shuffle partitions (the width is
-    # baked into each checkpoint at query start, so set it BEFORE run 1)
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "4")
 
-    def run_once(src, outdir, cpdir, ttl_ms):
-        # TTL → ProcessingTime timeMode → availableNow never terminates
-        # (empty batches loop after the drain): wait for the run's INPUT
-        # batch to COMMIT (first new file in the checkpoint commits/ log —
-        # availableNow puts all new input in the run's first batch), then
-        # stop.  awaitTermination would hang until its timeout.
-        import os
-        import time
+    def poll(n):
+        deadline = time.time() + 120
+        while True:
+            rows = sorted(
+                (r["event_type"], r["event_ts"])
+                for r in spark.sql("SELECT * FROM event_store_ttl_out").collect()
+            )
+            if len(rows) >= n or time.time() > deadline:
+                return rows
+            time.sleep(0.5)
 
-        def n_commits():
-            d = os.path.join(cpdir, "commits")
-            if not os.path.isdir(d):
-                return 0
-            return len([f for f in os.listdir(d) if f.isdigit()])
-
-        before = n_commits()
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-        q = (
-            streaming_event_store(stream, retention_ms=ttl_ms, engine="tws")
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", cpdir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # Wait for TWO new commits, not one: stop() usually lands with a
-        # PENDING empty batch (offsets written, commit missing), and the
-        # restart replays that empty batch FIRST — its commit would satisfy
-        # a `> before` check before the input file ever ran.  Whichever
-        # order (replayed-empty then input, or input then trailing empty),
-        # by before+2 the input batch has committed.
-        deadline = time.time() + 180
-        while time.time() < deadline and n_commits() < before + 2:
-            time.sleep(1)
-        assert n_commits() >= before + 2, "input batch never committed"
-        q.stop()
-
-    def scenario(tag, ttl_ms, sleep_s):
-        src = str(tmp_path / f"src_{tag}")
-        outdir = str(tmp_path / f"out_{tag}")
-        cpdir = str(tmp_path / f"cp_{tag}")
-        spark.createDataFrame(
-            [(*SEG_A, "CREATED", 5)], schema=EVENT_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-        run_once(src, outdir, cpdir, ttl_ms)
-        time.sleep(sleep_s)
+    try:
+        assert poll(1) == [("CREATED", 5)]
+        time.sleep(5)  # past the 2 s retention: no-data batches evict A
         spark.createDataFrame(
             [(*SEG_A, "REMOVED", 3)], schema=EVENT_SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
-        run_once(src, outdir, cpdir, ttl_ms)
-        return sorted(
-            (r["event_type"], r["event_ts"])
-            for r in spark.read.parquet(outdir).collect()
-        )
-
-    try:
-        expired = scenario("expired", ttl_ms=2_000, sleep_s=6)
-        retained = scenario("retained", ttl_ms=3_600_000, sleep_s=6)
+        rows = poll(2)
     finally:
-        spark.conf.set(shuffle_key, prev_shuffle)
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-
-    # EXPIRED: state recovered then TTL-evicted → the stale REMOVED wins
-    assert expired == [("CREATED", 5), ("REMOVED", 3)], expired
-    # RETAINED: recovered state (ts=5) rejects the stale REMOVED (ts=3)
-    assert retained == [("CREATED", 5)], retained
+        q.stop()
+    assert rows == [("CREATED", 5), ("REMOVED", 3)], rows

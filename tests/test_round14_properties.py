@@ -121,6 +121,38 @@ def test_submodular_replay_matches_distributed(spark, sf_dir):
     assert fast == slow and len(fast) == 5
 
 
+@pytest.mark.parametrize("pool", [1, 4])
+def test_submodular_pool_fallback_matches_default(spark, sf_dir, monkeypatch, pool):
+    """A CELF pool too narrow to certify every pick must hand the query to
+    the exact distributed loop exactly once, and the rows must equal the
+    default run's bit-for-bit.  On the sf0.001 test corpus pool=1 falls
+    back through the "no in-pool gain left" branch (round 2) and pool=4
+    through the bound comparison (round 3)."""
+    import kafka_replicator_spark.queries.pipeline_r6 as r6
+    from kafka_replicator_spark.queries import all_queries
+
+    calls = []
+    distributed = r6._coverage_distributed
+
+    def counting(*a, **k):
+        calls.append(1)
+        return distributed(*a, **k)
+
+    monkeypatch.setattr(r6, "_coverage_distributed", counting)
+    query = all_queries()["p_submodular_coverage"]
+
+    def run():
+        rows = sorted(tuple(r) for r in query.fn(spark, sf_dir).collect())
+        release_cached()
+        return rows
+
+    default = run()
+    assert not calls and len(default) == 5
+    monkeypatch.setattr(r6, "_COV_POOL", pool)
+    assert run() == default
+    assert len(calls) == 1
+
+
 def test_funnel_fused_stage_aggregates(spark, sf_dir):
     """r14 fused funnel: the dedup-stage and quality-stage aggregates ride
     ONE conditional pass over a single cached gate frame (the survivors
