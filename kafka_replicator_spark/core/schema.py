@@ -110,9 +110,10 @@ def conform_segment_data(data, cols: list[str] = SEGMENT_DATA_COLS):
     return type(data).from_arrays(arrays, schema=schema)
 
 
-def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
     """Driver-held metadata ``rows`` (tuples, dicts or Rows in ``schema``
-    order) as a DataFrame over a JVM ``LocalRelation``.
+    order) as a DataFrame over a JVM ``LocalRelation``.  ``schema`` is a
+    ``StructType`` or a DDL string such as ``"pid int, off long"``.
 
     The rows travel as one Arrow table, so a job that reads the frame needs
     no Python worker, a ``collect()`` of it runs no job, and a broadcast of
@@ -121,6 +122,8 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
     ``schema.toInternal`` first, exactly as on that path, so a naive
     datetime maps to the same instant in every process time zone.
     """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
     internal = [schema.toInternal(r) for r in rows]
     if internal:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_replicator_spark.cacheutil import track_cached
+from kafka_replicator_spark.core.schema import local_frame
 
 from kafka_replicator_spark.functions.hashing import (
     hash_family_col,
@@ -506,7 +507,7 @@ def _snm_candidates(
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    off = d.sparkSession.createDataFrame(offsets or [(0, 0)], schema="pid int, off long")
+    off = local_frame(d.sparkSession, offsets or [(0, 0)], "pid int, off long")
     ranked = d.join(F.broadcast(off), "pid").select(
         "doc_id", (F.col("off") + F.col("lrank")).alias("r")
     )
@@ -1032,9 +1033,8 @@ def _two_phase_cc(
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        spark = edges.sparkSession
-        members = spark.createDataFrame(
-            [(v, _find(v)) for v in parent], "node long, comp long"
+        members = local_frame(
+            edges.sparkSession, [(v, _find(v)) for v in parent], "node long, comp long"
         )
         return members, 0
 

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions.text import tokens_col
 
 DEFAULT_PACK_BUDGET = 256
@@ -189,8 +190,10 @@ def pack_assign(toks: DataFrame, budget: int) -> DataFrame:
                     starts + int(r["s_arr"][i0 - 1]),
                     bool(r["st_arr"][i0 - 1]),
                 )
-    entry_df = ranked.sparkSession.createDataFrame(
-        entries, schema="source string, __pid int, eb long, estarts long, eempty boolean"
+    entry_df = local_frame(
+        ranked.sparkSession,
+        entries,
+        "source string, __pid int, eb long, estarts long, eempty boolean",
     )
 
     def assign(pdf: pd.DataFrame) -> pd.DataFrame:

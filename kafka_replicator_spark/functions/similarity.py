@@ -447,6 +447,13 @@ KMEANS_MODEL_SCHEMA = T.StructType(
     ]
 )
 
+#: The :func:`save_kmeans_model` artifact: the model plus its training
+#: hyperparameters as constant metadata columns.
+KMEANS_ARTIFACT_SCHEMA = T.StructType(
+    KMEANS_MODEL_SCHEMA.fields
+    + [T.StructField(c, T.IntegerType()) for c in ("k", "iters", "dim")]
+)
+
 #: :func:`kmeans_train`'s long format: one row per (cluster, dim).
 KMEANS_TRAIN_SCHEMA = T.StructType(
     [
@@ -1135,8 +1142,9 @@ def load_kmeans_model(spark, path: str) -> tuple[DataFrame, dict[str, int]]:
     # comes back as a LOCAL relation: downstream collects (the inline
     # literal-embedding path) are job-free, and the values are the exact
     # parquet doubles either way.  All three validation errors fire on the
-    # same conditions with the same messages.
-    rows = spark.read.parquet(path).collect()
+    # same conditions with the same messages.  The artifact's schema is
+    # fixed, so the read passes it and skips the inference job.
+    rows = spark.read.schema(KMEANS_ARTIFACT_SCHEMA).parquet(path).collect()
     metas = {(int(r["k"]), int(r["iters"]), int(r["dim"])) for r in rows}
     if len(metas) != 1:
         raise ValueError(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions.hashing import (
     P32,
     hash_family_col,
@@ -381,9 +382,7 @@ def histogram_quantiles(lineitem: DataFrame, col: str = "l_extendedprice") -> Da
             Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
         ),
     ).withColumn("cb", F.col("cum") - F.col("cnt"))
-    qs = lineitem.sparkSession.createDataFrame(
-        [(50,), (90,)], schema="quantile_pct int"
-    )
+    qs = local_frame(lineitem.sparkSession, [(50,), (90,)], "quantile_pct int")
     t = cum.join(F.broadcast(qs)).withColumn(
         "target", F.col("quantile_pct") * F.col("n") / F.lit(100.0)
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_replicator_spark.cacheutil import track_cached
+from kafka_replicator_spark.core.schema import local_frame
 
 
 def range_prefix_stitch(
@@ -115,7 +116,7 @@ def range_prefix_stitch(
     if extra_sum_col is not None:
         sdtype = tagged.schema[extra_sum_col].dataType.simpleString()
         schema += f", __sprefix {sdtype}"
-    prefix = tagged.sparkSession.createDataFrame(rows, schema=schema)
+    prefix = local_frame(tagged.sparkSession, rows, schema)
     return tagged, prefix
 
 
@@ -231,7 +232,7 @@ def grouped_rank_cumsum(
     if sum_col is not None:
         schema += f", __sprefix {tagged.schema[sum_col].dataType.simpleString()}"
         schema += ", __nnprefix bigint"
-    prefix = tagged.sparkSession.createDataFrame(rows, schema=schema)
+    prefix = local_frame(tagged.sparkSession, rows, schema)
     w = Window.partitionBy("__pid", group_col).orderBy(*order_cols)
     out = tagged.join(F.broadcast(prefix), ["__pid", group_col]).withColumn(
         "__grank", (F.row_number().over(w) + F.col("__rprefix")).cast("long")

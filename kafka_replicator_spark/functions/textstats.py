@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions.hashing import spread_by_key
 
 _EMPTY_STR_ARRAY = "array<string>"
@@ -217,7 +218,7 @@ def curriculum_buckets(
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    off = d.sparkSession.createDataFrame(offsets, schema="pid int, off long")
+    off = local_frame(d.sparkSession, offsets, "pid int, off long")
     ranked = d.join(F.broadcast(off), "pid").withColumn(
         "rank", F.col("off") + F.col("lrank")
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.queries import register
 from kafka_replicator_spark.sources.tables import load_table
 
@@ -587,10 +588,7 @@ def q_tenure_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max(day) - F.min(day)).cast("long").alias("t")
     )
     n = tenure.agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
-    spark_sess = o.sparkSession
-    thr = spark_sess.createDataFrame(
-        [(t,) for t in _TENURE_THRESHOLDS], "thr bigint"
-    )
+    thr = local_frame(o.sparkSession, [(t,) for t in _TENURE_THRESHOLDS], "thr bigint")
     return (
         tenure.crossJoin(F.broadcast(thr))
         .groupBy("thr")

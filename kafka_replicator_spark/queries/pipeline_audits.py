@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions import dedup, packing, similarity
 from kafka_replicator_spark.queries import register
 from kafka_replicator_spark.sources.tables import load_table
@@ -101,9 +102,7 @@ def q_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = load_table(spark, sf_dir, "documents").select(
         "source", F.size(F.split("text", " ")).cast("long").alias("nt")
     )
-    lim = dl.sparkSession.createDataFrame(
-        [(x,) for x in _TRUNC_LIMITS], "max_len long"
-    )
+    lim = local_frame(dl.sparkSession, [(x,) for x in _TRUNC_LIMITS], "max_len long")
     return (
         dl.join(F.broadcast(lim))
         .groupBy("source", "max_len")
@@ -524,7 +523,7 @@ def vocab_coverage_frame(docs, ks_list) -> DataFrame:
     tot = cg.agg(
         F.sum("toks").alias("total"), F.sum("n_types").alias("n_vocab")
     )
-    ks = docs.sparkSession.createDataFrame([(k,) for k in ks_list], "k long")
+    ks = local_frame(docs.sparkSession, [(k,) for k in ks_list], "k long")
     covered = F.max(
         F.when(F.col("types_before") >= F.col("k"), None)
         .when(
@@ -747,9 +746,7 @@ def q_semantic_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("b_id")
         .agg(F.max("cos").alias("max_cos"))
     )
-    taus = emb.sparkSession.createDataFrame(
-        [(t,) for t in _SEMDEDUP_TAUS], "tau_centi long"
-    )
+    taus = local_frame(emb.sparkSession, [(t,) for t in _SEMDEDUP_TAUS], "tau_centi long")
     dropped = (
         best.join(F.broadcast(taus))
         .where(F.col("max_cos") >= F.col("tau_centi") / 100.0)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_replicator_spark.cacheutil import track_cached
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions.similarity import micro_units, micro_units_sql
 from kafka_replicator_spark.queries import register
 from kafka_replicator_spark.sources.tables import load_table
@@ -402,7 +403,7 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("is_dup"),
     )
-    thr = spark.createDataFrame([(t,) for t in _PR_THRESHOLDS], schema="thr int")
+    thr = local_frame(spark, [(t,) for t in _PR_THRESHOLDS], "thr int")
     cells = (
         dup.crossJoin(F.broadcast(thr))
         .groupBy("thr")
@@ -516,6 +517,7 @@ e{i} AS MATERIALIZED (
 #: dwarfs the work, while the collected frame is ≤ a few MB.  At 100 TB
 #: the kNN graph blows past this and the distributed peel runs.
 _KCORE_SMALL_EDGES = 200_000
+_KCORE_SCHEMA = "round long, n_alive long, n_edges long"
 
 
 @register(
@@ -538,14 +540,14 @@ def q_kcore_peel(
 ) -> DataFrame:
     from kafka_replicator_spark.functions import graph, similarity
 
-    e = track_cached(
-        graph.undirect(
-            similarity.label_knn_graph(load_table(spark, sf_dir, "embeddings"))
-        )
+    e = graph.undirect(
+        similarity.label_knn_graph(load_table(spark, sf_dir, "embeddings"))
     )
-    n_edges = e.count()
-    if n_edges <= small_graph_edges:
-        edges = [(r["u"], r["v"]) for r in e.collect()]
+    # one job answers both "is the graph small?" and "what are its edges?";
+    # a graph past the guard is built once more, by its first cached round
+    head = e.limit(small_graph_edges + 1).collect()
+    if len(head) <= small_graph_edges:
+        edges = [(r["u"], r["v"]) for r in head]
         stats = []
         for i in range(1, _KCORE_ROUNDS + 1):
             deg: dict[int, int] = {}
@@ -555,9 +557,8 @@ def q_kcore_peel(
             alive = {n for n, d in deg.items() if d >= _KCORE_K}
             edges = [(u, v) for u, v in edges if u in alive and v in alive]
             stats.append((i, len(alive), len(edges)))
-        return spark.createDataFrame(
-            stats, schema="round long, n_alive long, n_edges long"
-        )
+        return local_frame(spark, stats, _KCORE_SCHEMA)
+    e = track_cached(e)
     stats = []
     for i in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -577,9 +578,7 @@ def q_kcore_peel(
         # recompute the kNN build for every round's stats; the collected
         # values are 2 scalars per round (metadata-scale)
         stats.append((i, alive.count(), e.count()))
-    return spark.createDataFrame(
-        stats, schema="round long, n_alive long, n_edges long"
-    )
+    return local_frame(spark, stats, _KCORE_SCHEMA)
 
 
 # ---------------------------------------- query-likelihood retrieval
@@ -1226,9 +1225,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked.append((t, best[1], best[2], best[3]))
         sel_ids.add(best[1])
         sel_ems.append(best[4])
-    return spark.createDataFrame(
-        picked, schema="sel_rank long, vec_id long, rel long, maxsim long"
-    )
+    return local_frame(spark, picked, "sel_rank long, vec_id long, rel long, maxsim long")
 
 
 # ------------------------------------------------- quota sampling per cell
@@ -1677,9 +1674,7 @@ def q_lorenz_octiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.expr("sum(CAST(cents AS DECIMAL(38,0)))").alias("total"),
     )
-    cuts = spark.createDataFrame(
-        [(k,) for k in range(1, _LORENZ_CUTS + 1)], schema="k long"
-    )
+    cuts = local_frame(spark, [(k,) for k in range(1, _LORENZ_CUTS + 1)], "k long")
     cutranks = cuts.crossJoin(F.broadcast(nt)).select(
         F.col("k").alias("octile"),
         F.expr(f"CAST((n * k) div {_LORENZ_CUTS} AS BIGINT)").alias("cut_rank"),
@@ -1752,28 +1747,40 @@ c{t} AS MATERIALIZED (
 #: distributed loop, so the pool size is a performance knob, never a
 #: correctness one)
 _COV_POOL = 64
+_COV_SCHEMA = "sel_rank long, doc_id long, gain long, covered_total long"
 
 
-def _coverage_distributed(spark: SparkSession, sh: DataFrame) -> DataFrame:
+def _coverage_argmax(sh: DataFrame, excluded: list[int]) -> tuple[int, int] | None:
+    """One exact distributed greedy round: the (doc_id, gain) with the
+    largest positive marginal gain over the shingles not covered by the
+    ``excluded`` docs (ties to the smaller doc_id), or None when no doc
+    gains anything — one anti-join + doc-grain count + bounded argmax."""
+    rem = sh.filter(~F.col("doc_id").isin(excluded)) if excluded else sh
+    if excluded:
+        cov = sh.filter(F.col("doc_id").isin(excluded)).select("h").distinct()
+        rem = rem.join(F.broadcast(cov), "h", "left_anti")
+    gains = rem.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("gain"))
+    top = gains.filter(F.col("gain") > 0).orderBy(F.desc("gain"), F.asc("doc_id")).head(1)
+    return (top[0]["doc_id"], top[0]["gain"]) if top else None
+
+
+def _coverage_distributed(
+    spark: SparkSession, sh: DataFrame, certified: list[tuple[int, int, int]] | None = None
+) -> DataFrame:
     """The exact distributed greedy loop (the r13 form) — the fallback
     when the CELF pool bound in :func:`q_submodular_coverage` cannot
-    certify a round's argmax: one anti-join + doc-grain count + bounded
-    argmax per round, per-round covered totals deferred to one cumulative
-    min-pick-rank job after the loop."""
-    picked: list[tuple[int, int, int]] = []
-    excluded: list[int] = []
-    for t in range(1, _COV_SELECT + 1):
-        rem = sh.filter(~F.col("doc_id").isin(excluded)) if excluded else sh
-        if excluded:
-            cov = sh.filter(F.col("doc_id").isin(excluded)).select("h").distinct()
-            rem = rem.join(F.broadcast(cov), "h", "left_anti")
-        gains = rem.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("gain"))
-        top = gains.filter(F.col("gain") > 0).orderBy(
-            F.desc("gain"), F.asc("doc_id")
-        ).head(1)
-        if not top:
+    certify a round's argmax.  It resumes after the ``certified``
+    (sel_rank, doc_id, gain) picks of the rounds before, running one
+    :func:`_coverage_argmax` per remaining round; the per-round covered
+    totals of every pick are deferred to one cumulative min-pick-rank job
+    after the loop."""
+    picked = list(certified or ())
+    excluded = [doc for _, doc, _ in picked]
+    for t in range(len(picked) + 1, _COV_SELECT + 1):
+        top = _coverage_argmax(sh, excluded)
+        if top is None:
             break
-        doc, gain = top[0]["doc_id"], top[0]["gain"]
+        doc, gain = top
         picked.append((t, doc, gain))
         excluded.append(doc)
     totals: dict[int, int] = {}
@@ -1795,9 +1802,8 @@ def _coverage_distributed(spark: SparkSession, sh: DataFrame) -> DataFrame:
         for t, _, _ in picked:
             run += by_rank.get(t, 0)
             totals[t] = run
-    return spark.createDataFrame(
-        [(t, doc, gain, totals[t]) for (t, doc, gain) in picked],
-        schema="sel_rank long, doc_id long, gain long, covered_total long",
+    return local_frame(
+        spark, [(t, doc, gain, totals[t]) for (t, doc, gain) in picked], _COV_SCHEMA
     )
 
 
@@ -1835,8 +1841,8 @@ def q_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounds + covered totals replay driver-side in exact Python ints
     # (row counts and set sizes — bit-identical to the distributed jobs).
     # Any round whose bound cannot certify the argmax falls back to the
-    # exact distributed loop; the pool is sized so that never fires at
-    # tested scales.
+    # exact distributed loop, which resumes from the picks already
+    # certified; the pool is sized so that never fires at tested scales.
     g1 = (
         sh.groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("gain"))
@@ -1845,9 +1851,7 @@ def q_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not g1:
-        return spark.createDataFrame(
-            [], schema="sel_rank long, doc_id long, gain long, covered_total long"
-        )
+        return local_frame(spark, [], _COV_SCHEMA)
     pool = [(int(r["doc_id"]), int(r["gain"])) for r in g1[:_COV_POOL]]
     bound = (
         (int(g1[_COV_POOL]["gain"]), int(g1[_COV_POOL]["doc_id"]))
@@ -1877,20 +1881,18 @@ def q_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             # have one (its round-1 gain is ≤ the bound but could be
             # fully uncovered) — only a missing bound proves exhaustion
             if bound is not None:
-                return _coverage_distributed(spark, sh)
+                return _coverage_distributed(spark, sh, [p[:3] for p in picked])
             break
         g, d = -best[0], best[1]
         if bound is not None and not (
             g > bound[0] or (g == bound[0] and d < bound[1])
         ):
             # a non-pool doc with round-1 gain == bound could tie or win
-            return _coverage_distributed(spark, sh)
+            return _coverage_distributed(spark, sh, [p[:3] for p in picked])
         chosen.add(d)
         covered.update(hs[d])
         picked.append((t, d, g, len(covered)))
-    return spark.createDataFrame(
-        picked, schema="sel_rank long, doc_id long, gain long, covered_total long"
-    )
+    return local_frame(spark, picked, _COV_SCHEMA)
 
 
 # ---------------------------------------------- bloom filter FPR audit
@@ -2124,9 +2126,7 @@ def q_session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("user_id").orderBy("t")
     lagged = ev.withColumn("pt", F.lag("t").over(w))
-    gaps = spark.createDataFrame(
-        [(g,) for g in _SESSION_GAPS_MIN], schema="gap_min int"
-    )
+    gaps = local_frame(spark, [(g,) for g in _SESSION_GAPS_MIN], "gap_min int")
     marks = lagged.crossJoin(F.broadcast(gaps)).select(
         "gap_min",
         "user_id",
@@ -3306,9 +3306,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_comm = new.select("lbl").distinct().count()
         stats.append((i, n_changed, n_comm))
         labels = new
-    return spark.createDataFrame(
-        stats, schema="round long, n_changed long, n_communities long"
-    )
+    return local_frame(spark, stats, "round long, n_changed long, n_communities long")
 
 
 # ------------------------------------------------ Cramér's V effect size

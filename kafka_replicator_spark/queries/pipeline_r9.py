@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.schema import local_frame
 from kafka_replicator_spark.functions.hashing import portable_hash60, portable_hash60_sql
 from kafka_replicator_spark.functions.packing import (
     DEFAULT_PACK_BUDGET,
@@ -620,7 +621,7 @@ def q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     spark_sess = emb.sparkSession
-    reached = track_cached(spark_sess.createDataFrame([(0,)], "node bigint"))
+    reached = track_cached(local_frame(spark_sess, [(0,)], "node bigint"))
     prev_n = 1
     rows = []
     for r in range(1, _BFS_ROUNDS + 1):
@@ -632,7 +633,7 @@ def q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = reached.count()  # eager: truncates lineage per round
         rows.append((r, n, n - prev_n))
         prev_n = n
-    return spark_sess.createDataFrame(rows, "round int, n_reached bigint, n_new bigint")
+    return local_frame(spark_sess, rows, "round int, n_reached bigint, n_new bigint")
 
 
 # ------------------------------------------- split token-distribution JS

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_replicator_spark.core.schema import EVENT_CREATED, EVENT_REMOVED
+from kafka_replicator_spark.core.schema import EVENT_CREATED, EVENT_REMOVED, local_frame
 from kafka_replicator_spark.operators.checkpoints import (
     compacted_topic_state,
     latest_checkpoints,
@@ -152,9 +152,10 @@ GROUP BY m.partition_id""",
 )
 def q_resume_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     msgs = events_as_messages(spark, sf_dir)
-    cps = spark.createDataFrame(
+    cps = local_frame(
+        spark,
         [("src", t, p, o, 0) for t, p, o in CP_ROWS],
-        schema="region string, topic string, partition_id int, msg_offset long, ts_ns long",
+        "region string, topic string, partition_id int, msg_offset long, ts_ns long",
     )
     return (
         resume_filter(msgs, cps)
@@ -188,9 +189,10 @@ WHERE cp.cp_offset IS NULL OR s.end_offset > cp.cp_offset""",
 )
 def q_prune_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = _segments(spark, sf_dir)
-    cps = spark.createDataFrame(
+    cps = local_frame(
+        spark,
         [("src", t, p, o, 0) for t, p, o in CP_ROWS],
-        schema="region string, topic string, partition_id int, msg_offset long, ts_ns long",
+        "region string, topic string, partition_id int, msg_offset long, ts_ns long",
     )
     return prune_processed_segments(segs, cps).select(
         "topic", "partition_id", "segment_seq", "start_offset", "end_offset"
@@ -2447,7 +2449,8 @@ def q_x5_checkpoint_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts_ns",
         )
     )
-    mat = spark.createDataFrame(
+    mat = local_frame(
+        spark,
         [
             ("matrix", "local", "matrix", i, off, 0 if i == 0 else _X5_TS_NS)
             for i, off in enumerate(_X5_BOUNDARY_OFFSETS)
@@ -3000,10 +3003,7 @@ def q_compaction_past_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         segs, min_level=0, max_level=0, min_count=2,
         max_count=1_000_000, min_bytes=1, max_bytes=1 << 60,
     )
-    cps = spark.createDataFrame(
-        list(CP_ROWS),
-        schema="topic string, partition_id int, cp_offset long",
-    )
+    cps = local_frame(spark, CP_ROWS, "topic string, partition_id int, cp_offset long")
     j = plan.join(F.broadcast(cps), ["topic", "partition_id"], "left")
     delivered = F.col("cp_offset").isNotNull() & (
         F.col("end_offset") <= F.col("cp_offset")

@@ -3,11 +3,19 @@
 One parquet file per table at ``{sf_dir}/{name}.parquet``.  Reading goes
 through ``spark.read.parquet`` so Catalyst gets pushdown/pruning; never
 collect these to the driver.
+
+Schema inference is a Spark job (a footer read per file), so the inferred
+schema of each table file is memoized: the first read of a file infers,
+later reads pass the memo through ``.schema(...)`` and run no job.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -22,6 +30,18 @@ TABLES = (
     "embeddings",
 )
 
+#: Session confs that Parquet schema inference reads; a memoized schema is
+#: reused only under the values it was inferred with.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: (absolute path, size, mtime_ns, *inference conf values) -> inferred schema
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -35,10 +55,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (as-of join) and window alignment must agree regardless of the
     # driver session's local timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    df = _read_parquet_file(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         df = _normalize_event_ts(df)
     return df
+
+
+def _read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema of a local file
+    only on its first read.  The memo key is the file's identity (path,
+    size, mtime) plus the confs inference depends on, so a rewritten file or
+    a changed conf infers again; the memo holds exactly the inferred schema.
+    A path that is not a local regular file is read plainly."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        *(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -5,14 +5,18 @@ Pins the Arrow construction against the Python-RDD construction it
 replaced (``spark.createDataFrame(rows, schema)``) for every schema it
 serves, in a UTC and a non-UTC process time zone, and pins the structural
 gain: collecting a listing, a compaction result or a driver-built k-means
-model runs no Spark job.
+model runs no Spark job.  A static check keeps every other list-built
+frame out of the package.
 """
 
+import ast
 import os
 import time
 import uuid
 from contextlib import contextmanager
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta
+from decimal import Decimal
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -108,6 +112,53 @@ CASES = {
         RETRAIN_DECISION_SCHEMA,
         [(0, 31, 1250, 1), (5, 0, 0, 0)],
     ),
+    # the DDL strings the query-side call sites pass, with rows shaped like
+    # theirs (the single-column threshold frames share two shapes)
+    "rank_offsets": ("pid int, off long", [(0, 0), (3, 12345678901)]),
+    "cc_members": ("node long, comp long", [(5, 1), (2**40, 2**40)]),
+    "pack_entries": (
+        "source string, __pid int, eb long, estarts long, eempty boolean",
+        [("web", 0, 10, 2, True), ("news", 3, -1, 0, False)],
+    ),
+    "stitch_decimal": (
+        "__pid int, __prefix decimal(38,2), __sprefix bigint",
+        [(0, Decimal(0), 0), (1, Decimal("12.34"), 7), (2, None, 7)],
+    ),
+    "stitch_double": ("__pid int, __prefix double", [(0, None), (1, -0.0), (2, 1e300)]),
+    "stitch_timestamp": (
+        "__pid int, __prefix timestamp",
+        [(0, None), (1, datetime(2026, 3, 8, 2, 30)), (2, datetime(2026, 7, 1, 12, 0, 0, 5))],
+    ),
+    "grouped_prefix": (
+        "__pid int, g date, __rprefix bigint, __sprefix decimal(38,0), __nnprefix bigint",
+        [(0, date(1995, 3, 15), 0, Decimal(0), 0), (1, date(2026, 11, 1), 9, Decimal(-41), 8)],
+    ),
+    "threshold_int": ("thr int", [(1,), (500,), (2**31 - 1,)]),
+    "threshold_long": ("k long", [(1,), (8,)]),
+    "checkpoints": (
+        "region string, topic string, partition_id int, msg_offset long, ts_ns long",
+        [("src", "events", 0, 100, 0), ("src", "events", 1, 50, 0)],
+    ),
+    "checkpoint_matrix": (
+        "part string, region string, topic string, partition_id int, "
+        "msg_offset long, ts_ns long",
+        [("matrix", "local", "matrix", 0, 0, 0), ("matrix", "local", "matrix", 1, 2**63 - 1, 7)],
+    ),
+    "checkpoint_lookup": (
+        "topic string, partition_id int, cp_offset long",
+        [("events", 0, 100), ("events", 1, 50)],
+    ),
+    "bfs_rounds": ("round int, n_reached bigint, n_new bigint", [(1, 12, 11), (2, 12, 0)]),
+    "kcore_rounds": ("round long, n_alive long, n_edges long", [(1, 40, 300), (2, 0, 0)]),
+    "coverage": (
+        "sel_rank long, doc_id long, gain long, covered_total long",
+        [(1, 17, 120, 120), (2, 3, 40, 160)],
+    ),
+    "mmr": (
+        "sel_rank long, vec_id long, rel long, maxsim long",
+        [(1, 5, 900, -1), (2, 9, 850, 12)],
+    ),
+    "label_rounds": ("round long, n_changed long, n_communities long", [(1, 30, 7)]),
 }
 
 
@@ -122,10 +173,34 @@ def test_local_frame_matches_python_rows(spark, process_tz, case, empty):
     new = local_frame(spark, rows, schema)
     assert new.select("*").schema == old.select("*").schema
     assert new.collect() == old.collect()
-    if "modified_ts" in schema.names:
-        # the same instant, not just the same wall time read back
-        micros = F.unix_micros("modified_ts")
-        assert new.select(micros).collect() == old.select(micros).collect()
+    for f in old.schema:
+        if f.dataType.typeName() == "timestamp":
+            # the same instant, not just the same wall time read back
+            micros = F.unix_micros(f.name)
+            assert new.select(micros).collect() == old.select(micros).collect()
+
+
+def test_no_list_built_frames_outside_local_frame():
+    """Every driver-built frame goes through ``local_frame``: the package
+    holds no other ``createDataFrame(...)`` or ``.parallelize(...)`` call."""
+    root = Path(__file__).resolve().parents[1] / "kafka_replicator_spark"
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("createDataFrame", "parallelize")
+            ):
+                calls.append((str(path.relative_to(root)), node.lineno))
+    fn = next(
+        n
+        for n in ast.walk(ast.parse((root / "core" / "schema.py").read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    assert len(calls) == 1, calls
+    rel, line = calls[0]
+    assert rel == "core/schema.py" and fn.lineno <= line <= fn.end_lineno, calls
 
 
 def test_age_gate_selects_the_same_rows(spark, process_tz):

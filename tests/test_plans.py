@@ -819,6 +819,29 @@ def test_kcore_driver_and_distributed_paths_agree(spark, sf_dir):
     assert fast == slow, (fast, slow)
 
 
+def test_kcore_guard_boundary_agrees(spark, sf_dir):
+    """At ``small_graph_edges`` = the graph's edge count the peel runs on
+    the driver (one collect, nothing cached); one below it, the
+    distributed peel runs on the cached edge frame.  Same rows."""
+    from kafka_replicator_spark.cacheutil import _TRACKED, release_cached
+    from kafka_replicator_spark.functions import graph, similarity
+    from kafka_replicator_spark.queries.pipeline_r6 import q_kcore_peel
+    from kafka_replicator_spark.sources.tables import load_table
+
+    release_cached()
+    n_edges = graph.undirect(
+        similarity.label_knn_graph(load_table(spark, sf_dir, "embeddings"))
+    ).count()
+    release_cached()
+    rows = {}
+    for limit, driver in ((n_edges, True), (n_edges - 1, False)):
+        df = q_kcore_peel(spark, sf_dir, small_graph_edges=limit)
+        assert (not _TRACKED) == driver, limit
+        rows[driver] = sorted(tuple(r) for r in df.collect())
+        release_cached()
+    assert rows[True] == rows[False] and len(rows[True]) == 3
+
+
 def test_hard_negatives_two_phase_topk(spark, sf_dir):
     spark.catalog.clearCache()
     df = QUERIES["p_hard_negatives"].fn(spark, sf_dir)

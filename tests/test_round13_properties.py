@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from kafka_replicator_spark.cacheutil import release_cached
 from kafka_replicator_spark.functions import similarity as sim
 from kafka_replicator_spark.sources.tables import load_table
+from tests.test_local_frame import _jobs_launched
 
 
 @pytest.fixture(autouse=True)
@@ -49,13 +50,16 @@ def test_kmeans_model_save_load_roundtrip(spark, sf_dir, tmp_path):
     bit-exactly — save → load returns the identical (cluster, cd) rows
     and the training metadata, and assignment from the LOADED frame is
     bit-identical to assignment from the in-lineage frame.  The artifact
-    is one part file."""
+    is one part file, and the load reads it with its fixed schema in one
+    job (no schema-inference job)."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=8, iters=2)
     path = str(tmp_path / "kmeans")
     sim.save_kmeans_model(model, path, n_clusters=8, iters=2, dim=64)
     assert len(list((tmp_path / "kmeans").glob("part-*"))) == 1
-    loaded, meta = sim.load_kmeans_model(spark, path)
+    with _jobs_launched(spark) as n:
+        loaded, meta = sim.load_kmeans_model(spark, path)
+    assert n == [1]
     assert meta == {"n_clusters": 8, "iters": 2, "dim": 64}
     want = sorted((r["cluster"], tuple(r["cd"])) for r in model.collect())
     got = sorted((r["cluster"], tuple(r["cd"])) for r in loaded.collect())

@@ -127,18 +127,26 @@ def test_submodular_pool_fallback_matches_default(spark, sf_dir, monkeypatch, po
     the exact distributed loop exactly once, and the rows must equal the
     default run's bit-for-bit.  On the sf0.001 test corpus pool=1 falls
     back through the "no in-pool gain left" branch (round 2) and pool=4
-    through the bound comparison (round 3)."""
+    through the bound comparison (round 3).  The fallback resumes from the
+    t-1 certified picks: it runs only rounds t.._COV_SELECT."""
     import kafka_replicator_spark.queries.pipeline_r6 as r6
     from kafka_replicator_spark.queries import all_queries
 
     calls = []
+    rounds = []
     distributed = r6._coverage_distributed
+    argmax = r6._coverage_argmax
 
-    def counting(*a, **k):
-        calls.append(1)
-        return distributed(*a, **k)
+    def counting(spark, sh, certified=None):
+        calls.append(len(certified or ()) + 1)  # the round that fell back
+        return distributed(spark, sh, certified)
+
+    def counting_argmax(*a, **k):
+        rounds.append(1)
+        return argmax(*a, **k)
 
     monkeypatch.setattr(r6, "_coverage_distributed", counting)
+    monkeypatch.setattr(r6, "_coverage_argmax", counting_argmax)
     query = all_queries()["p_submodular_coverage"]
 
     def run():
@@ -147,10 +155,12 @@ def test_submodular_pool_fallback_matches_default(spark, sf_dir, monkeypatch, po
         return rows
 
     default = run()
-    assert not calls and len(default) == 5
+    assert not calls and not rounds and len(default) == 5
     monkeypatch.setattr(r6, "_COV_POOL", pool)
     assert run() == default
-    assert len(calls) == 1
+    t = {1: 2, 4: 3}[pool]
+    assert calls == [t]
+    assert len(rounds) == r6._COV_SELECT - t + 1
 
 
 def test_funnel_fused_stage_aggregates(spark, sf_dir):
