@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_replicator_spark.core.schema import (
-    SEGMENT_DATA_COLS,
     WRITTEN_SEGMENT_SCHEMA,
     conform_segment_data,
     local_frame,
@@ -264,76 +263,39 @@ def merge_segments(
     def merge_task(spec_table):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from kafka_replicator_spark.operators.egress import _publish_segment_table
 
         spec = spec_table.to_pylist()[0]
         c_lo, c_hi = spec["chunk_lo"], spec["chunk_hi"]
-        srt = sorted(zip(spec["starts"], spec["ends"], spec["levels"], spec["paths"]))
-        plain_parts = []
-        for s, e, lvl, path in srt:
-            t = pq.read_table(
-                path,
-                filters=[("msg_offset", ">=", c_lo), ("msg_offset", "<=", c_hi)],
-            )
-            plain_parts.append((s, e, lvl, conform_segment_data(t)))
-        # r13 opt: when the input extents are DISJOINT (metadata check — the
-        # steady egress case: greedy assignment emits non-overlapping
-        # segments) and every file is internally strictly offset-sorted (the
-        # writer invariant, verified per file with one vectorized pass),
-        # concatenating the files in start order IS the sorted, duplicate-
-        # free result — the full-table sort gather, the three per-row
-        # heap-key constant columns and the dedup mask are all no-ops.
-        # Overlapping listings (the compaction-of-overlaps case the r_*
-        # steady-state queries exercise) take the original heap-order path.
-        disjoint = all(srt[i + 1][0] > srt[i][1] for i in range(len(srt) - 1))
-        if disjoint:
-            # Data-level verification (ADVICE r13): the metadata extents are
-            # filename-derived, so a legacy/foreign segment whose rows exceed
-            # its named extent could slip duplicates past the concat.  The
-            # offset arrays are already materialized for the sortedness
-            # check, so also require each part's actual last offset < the
-            # next part's actual first offset — essentially free.
-            prev_last = None
-            for _s, _e, _lvl, part in plain_parts:
-                po = part.column("msg_offset").to_numpy()
-                if len(po) == 0:
-                    continue
-                if len(po) > 1 and not (po[1:] > po[:-1]).all():
-                    disjoint = False
-                    break
-                if prev_last is not None and po[0] <= prev_last:
-                    disjoint = False
-                    break
-                prev_last = po[-1]
-        if disjoint:
-            out = pa.concat_tables([p for _, _, _, p in plain_parts])
-        else:
-            parts = [
-                part.append_column("__s", pa.array([s] * part.num_rows, pa.int64()))
-                .append_column("__e", pa.array([e] * part.num_rows, pa.int64()))
-                .append_column("__l", pa.array([lvl] * part.num_rows, pa.int64()))
-                for s, e, lvl, part in plain_parts
+        # parts in heap order (start asc, end desc, level asc —
+        # utils/heap.go:71-91; path breaks the last ties)
+        heap = sorted(
+            zip(spec["starts"], spec["ends"], spec["levels"], spec["paths"]),
+            key=lambda f: (f[0], -f[1], f[2], f[3]),
+        )
+        out = pa.concat_tables(
+            [
+                conform_segment_data(
+                    pq.read_table(
+                        path, filters=[("msg_offset", ">=", c_lo), ("msg_offset", "<=", c_hi)]
+                    )
+                )
+                for _s, _e, _lvl, path in heap
             ]
-            merged = pa.concat_tables(parts)
-            # heap-order winner picking for overlaps (start asc, end desc,
-            # level asc per offset — utils/heap.go:71-91), then
-            # first-per-offset
-            merged = merged.sort_by(
-                [
-                    ("msg_offset", "ascending"),
-                    ("__s", "ascending"),
-                    ("__e", "descending"),
-                    ("__l", "ascending"),
-                ]
-            )
-            offs = merged.column("msg_offset").to_numpy()
-            if len(offs):
-                keep = np.concatenate([[True], offs[1:] != offs[:-1]])
-                if not keep.all():
-                    merged = merged.filter(pa.array(keep))
-            out = merged.select(SEGMENT_DATA_COLS)
+        )
+        # Strictly increasing offsets (disjoint parts, the steady egress case)
+        # are already the merged result.  The test reads the data, not the
+        # filename extents, so an extent-lying file takes the sort: a stable
+        # sort keeps heap order among the copies of one offset, and the first
+        # copy wins.
+        offs = out.column("msg_offset").to_numpy()
+        if not (offs[1:] > offs[:-1]).all():
+            out = out.take(pc.sort_indices(out, sort_keys=[("msg_offset", "ascending")]))
+            offs = out.column("msg_offset").to_numpy()
+            out = out.filter(pa.array(np.concatenate([[True], offs[1:] != offs[:-1]])))
         return _publish_segment_table(
             out, root=root, region=region, topic=spec["topic"],
             partition_id=int(spec["partition_id"]), level=int(spec["out_level"]),

@@ -330,10 +330,12 @@ def run_ingress_stream(
                         state.late_counts[key] = state.late_counts.get(key, 0) + 1
                         state.gap_since_ts.setdefault(key, now_s)
                         bumped = True
+                    # after a lost-skip both readings are cleared, so a second
+                    # gap in the batch reads as fresh and is held
                     escalate = (
                         now_s - state.gap_since_ts.get(key, now_s) > lost_timeout_s
                         if lost_timeout_s is not None
-                        else state.late_counts[key] > max_gap_retries
+                        else state.late_counts.get(key, 0) > max_gap_retries
                     )
                     if escalate and not lost_skip_used:
                         state.messages_lost += r["lo"] - (frontier + 1)  # T7
@@ -384,51 +386,21 @@ def run_ingress_stream(
                     err_state.save()
                     raise
                 # §2.11 meters: produced count + replication lag per partition
-                # (A3 min-ts over the produced batch, reference worker.go:438-448).
-                # Derived driver-side from the per-file aggregates already in
-                # ``ranges`` whenever that is provably exact: with pairwise
-                # disjoint per-partition file extents and no file straddling the
-                # frontier, every row of a file with hi <= frontier — and no
-                # other row — satisfies the delivery filter, so the per-file sums
-                # equal the delivered-frame aggregate.  Extents here are
-                # post-dedup/post-trim DATA extents (min/max over actual rows),
-                # so the equivalence needs no trust in filenames.  Any overlap or
-                # straddle falls back to the aggregate-over-``out`` collect.
-                import time as _time
-
-                now_ns = _time.time_ns()
-                fast_meters: dict[str, tuple[int, int | None]] = {}
-                for key in frontiers:
-                    rs = sorted(by_part.get(key, []), key=lambda r: r["lo"])
-                    frontier = frontiers[key]
-                    if any(b["lo"] <= a["hi"] for a, b in zip(rs, rs[1:])) or any(
-                        r["lo"] <= frontier < r["hi"] for r in rs
-                    ):
-                        fast_meters = {}
-                        break
-                    delivered = [r for r in rs if r["hi"] <= frontier]
-                    n = sum(int(r["n_rows"]) for r in delivered)
-                    ts = [int(r["min_ts"]) for r in delivered if r["min_ts"] is not None]
-                    fast_meters[key] = (n, min(ts) if ts else None)
-                if fast_meters:
-                    for key, (n, min_ts) in fast_meters.items():
-                        if n == 0:
-                            continue
-                        state.messages_produced[key] = (
-                            state.messages_produced.get(key, 0) + n
-                        )
-                        if min_ts is not None:
-                            state.last_lag_ns[key] = now_ns - min_ts
-                else:
-                    for m in (
-                        out.groupBy("topic", "partition_id")
-                        .agg(F.count(F.lit(1)).alias("n"), F.min("ts_ns").alias("min_ts"))
-                        .collect()
-                    ):
-                        key = f"{m['topic']}/{m['partition_id']}"
-                        state.messages_produced[key] = state.messages_produced.get(key, 0) + m["n"]
-                        if m["min_ts"] is not None:
-                            state.last_lag_ns[key] = now_ns - int(m["min_ts"])
+                # (A3 min-ts over the produced batch, reference worker.go:438-448),
+                # summed from ``ranges``.  Exact: ``ranges`` groups the
+                # deduplicated batch, so its files partition the delivered rows,
+                # and the walk never leaves a file straddling the frontier
+                # (absorbed files end at or below it, held files start above it,
+                # a lost-skip moves it to the skipped file's ``hi``).
+                now_ns = _time_mod.time_ns()
+                for key, frontier in frontiers.items():
+                    delivered = [r for r in by_part[key] if r["hi"] <= frontier]
+                    state.messages_produced[key] = state.messages_produced.get(key, 0) + sum(
+                        r["n_rows"] for r in delivered
+                    )
+                    ts = [r["min_ts"] for r in delivered if r["min_ts"] is not None]
+                    if ts:
+                        state.last_lag_ns[key] = now_ns - int(min(ts))
             state.save()  # T8 checkpoint-per-batch
         finally:
             # release the batch cache on every path, including a failure

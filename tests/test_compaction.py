@@ -390,6 +390,57 @@ def test_disjoint_fast_path_rejects_extent_lying_file(spark, tmp_path):
     assert payloads[13:] == [f"value_{o}".encode() for o in range(13, 20)]
 
 
+def test_overlap_winner_is_heap_order_on_distinct_payloads(spark, tmp_path):
+    """Each input file carries its own payloads, so the merged output shows
+    which copy of an offset won: on a shared start the longer file, on
+    identical extents the lower level (utils/heap.go:71-91) — the same
+    winner ``read_segment_files(dedup_overlaps=True)`` picks."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_replicator_spark.core.codec import SegmentId, format_segment_path
+    from kafka_replicator_spark.core.schema import SEGMENT_DATA_ARROW
+
+    root = str(tmp_path)
+    inputs = []
+    for tag, level, start, end in [
+        ("short", 0, 0, 9), ("long", 0, 0, 14), ("low", 0, 15, 24), ("high", 1, 15, 24),
+    ]:
+        offs = list(range(start, end + 1))
+        path = format_segment_path(root, SegmentId(REGION, "t", 0, level, start, end))
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(
+            pa.table(
+                {
+                    "msg_offset": offs,
+                    "msg_key": [f"key_{o}".encode() for o in offs],
+                    "payload": [f"{tag}_{o}".encode() for o in offs],
+                    "ts_ns": [1_553_000_000_000 + o for o in offs],
+                    "headers": [None] * len(offs),
+                },
+                schema=SEGMENT_DATA_ARROW,
+            ),
+            path,
+        )
+        inputs.append(path)
+    expected = [
+        r["payload"]
+        for r in read_segment_files(spark, inputs, dedup_overlaps=True)
+        .orderBy("msg_offset").select("payload").collect()
+    ]
+    assert expected == [f"long_{o}".encode() for o in range(15)] + [
+        f"low_{o}".encode() for o in range(15, 25)
+    ]
+
+    out = compact(spark, root, region=REGION, max_level=1, min_count=2, min_bytes=1).collect()
+    assert len(out) == 1 and out[0]["level"] == 2 and out[0]["message_count"] == 25
+    t = pq.read_table(out[0]["path"])
+    assert t.column("msg_offset").to_pylist() == list(range(25))
+    assert t.column("payload").to_pylist() == expected
+
+
 def test_writer_fallback_sorts_shuffled_group(tmp_path):
     """ADVICE r13: the segment writer's sort is skipped when the group
     arrives strictly offset-ascending — this pins the FALLBACK branch (an

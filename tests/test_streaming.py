@@ -453,43 +453,70 @@ def test_ingress_failure_before_sink_write_releases_batch_cache(spark, tmp_path)
     assert got == [(0, o) for o in range(100)] + [(1, o) for o in range(30)]
 
 
+#: the gap layout shared by the held-gap and lost-skip cases: 50-59 missing
+_GAPPED = {(0, 0, 49): range(50), (0, 60, 99): range(60, 100), (1, 0, 29): range(30)}
+
+
 @pytest.mark.parametrize(
-    "layout",
+    "layout, kwargs, sink_rows",
     [
-        # disjoint extents: the meters are derived driver-side from the
-        # per-file aggregates
-        {(0, 0, 49): range(50), (0, 50, 99): range(50, 100), (1, 0, 29): range(30)},
-        # no shared offsets, but the extents 0-99 and 50-149 overlap: the
-        # meters fall back to the aggregate over the delivered frame
-        {
-            (0, 0, 99): [*range(50), *range(60, 100)],
-            (0, 50, 149): [*range(50, 60), *range(100, 150)],
-            (1, 0, 29): range(30),
-        },
+        (
+            {(0, 0, 49): range(50), (0, 50, 99): range(50, 100), (1, 0, 29): range(30)},
+            {},
+            {0: 100, 1: 30},
+        ),
+        # no shared offsets, but the extents 0-99 and 50-149 overlap
+        (
+            {
+                (0, 0, 99): [*range(50), *range(60, 100)],
+                (0, 50, 149): [*range(50, 60), *range(100, 150)],
+                (1, 0, 29): range(30),
+            },
+            {},
+            {0: 150, 1: 30},
+        ),
+        # a true rewind: offsets 40-59 are in both files, and either copy
+        # may survive the dedup, so the post-dedup extents can overlap
+        (
+            {(0, 0, 59): range(60), (0, 40, 99): range(40, 100), (1, 0, 29): range(30)},
+            {},
+            {0: 100, 1: 30},
+        ),
+        # partial delivery: the file above the gap is held for a retry
+        (_GAPPED, {}, {0: 50, 1: 30}),
+        # the gap is skipped as lost on the first retry
+        (_GAPPED, {"max_gap_retries": 0}, {0: 90, 1: 30}),
+        # two gaps: the first is skipped as lost, the second is held
+        (
+            {(0, 0, 9): range(10), (0, 20, 29): range(20, 30), (0, 40, 49): range(40, 50)},
+            {"max_gap_retries": 0},
+            {0: 20},
+        ),
     ],
-    ids=["driver_derived", "aggregate_fallback"],
+    ids=[
+        "driver_derived", "overlapping_extents", "shared_offsets", "held_gap", "lost_skip",
+        "lost_skip_then_held",
+    ],
 )
-def test_ingress_meters_conserve_delivered_rows(spark, tmp_path, layout):
+def test_ingress_meters_conserve_delivered_rows(spark, tmp_path, layout, kwargs, sink_rows):
     """``messages_produced`` equals the rows the sink received per
-    partition, and every delivered partition has a lag reading, on both
-    branches of the meter derivation."""
+    partition, and every delivered partition has a lag reading, whatever
+    the file layout: overlapping extents, shared offsets, a held gap or a
+    lost-skip."""
     seg_root = str(tmp_path / "segs")
     for (pid, start, end), offsets in layout.items():
         _write_segment(seg_root, pid, start, end, list(offsets))
     sink, state_path = str(tmp_path / "sink"), str(tmp_path / "state.json")
-    run_ingress_stream(spark, seg_root, sink, str(tmp_path / "cp"), state_path)
+    run_ingress_stream(spark, seg_root, sink, str(tmp_path / "cp"), state_path, **kwargs)
 
     delivered = spark.read.parquet(sink)
     sink_counts = {
         f"events/{r['partition_id']}": r["count"]
         for r in delivered.groupBy("partition_id").count().collect()
     }
-    expected = {}
-    for (pid, _s, _e), offsets in layout.items():
-        expected[f"events/{pid}"] = expected.get(f"events/{pid}", 0) + len(offsets)
-    assert sink_counts == expected
+    assert sink_counts == {f"events/{pid}": n for pid, n in sink_rows.items()}
     assert delivered.select("partition_id", "msg_offset").distinct().count() == sum(
-        expected.values()
+        sink_rows.values()
     )
     state = IngressState.load(state_path)
     assert state.messages_produced == sink_counts
