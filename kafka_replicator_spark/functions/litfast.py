@@ -1,11 +1,10 @@
 """Fast array literals for plan embedding (r13 optimization).
 
 ``F.lit(<python list>)`` converts ELEMENT BY ELEMENT through py4j —
-~1 ms per element, so a 16x64 nested centroid array costs ~1 s of pure
-driver time PER CALL (measured; the trained-model family paid it once
-per Lloyd iteration plus once per serve argmin, 2-3 s per query).  One
-``F.expr`` over the SQL rendering of the same array is a single gateway
-call (~150x faster measured) and produces BIT-IDENTICAL values:
+~1 ms per element, so a 1024-long bloom block list costs ~1 s of pure
+driver time PER CALL (measured).  One ``F.expr`` over the SQL rendering
+of the same array is a single gateway call (~150x faster measured) and
+produces BIT-IDENTICAL values:
 
 * doubles: Python ``repr()`` emits the shortest decimal that round-trips
   the IEEE-754 double, and Spark's parser reads the ``...D`` literal back
@@ -54,16 +53,3 @@ def lit_doubles(xs: Iterable[float]) -> Column:
         return F.lit(xs)
     return F.expr("array(" + body + ")")
 
-
-def lit_doubles2d(rows: Iterable[Iterable[float]]) -> Column:
-    """ARRAY<ARRAY<DOUBLE>> literal, bit-identical to ``F.lit(nested)``."""
-    rows = [[float(x) for x in row] for row in rows]
-    try:
-        body = ",".join(
-            "array(" + ",".join(_d(x) for x in row) + ")" for row in rows
-        )
-    except ValueError:
-        return F.lit(rows)
-    if not rows or any(not row for row in rows):
-        return F.lit(rows)
-    return F.expr("array(" + body + ")")

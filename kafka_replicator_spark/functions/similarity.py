@@ -27,11 +27,7 @@ from pyspark.sql.column import Column
 
 from kafka_replicator_spark.cacheutil import track_cached
 from kafka_replicator_spark.core.schema import local_frame
-from kafka_replicator_spark.functions.litfast import (
-    lit_doubles,
-    lit_doubles2d,
-    lit_longs,
-)
+from kafka_replicator_spark.functions.litfast import lit_doubles
 
 
 def _spread_emb(embeddings: DataFrame) -> DataFrame:
@@ -435,10 +431,6 @@ FROM ranked WHERE rank <= {k}
 
 # ------------------------------------------------------- k-means training
 
-#: Largest k·dim the model family embeds as plan literals; above it the
-#: distributed window/join paths run, with bit-identical output.
-_INLINE_MAX_LITERALS = 65536
-
 #: The broadcast-ready model: one row per cluster, components as doubles.
 KMEANS_MODEL_SCHEMA = T.StructType(
     [
@@ -503,157 +495,109 @@ def _micro_sum_rows(frame: DataFrame, keys: list[str]) -> list[tuple]:
     ]
 
 
-def _kmeans_inline_final_sums(
-    embeddings: DataFrame,
-    k: int,
-    iters: int,
-    snapshots: dict[int, list[tuple[int, int, int, int]]] | None = None,
-) -> list[tuple[int, int, int, int]] | None:
-    """THE one driver-driven inline Lloyd loop (VERDICT r12 #4), shared by
-    :func:`kmeans_train` and :func:`kmeans_model`: each iteration's
-    centroids are K rows of metadata, so they are collected and embedded
-    as literal arrays, and the per-vector argmin is ONE whole-stage-codegen
-    map expression (``array_min`` over a transform of the K cells) — no
-    N·K row inflation, no groupBy(vec_id) shuffle, no join-back.
+def _centroids(spark, rows: list[tuple[int, list[float]]]) -> Column:
+    """The nearest-centroid kernel's model: the k (cluster, cd) rows, sorted
+    by cluster, as ONE :func:`local_frame` row (ids, cds, ccs) read through
+    a scalar subquery over that LocalRelation.  The model has no plan-
+    literal size limit and needs no join at any k·dim, and reading it runs
+    no job.  ``ccs`` holds each centroid's self-dot folded driver-side by
+    :func:`_py_dot` — IEEE-identical to :func:`dot_col` over the same
+    doubles.
 
-    Returns the FINAL iteration's per-(cluster, dim) integer component
-    sums as driver rows ``[(cluster, dim, s_micro, n_members), ...]``
-    sorted by (cluster, dim) — every downstream model/centroid derivation
-    is a pure-integer driver fold over them — or ``None`` on an empty
-    corpus (empty literal arrays have no type; callers fall back to the
-    window/join path, which reproduces the empty output).
-
-    One collect per iteration (k·dim rows each) plus the k-row init
-    collect; bit-identity with the window path is pinned by
-    test_kmeans_train_inline_matches_window_path.
-
-    ``snapshots`` (r13 optimization): a caller-owned dict that receives
-    {iter_count: final sums after that many iterations} for every key it
-    is pre-seeded with — a Lloyd run at ``iters`` computes every prefix's
-    sums anyway (each iteration's collect feeds the next centroids), so
-    an iteration-ladder consumer trains ONCE instead of once per rung;
-    each prefix's sums are exactly the sums its own shorter run returns.
-    """
-    _require_iters(iters)
-    emb = track_cached(  # scanned once per iteration; tracked so sweep/
-        # bench harnesses can release it between queries (this loop
-        # materializes it EAGERLY at construction via the init collect)
-        _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
-    )
-    # r14 opt (fresh-plan floor): the init is "the first k vectors by
-    # vec_id, micro-quantized" — collect the k (vec_id, e) rows via the
-    # distributed TakeOrdered and enumerate/quantize DRIVER-side instead
-    # of a row_number window + per-element column floor (the window form
-    # compiled to 3 tiny AQE jobs per training run).  vec_id is unique, so
-    # enumeration in vec_id order IS row_number-1; Python's
-    # math.floor(x * 1e6 + 0.5) over the collected double is the exact
-    # IEEE twin of the column expression (same mul/add/floor sequence).
-    init_rows = sorted(
-        (int(r["vec_id"]), [float(x) for x in r["e"]])
-        for r in emb.orderBy("vec_id").limit(k).collect()
-    )
-    cm_rows = [
-        (i, [math.floor(x * 1e6 + 0.5) for x in e])
-        for i, (_vid, e) in enumerate(init_rows)
-    ]
-    if not cm_rows:
-        return None
-    final: list[tuple[int, int, int, int]] = []
-    for it in range(iters):
-        cds = [[m / 1e6 for m in cm] for _, cm in cm_rows]
-        # litfast renderings are bit-identical to F.lit (see litfast.py)
-        # and ~150x cheaper to construct — this ran once per iteration
-        ids = lit_longs(c for c, _ in cm_rows)
-        cdl = lit_doubles2d(cds)
-        ccs = lit_doubles(_py_dot(cd, cd) for cd in cds)
-        scored_arr = F.transform(
-            F.sequence(F.lit(0), F.lit(len(cm_rows) - 1)),
-            lambda i: F.struct(
-                (
-                    F.col("ee")
-                    - 2 * dot_col(F.col("e"), F.get(cdl, i))
-                    + F.get(ccs, i)
-                ).alias("d"),
-                F.get(ids, i).cast("long").alias("c"),
-            ),
+    Spark rejects a subquery inside a lambda, so callers project the
+    returned struct into a column first and hand that column to
+    :func:`_scores`."""
+    cds = [cd for _, cd in rows]
+    return (
+        local_frame(
+            spark,
+            [([c for c, _ in rows], cds, [_py_dot(cd, cd) for cd in cds])],
+            "ids array<bigint>, cds array<array<double>>, ccs array<double>",
         )
-        assigned = (
-            emb.withColumn("ee", dot_col(F.col("e"), F.col("e")))
-            .select("vec_id", "e", F.array_min(scored_arr)["c"].alias("cluster"))
-        )
-        final = sorted(_micro_sum_rows(assigned, ["cluster"]))
-        if snapshots is not None and (it + 1) in snapshots:
-            snapshots[it + 1] = list(final)
-        if it < iters - 1:
-            # next round's centroids: the integer mean mirrors the column
-            # expression exactly (long→double conversion on BOTH operands,
-            # then divide)
-            cm_rows = _next_round_cm(final)
-    return final
-
-
-def _next_round_cm(
-    final: list[tuple[int, int, int, int]],
-) -> list[tuple[int, list[int]]]:
-    """The next Lloyd round's integer micro centroids from one round's
-    (cluster, dim, s_micro, n_members) sums — the rounding mean
-    ``floor(s/n + 0.5)`` with BOTH operands converted to double first,
-    mirroring the column expression exactly (shared by the single-arm and
-    fused inline loops)."""
-    by_c: dict[int, dict[int, tuple[int, int]]] = {}
-    for c, d, s, n in final:
-        by_c.setdefault(c, {})[d] = (s, n)
-    return sorted(
-        (
-            c,
-            [
-                math.floor(float(comps[d][0]) / float(comps[d][1]) + 0.5)
-                for d in sorted(comps)
-            ],
-        )
-        for c, comps in by_c.items()
+        .select(F.struct("ids", "cds", "ccs"))
+        .scalar()
     )
 
 
-def _kmeans_inline_final_sums_fused(
+def _scores(m: Column, e: Column, ee: Column) -> Column:
+    """THE one (d, c) score array: per centroid of the :func:`_centroids`
+    model column ``m``, the squared-L2 distance of vector ``e`` decomposed
+    as ``ee − 2·e·c + c·c`` (``ee`` = e·e hoisted to a column; every dot an
+    in-order :func:`dot_col` fold, so both engines evaluate identical IEEE
+    ops) and the cluster id.  Structs compare lexicographically, so
+    ``array_min`` is the (dist asc, cluster asc) argmin the SQL oracle's
+    row_number window picks, and ``array_sort`` is its full ranking."""
+    return F.transform(
+        m["ids"],
+        lambda c, i: F.struct(
+            (ee - 2 * dot_col(e, F.get(m["cds"], i)) + F.get(m["ccs"], i)).alias("d"),
+            c.alias("c"),
+        ),
+    )
+
+
+def _nearest(
+    frame: DataFrame, rows: list[tuple[int, list[float]]], out: str, *keep: str | Column
+) -> DataFrame:
+    """``frame``'s ``keep`` columns and its vectors ``e``, plus ``out`` =
+    the id of each vector's nearest centroid among the (cluster, cd)
+    ``rows`` — THE argmin kernel of the Lloyd loop and the assignment:
+    ``array_min`` over :func:`_scores`, one map expression per vector."""
+    scored = frame.select(
+        *keep,
+        "e",
+        dot_col(F.col("e"), F.col("e")).alias("ee"),
+        _centroids(frame.sparkSession, rows).alias("m"),
+    )
+    return scored.select(
+        *scored.columns[:-2],
+        F.array_min(_scores(F.col("m"), F.col("e"), F.col("ee")))["c"].alias(out),
+    )
+
+
+def _lloyd_sums(
     embeddings: DataFrame,
     arm_filters: list[Column | None],
     k: int,
     iters: int,
-) -> list[list[tuple[int, int, int, int]] | None]:
-    """The inline Lloyd loop of :func:`_kmeans_inline_final_sums` trained
-    over SEVERAL filter-arms of ONE corpus at once (r13 optimization —
-    the retrain-audit queries train a frozen half-corpus model AND a
-    full-corpus model back to back, paying two cached scans and two sum
-    jobs per iteration for sums one job can produce):
+) -> list[list[list[tuple[int, int, int, int]]]]:
+    """THE one Lloyd loop, shared by every trainer (:func:`kmeans_train`,
+    :func:`kmeans_model`, :func:`kmeans_models_fused`,
+    :func:`kmeans_models_prefix` and in-lineage :func:`ivf_assign_trained`).
+    It trains over one or more filter-arms of ONE corpus at once (``None``
+    = the whole corpus) — the retrain-audit queries train a frozen
+    half-corpus model and a full-corpus model back to back:
 
-    * one shared spread+cached (vec_id, e) scan — each arm is a FILTER on
-      the cache (``None`` = the whole corpus), so the half-corpus arm
-      stops materializing its own copy of the corpus;
-    * per iteration, each arm's assignment keeps the EXACT single-arm
-      expression (its own literal centroid arrays, the same
-      ``ee − 2·e·c + c·c`` fold, the same ``array_min`` tie-break) — the
-      arms are unionByName'd with an arm tag and the component sums fold
-      in ONE ``groupBy(arm, cluster, dim)`` job (:func:`_micro_sum_rows`)
-      instead of one job per arm.  Integer sums are associative, so
-      splitting them by ``arm`` cannot change any arm's sums: every arm's
-      final sums are BIT-IDENTICAL to its own
-      :func:`_kmeans_inline_final_sums` run (pinned by
-      test_kmeans_models_fused_matches_separate).
+    * one shared spread+cached (vec_id, e) scan; each arm is a FILTER on
+      the cache;
+    * init: each arm's first ``k`` vectors by vec_id, fetched in ONE
+      collect (every arm's ``orderBy.limit(k)``, tagged and unioned) and
+      enumerated/quantized driver-side — vec_id is unique, so enumeration
+      in vec_id order IS the oracle's ``row_number() - 1``, and
+      ``math.floor(x * 1e6 + 0.5)`` is the IEEE twin of the column floor;
+    * per iteration, each arm's centroids are k rows of metadata: they ride
+      as a :func:`_centroids` model and the per-vector argmin is ONE map
+      expression (:func:`_nearest`) — no N·K row inflation, no join, no
+      window.  The arms are unionByName'd with an
+      arm tag and their component sums fold in ONE ``groupBy(arm,
+      cluster, dim)`` job (:func:`_micro_sum_rows`).  Integer sums are
+      associative, so an arm's sums do not depend on its siblings (pinned
+      by test_kmeans_models_fused_matches_separate).
 
-    Returns one final-sums list per arm (``None`` for an empty arm —
-    callers fall back to the per-arm path, which reproduces the empty
-    output).
+    Returns, per arm, the (cluster, dim, s_micro, n_members) sums after
+    each of the ``iters`` iterations, sorted by (cluster, dim) — every
+    model/centroid derivation is a pure-integer driver fold over them, and
+    an iteration ladder reads every rung from one run (each prefix is
+    exactly what its own shorter run returns).  An empty arm has no
+    centroids: its ``iters`` lists are empty, and it costs no job.
     """
     _require_iters(iters)
-    base = track_cached(  # ONE cached corpus scan shared by every arm
+    base = track_cached(  # ONE cached corpus scan shared by every arm; the
+        # init collect below materializes it eagerly at construction, so
+        # it is tracked for the sweep/bench harnesses to release
         _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
     )
     arms = [base if f is None else base.filter(f) for f in arm_filters]
-    # the init collects fuse into ONE job too: each arm's first-k frame is
-    # tagged and unioned, and row_number partitions by arm — identical
-    # rows per arm to the single-arm init (the global window over a k-row
-    # frame IS the per-arm window over that arm's k rows)
     tagged_init = None
     for t, fr in enumerate(arms):
         part = fr.orderBy("vec_id").limit(k).select(
@@ -662,71 +606,40 @@ def _kmeans_inline_final_sums_fused(
         tagged_init = (
             part if tagged_init is None else tagged_init.unionByName(part)
         )
-    # r14 opt: enumerate/quantize driver-side (the single-arm init's
-    # treatment) — the per-arm window over each arm's ≤k collected rows is
-    # exactly enumeration in vec_id order, and math.floor(x*1e6 + 0.5) is
-    # the IEEE twin of the column floor
     rows_by_arm: dict[int, list[tuple[int, list[float]]]] = {}
     for r in tagged_init.collect():
         rows_by_arm.setdefault(int(r["arm"]), []).append(
             (int(r["vec_id"]), [float(x) for x in r["e"]])
         )
-    cm_by_arm: list[list[tuple[int, list[int]]] | None] = [
-        [
-            (i, [math.floor(x * 1e6 + 0.5) for x in e])
-            for i, (_vid, e) in enumerate(sorted(rows_by_arm.get(t, [])))
+    model_by_arm: dict[int, list[tuple[int, list[float]]]] = {
+        t: [
+            (i, [math.floor(x * 1e6 + 0.5) / 1e6 for x in e])
+            for i, (_vid, e) in enumerate(sorted(rows))
         ]
-        or None
-        for t in range(len(arms))
+        for t, rows in rows_by_arm.items()
+    }
+    history: list[list[list[tuple[int, int, int, int]]]] = [
+        [[] for _ in range(iters)] for _ in arms
     ]
-    finals: list[list[tuple[int, int, int, int]] | None] = [None] * len(arms)
-    live = [t for t in range(len(arms)) if cm_by_arm[t]]
-    if not live:
-        return finals
+    if not model_by_arm:
+        return history
     for it in range(iters):
         tagged = None
-        for t in live:
-            cm_rows = cm_by_arm[t]
-            cds = [[m / 1e6 for m in cm] for _, cm in cm_rows]
-            ids = lit_longs(c for c, _ in cm_rows)
-            cdl = lit_doubles2d(cds)
-            ccs = lit_doubles(_py_dot(cd, cd) for cd in cds)
-            scored_arr = F.transform(
-                F.sequence(F.lit(0), F.lit(len(cm_rows) - 1)),
-                lambda i: F.struct(
-                    (
-                        F.col("ee")
-                        - 2 * dot_col(F.col("e"), F.get(cdl, i))
-                        + F.get(ccs, i)
-                    ).alias("d"),
-                    F.get(ids, i).cast("long").alias("c"),
-                ),
-            )
-            part = (
-                arms[t]
-                .withColumn("ee", dot_col(F.col("e"), F.col("e")))
-                .select(
-                    F.lit(t).cast("int").alias("arm"),
-                    "e",
-                    F.array_min(scored_arr)["c"].alias("cluster"),
-                )
-            )
+        for t, rows in sorted(model_by_arm.items()):
+            part = _nearest(arms[t], rows, "cluster", F.lit(t).cast("int").alias("arm"))
             tagged = part if tagged is None else tagged.unionByName(part)
-        per_arm: dict[int, list[tuple[int, int, int, int]]] = {t: [] for t in live}
         for arm, c, d, s, n in _micro_sum_rows(tagged, ["arm", "cluster"]):
-            per_arm[arm].append((c, d, s, n))
-        for t in live:
-            finals[t] = sorted(per_arm[t])
-            if it < iters - 1:
-                cm_by_arm[t] = _next_round_cm(finals[t])
-    return finals
+            history[arm][it].append((c, d, s, n))
+        for t in model_by_arm:
+            history[t][it].sort()
+            model_by_arm[t] = _model_rows_from_sums(history[t][it])
+    return history
 
 
 def kmeans_train(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 2,
-    dim: int = 64,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding corpus in pure DataFrame ops —
     the trainer that turns ``ivf_assign``'s stride-picked stand-in centroids
@@ -743,109 +656,28 @@ def kmeans_train(
       order can't change the result — then one double division per
       component, re-quantized to micro-units for the next round
 
-    Each iteration = one broadcast of k centroids (metadata-scale) + one
-    shuffle of the dim-exploded corpus; iterations are a fixed small count,
-    the standard big-data k-means shape.  The per-dim explode (64×) keeps
-    the oracle SQL a literal mirror; the explode-free flavor (64 aggregate
-    columns) is a drop-in if the 64× shuffle ever dominates.
+    Each iteration's k centroids are metadata: they ride as a one-row
+    scalar-subquery model (:func:`_centroids`) into ONE map-side argmin
+    expression per vector, and the update is one map-side-combined
+    groupBy of the dim-exploded corpus collected to the driver
+    (:func:`_lloyd_sums`); iterations are a fixed small count, the
+    standard big-data k-means shape.  The per-dim explode (64×) keeps the
+    oracle SQL a literal mirror.
 
-    Returns the final long-format model: one row per (cluster, dim) with
-    the integer micro-unit centroid component and the cluster's member
-    count — integer-only output, no float compare anywhere.
-
-    While k·dim ≤ ``_INLINE_MAX_LITERALS`` (VERDICT r12 #4) each
-    iteration's centroids are K rows of metadata, so they are COLLECTED
-    (init once + one k·dim-row collect per iteration), the per-vector
-    argmin becomes one whole-stage-codegen map expression, and the result
-    is a :func:`local_frame` — the N·K row_number window of
-    :func:`_kmeans_train_window` (a full shuffle+sort of N·K rows carrying
-    the 64-double vectors, per iteration) disappears.  Bit-identity with
-    the window path: cd = cm/1e6 is the same IEEE divide driver-side, the
-    distance is the identical ``ee − 2·e·c + c·c`` fold chain
-    (:func:`_py_dot` for c·c over the identical doubles), ``array_min``
-    over (d, c) structs replays the (dist asc, cluster asc) tie-break,
-    and the next-round integer mean ``floor(s/n + 0.5)`` is the same
-    long→double division on both sides.  The SQL oracle is unchanged.
-    Pinned by the inline-vs-window bit-identity test.
+    Returns the final long-format model as a :func:`local_frame`: one row
+    per (cluster, dim) with the integer micro-unit centroid component and
+    the cluster's member count — integer-only output, no float compare
+    anywhere.  ``centroid_micro`` is the rounding mean driver-side:
+    float(s)/float(n) mirrors the column's long→double division exactly
+    (both operands converted first).
     """
-    if k * dim <= _INLINE_MAX_LITERALS:
-        rows = _kmeans_inline_final_sums(embeddings, k, iters)
-        if rows is not None:
-            # centroid_micro is the same rounding mean, driver-side:
-            # float(s)/float(n) mirrors the column's long→double division
-            # exactly (both operands converted first)
-            return local_frame(
-                embeddings.sparkSession,
-                [
-                    (c, d, math.floor(float(s) / float(n) + 0.5), n)
-                    for c, d, s, n in rows
-                ],
-                KMEANS_TRAIN_SCHEMA,
-            )
-    return _kmeans_train_window(embeddings, k, iters)
-
-
-def _kmeans_train_window(embeddings: DataFrame, k: int, iters: int) -> DataFrame:
-    """:func:`kmeans_train` above the literal limit or on an empty corpus."""
-    _require_iters(iters)
-    w_init = Window.orderBy("vec_id")
-    emb = track_cached(  # scanned once per iteration
-        _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
-    )
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("long").alias("cluster"),
-            F.transform(
-                "e", lambda x: F.floor(x * 1e6 + F.lit(0.5)).cast("long")
-            ).alias("cm"),
-        )
-    )
-    for _ in range(iters):
-        cd = F.transform(F.col("cm"), lambda m: m / F.lit(1e6))
-        scored = emb.join(F.broadcast(cents)).select(
-            "vec_id",
-            "e",
-            "cluster",
-            (
-                dot_col(F.col("e"), F.col("e"))
-                - 2 * dot_col(F.col("e"), cd)
-                + dot_col(cd, cd)
-            ).alias("dist"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cluster"))
-        assigned = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "e", "cluster")
-        )
-        sums = (
-            assigned.select("cluster", F.posexplode("e").alias("dim0", "x"))
-            .groupBy("cluster", (F.col("dim0") + 1).cast("long").alias("dim"))
-            .agg(
-                F.sum(F.floor(F.col("x") * 1e6 + F.lit(0.5)).cast("long")).alias("s_micro"),
-                F.count(F.lit(1)).alias("n_members"),
-            )
-        )
-        mean_micro = F.floor(F.col("s_micro") / F.col("n_members").cast("double") + F.lit(0.5)).cast("long")
-        cents = (
-            sums.withColumn("m_micro", mean_micro)
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m_micro"))),
-                    lambda s: s["m_micro"],
-                ).alias("cm")
-            )
-        )
-    return sums.select(
-        "cluster",
-        "dim",
-        F.floor(F.col("s_micro") / F.col("n_members").cast("double") + F.lit(0.5))
-        .cast("long")
-        .alias("centroid_micro"),
-        F.col("n_members").cast("long").alias("n_members"),
+    return local_frame(
+        embeddings.sparkSession,
+        [
+            (c, d, math.floor(float(s) / float(n) + 0.5), n)
+            for c, d, s, n in _lloyd_sums(embeddings, [None], k, iters)[0][-1]
+        ],
+        KMEANS_TRAIN_SCHEMA,
     )
 
 
@@ -929,7 +761,9 @@ def _model_rows_from_sums(
     model rows: the SAME rounding mean floor(s/n + 0.5) and micro→double
     division (``m / 1e6``) as :func:`kmeans_model_from_train`'s column
     expressions — float(s)/float(n) and int/1e6 are the identical IEEE
-    ops driver-side."""
+    ops driver-side.  The same fold gives :func:`_lloyd_sums` its next
+    round's centroids, as the oracle's ``c{it}`` micro means divided by
+    1e6."""
     by_c: dict[int, dict[int, tuple[int, int]]] = {}
     for c, d, s, n in rows:
         by_c.setdefault(c, {})[d] = (s, n)
@@ -946,29 +780,16 @@ def _model_rows_from_sums(
 
 
 def kmeans_model(
-    embeddings: DataFrame, n_clusters: int = 8, iters: int = 2, dim: int = 64
+    embeddings: DataFrame, n_clusters: int = 8, iters: int = 2
 ) -> DataFrame:
     """The trained centroid table as broadcast-ready DOUBLE arrays:
     (cluster, cd) from :func:`kmeans_train`'s integer micro-unit
     components divided once — THE one Spark-side builder of the model
     frame, shared by :func:`ivf_assign_trained` and the inertia audits.
-
-    While k·dim ≤ ``_INLINE_MAX_LITERALS`` (the same gate as
-    :func:`kmeans_train`) the model is folded driver-side from the
-    collected final sums and returned as a k-row :func:`local_frame` —
-    consumers' collects run no job and their broadcasts build on the
-    driver."""
-    if n_clusters * dim <= _INLINE_MAX_LITERALS:
-        rows = _kmeans_inline_final_sums(embeddings, n_clusters, iters)
-        if rows is not None:
-            return local_frame(
-                embeddings.sparkSession,
-                _model_rows_from_sums(rows),
-                KMEANS_MODEL_SCHEMA,
-            )
-    return kmeans_model_from_train(
-        _kmeans_train_window(embeddings, n_clusters, iters)
-    )
+    The model is folded driver-side from the collected final sums and
+    returned as a k-row :func:`local_frame`, so consumers' collects run no
+    job and their broadcasts build on the driver."""
+    return kmeans_models_fused(embeddings, [None], n_clusters, iters)[0]
 
 
 def kmeans_models_fused(
@@ -976,39 +797,19 @@ def kmeans_models_fused(
     arm_filters: list[Column | None],
     n_clusters: int = 8,
     iters: int = 2,
-    dim: int = 64,
 ) -> list[DataFrame]:
     """One :func:`kmeans_model` per filter-arm of ONE corpus, trained over
     a single shared cached scan with the per-iteration component-sum jobs
-    fused across arms (:func:`_kmeans_inline_final_sums_fused`) — the r13
-    optimization for the retrain-audit queries, which train a frozen
-    half-corpus model and a full-corpus model back to back.  Each arm's
-    model is BIT-IDENTICAL to its own :func:`kmeans_model` call (same
-    per-row expressions, associative integer sums, same driver fold);
-    above the literal limit (or for an empty arm) it falls back to the
-    per-arm path, which reproduces the same output by the existing
-    bit-identity pins.  ``None`` in ``arm_filters`` means the whole
-    corpus."""
+    fused across arms (:func:`_lloyd_sums`) — the retrain-audit queries
+    train a frozen half-corpus model and a full-corpus model back to back.
+    Each arm's model is BIT-IDENTICAL to its own :func:`kmeans_model` call
+    (same per-row expressions, associative integer sums, same driver
+    fold); an empty arm gets the empty model.  ``None`` in
+    ``arm_filters`` means the whole corpus."""
     spark = embeddings.sparkSession
-
-    def _arm_frame(f: Column | None) -> DataFrame:
-        return embeddings if f is None else embeddings.filter(f)
-
-    if n_clusters * dim <= _INLINE_MAX_LITERALS:
-        finals = _kmeans_inline_final_sums_fused(
-            embeddings, arm_filters, n_clusters, iters
-        )
-        return [
-            local_frame(spark, _model_rows_from_sums(rows), KMEANS_MODEL_SCHEMA)
-            if rows is not None
-            else kmeans_model(
-                _arm_frame(f), n_clusters=n_clusters, iters=iters, dim=dim
-            )
-            for f, rows in zip(arm_filters, finals)
-        ]
     return [
-        kmeans_model(_arm_frame(f), n_clusters=n_clusters, iters=iters, dim=dim)
-        for f in arm_filters
+        local_frame(spark, _model_rows_from_sums(rounds[-1]), KMEANS_MODEL_SCHEMA)
+        for rounds in _lloyd_sums(embeddings, arm_filters, n_clusters, iters)
     ]
 
 
@@ -1016,34 +817,22 @@ def kmeans_models_prefix(
     embeddings: DataFrame,
     iters_list: list[int],
     n_clusters: int = 8,
-    dim: int = 64,
 ) -> list[DataFrame]:
     """One :func:`kmeans_model` per iteration count in ``iters_list``
-    from a SINGLE inline training run at ``max(iters_list)`` (r13
-    optimization — the inertia-descent ladder trained once per rung):
-    Lloyd's loop computes every prefix's component sums on the way to the
-    deepest rung, so each rung's model is folded from the snapshot its
-    own shorter run would have returned — bit-identical by construction
-    (same init, same per-iteration expressions; pinned by
-    test_kmeans_models_prefix_matches_separate).  Above the literal limit
-    or on an empty corpus every rung takes its own :func:`kmeans_model`
-    call.  Raises ``ValueError`` if any rung is below 1."""
-    _require_iters(min(iters_list, default=1))
+    from a SINGLE training run at ``max(iters_list)`` (the inertia-descent
+    ladder): Lloyd's loop computes every prefix's component sums on the
+    way to the deepest rung, so each rung's model is folded from the
+    sums its own shorter run would have returned — bit-identical by
+    construction (same init, same per-iteration expressions; pinned by
+    test_kmeans_models_prefix_matches_separate).  Raises ``ValueError`` if
+    any rung is below 1."""
+    if not iters_list:
+        return []
+    _require_iters(min(iters_list))
     spark = embeddings.sparkSession
-    if n_clusters * dim <= _INLINE_MAX_LITERALS and iters_list:
-        snaps: dict[int, list[tuple[int, int, int, int]]] = {
-            i: [] for i in iters_list
-        }
-        rows = _kmeans_inline_final_sums(
-            embeddings, n_clusters, max(iters_list), snapshots=snaps
-        )
-        if rows is not None:
-            return [
-                local_frame(spark, _model_rows_from_sums(snaps[i]), KMEANS_MODEL_SCHEMA)
-                for i in iters_list
-            ]
+    rounds = _lloyd_sums(embeddings, [None], n_clusters, max(iters_list))[0]
     return [
-        kmeans_model(embeddings, n_clusters=n_clusters, iters=i, dim=dim)
+        local_frame(spark, _model_rows_from_sums(rounds[i - 1]), KMEANS_MODEL_SCHEMA)
         for i in iters_list
     ]
 
@@ -1138,10 +927,10 @@ def load_kmeans_model(spark, path: str) -> tuple[DataFrame, dict[str, int]]:
     # read it with ONE collect and validate driver-side over the rows —
     # the previous single-aggregate "one validation job" still compiled to
     # 3 tiny AQE jobs, and the returned distributed frame cost every
-    # consumer another scan job (the inline-assign collect).  The model
-    # comes back as a LOCAL relation: downstream collects (the inline
-    # literal-embedding path) are job-free, and the values are the exact
-    # parquet doubles either way.  All three validation errors fire on the
+    # consumer another scan job (the assignment's model collect).  The
+    # model comes back as a LOCAL relation: downstream collects (the
+    # nearest-centroid kernel's model read) are job-free, and the values
+    # are the exact parquet doubles either way.  All three validation errors fire on the
     # same conditions with the same messages.  The artifact's schema is
     # fixed, so the read passes it and skips the inference job.
     rows = spark.read.schema(KMEANS_ARTIFACT_SCHEMA).parquet(path).collect()
@@ -1203,7 +992,6 @@ def ivf_assign_trained(
     embeddings: DataFrame,
     n_clusters: int = 8,
     iters: int = 2,
-    dim: int = 64,
     model: DataFrame | None = None,
 ) -> DataFrame:
     """Assign every vector to its nearest TRAINED k-means centroid — the
@@ -1213,100 +1001,48 @@ def ivf_assign_trained(
     two-level assignment is N·√C = N^1.5 — the one superlinear curve
     VERDICT r10 flagged).  This is FAISS IVF's actual design: nlist is
     fixed at deployment, training cost is iters·N·K, assignment is one
-    broadcast of the k×dim model + a map-side argmin per vector.
+    read of the k×dim model + a map-side argmin per vector.
 
     Determinism matches :func:`kmeans_train` / :func:`ivf_topk_trained`
     exactly: squared-L2 decomposed as e·e − 2·e·c + c·c with each dot an
     in-order sequential fold, centroid components exact integer micro-units
-    divided once to DOUBLE, ties to the smaller cluster id.  The argmin is
-    a map-side ``min(struct(dist, cluster))`` partial aggregation — no
-    N·K-row shuffle; the SQL oracle's row_number window replays it exactly
-    (same ordering key).
+    divided once to DOUBLE, ties to the smaller cluster id.
 
     Returns (vec_id, e, centroid_id) — the same frame shape as
     :func:`ivf_assign` / :func:`ivf_assign_2level`, so the IVFPQ chain and
     the SemDeDup scan compose unchanged.  ``model`` lets a caller that
-    already materialized (and typically cached) the :func:`kmeans_model`
-    frame share it instead of paying the training iterations twice (the
-    multiprobe path ranks probe cells against the same model).
+    already holds the :func:`kmeans_model` frame (or a
+    :func:`load_kmeans_model` artifact) share it instead of paying the
+    training iterations twice (the multiprobe path ranks probe cells
+    against the same model).
 
-    While K·dim ≤ ``_INLINE_MAX_LITERALS`` (the VERDICT r12 #4
-    restructuring of the serve-path hot spot) the k-row model is read ONCE
-    on the driver (:func:`_model_rows`; free for a :func:`local_frame`
-    model, and in-lineage training folds it from the collected sums) and
-    embedded as literal arrays, and the argmin becomes ONE
-    whole-stage-codegen map expression per vector (``array_min`` over a
-    transform of the K cells) — no N·K row inflation, no groupBy(vec_id)
-    shuffle, no join-back.  The plan drops from two N-row exchanges to
-    ZERO.  Output is bit-identical to the join path taken above the limit
-    (and for an empty model): the distance is the same ``ee − 2·e·c + c·c``
-    with the same in-order folds (``ee`` hoisted to a column — the same
-    double the per-row fold produced K times; ``c·c`` folded driver-side by
-    :func:`_py_dot`, IEEE-identical over the identical collected
-    components), and ``array_min`` over (d, c) structs is exactly the
-    lexicographic ``min(struct(dist, cluster))`` tie-break.  The SQL
-    oracle is unchanged (its row_number window replays the same ordering
-    key).  Pinned by the inline-vs-join bit-identity test.
+    The k-row model is read ONCE on the driver (:func:`_model_rows`; free
+    for a :func:`local_frame` model; in-lineage training folds it from the
+    collected sums) and rides as a one-row scalar-subquery model
+    (:func:`_centroids`), so the argmin is ONE map expression per vector
+    (:func:`_nearest`) at every model size — no N·K row inflation, no
+    join, no exchange.  The SQL oracle's row_number window replays the
+    same (dist, cluster) ordering key.
     """
-    inline = n_clusters * dim <= _INLINE_MAX_LITERALS
     if model is None:
-        # in-lineage training: fold the model rows driver-side from the
-        # shared inline loop — no intermediate model frame, no collect
-        sums = _kmeans_inline_final_sums(embeddings, n_clusters, iters) if inline else None
-        rows = None if sums is None else _model_rows_from_sums(sums)
-        if rows is None:  # above the limit, or an empty corpus
-            model = kmeans_model(embeddings, n_clusters=n_clusters, iters=iters, dim=dim)
+        rows = _model_rows_from_sums(
+            _lloyd_sums(embeddings, [None], n_clusters, iters)[0][-1]
+        )
     else:
         # the forwarding contract: the supplied frame must be the model the
         # n_clusters param claims — a k-mismatched (or foreign-corpus) frame
         # would silently assign against the wrong cells (the minhash_bands
-        # sig= guard's spirit).  Inline, the check runs on the rows the
-        # literals need anyway; otherwise it is one count job on a k-row,
-        # typically cached frame.
-        rows = _model_rows(model) if inline else None
-        n_model = model.count() if rows is None else len(rows)
-        if n_model != n_clusters:
+        # sig= guard's spirit)
+        rows = _model_rows(model)
+        if len(rows) != n_clusters:
             raise ValueError(
                 f"ivf_assign_trained(model=...) expects a {n_clusters}-row "
-                f"kmeans_model frame; supplied frame has {n_model} clusters"
+                f"kmeans_model frame; supplied frame has {len(rows)} clusters"
             )
     emb = track_cached(
         _spread_emb(embeddings).select("vec_id", _dbl("embedding").alias("e"))
     )
-    if rows:
-        ids = lit_longs(c for c, _ in rows)
-        cds = lit_doubles2d(cd for _, cd in rows)
-        ccs = lit_doubles(_py_dot(cd, cd) for _, cd in rows)
-        scored = F.transform(
-            F.sequence(F.lit(0), F.lit(len(rows) - 1)),
-            lambda i: F.struct(
-                (
-                    F.col("ee")
-                    - 2 * dot_col(F.col("e"), F.get(cds, i))
-                    + F.get(ccs, i)
-                ).alias("d"),
-                F.get(ids, i).cast("long").alias("c"),
-            ),
-        )
-        return (
-            emb.withColumn("ee", dot_col(F.col("e"), F.col("e")))
-            .select("vec_id", "e", F.array_min(scored)["c"].alias("centroid_id"))
-        )
-    scored = emb.join(F.broadcast(model)).select(
-        "vec_id",
-        "cluster",
-        (
-            dot_col(F.col("e"), F.col("e"))
-            - 2 * dot_col(F.col("e"), F.col("cd"))
-            + dot_col(F.col("cd"), F.col("cd"))
-        ).alias("dist"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.min(F.struct(F.col("dist").alias("d"), F.col("cluster").alias("c"))).alias("b")
-    )
-    return emb.join(
-        best.select("vec_id", F.col("b.c").alias("centroid_id")), "vec_id"
-    ).select("vec_id", "e", "centroid_id")
+    return _nearest(emb, rows, "centroid_id", "vec_id")
 
 
 def ivf_topk_trained(
@@ -1320,8 +1056,8 @@ def ivf_topk_trained(
     nearest k-means centroid (:func:`ivf_assign_trained` — squared-L2,
     same decomposed fold as the trainer), then rank candidates only within
     the probe's cell — the end-to-end trained flavor of ``ivf_topk``.
-    Model and corpus stay DataFrames throughout; the k×dim model
-    broadcasts."""
+    Model and corpus stay DataFrames throughout; the k×dim model rides
+    as a scalar subquery (:func:`_centroids`)."""
     assigned = track_cached(
         ivf_assign_trained(embeddings, n_clusters=n_clusters, iters=iters)
     )  # probes + candidates
@@ -1916,9 +1652,7 @@ def ivf_pq_scored(
     probe-label frame."""
     if coarse_codebook == "trained":
         assigned = track_cached(
-            ivf_assign_trained(
-                embeddings, n_clusters=n_clusters, iters=train_iters, dim=dim
-            )
+            ivf_assign_trained(embeddings, n_clusters=n_clusters, iters=train_iters)
         )
     else:
         assigned = track_cached(
@@ -2619,7 +2353,7 @@ def semantic_dedup_bucketed_trained(
     whose every stage is O(N) at fixed K.  Derived p ships as an output
     column; the oracle replays assignment, ladder, and mask exactly."""
     assigned = track_cached(
-        ivf_assign_trained(embeddings, n_clusters=n_clusters, iters=iters, dim=dim)
+        ivf_assign_trained(embeddings, n_clusters=n_clusters, iters=iters)
     )
     p = derive_n_planes(assigned, pairs_per_vec)
     ab = assigned.join(lsh_buckets(embeddings, p, dim), "vec_id")
@@ -3170,14 +2904,12 @@ def trained_multiprobe_scored(
     nprobe: int,
     n_clusters: int = 8,
     iters: int = 2,
-    dim: int = 64,
     model: DataFrame | None = None,
 ) -> DataFrame:
     """The trained-multiprobe candidate frame — (probe_id, cell_rank,
     neighbor_id, cos) over each probe's top ``nprobe`` trained cells: THE
     one Spark-side builder of the probe-cell ranking (the assignment's own
-    squared-L2 key, ties to the smaller cluster id — a window on the
-    bounded |probes|·K frame, never corpus grain) and the cell-union
+    squared-L2 key, ties to the smaller cluster id) and the cell-union
     cosine scan, shared by :func:`ivf_topk_trained_multiprobe` and the
     nprobe recall-curve sweep (which carves its arms from one call at the
     widest nprobe via ``cell_rank``).  The k×dim model trains ONCE and is
@@ -3185,94 +2917,49 @@ def trained_multiprobe_scored(
     a caller-supplied ``model`` (e.g. a :func:`load_kmeans_model`
     artifact, or a stale index-build-time model for the staleness audit)
     serves BOTH the probe-cell ranking and the assignment, exactly the
-    persisted-artifact serve path."""
-    inline = n_clusters * dim <= _INLINE_MAX_LITERALS
+    persisted-artifact serve path.
+
+    The probe-cell ranking is ``array_sort`` over the probe's
+    :func:`_scores` against the scalar-subquery model — lexicographic
+    (dist, cluster) order replays the oracle's row_number over ORDER BY
+    dist, cluster exactly (cluster ids are distinct), and ``slice`` past
+    the array end returns the whole array, matching ``rn <= nprobe`` when
+    nprobe >= k."""
     if model is None:
-        model = kmeans_model(embeddings, n_clusters=n_clusters, iters=iters, dim=dim)
-        if not inline:
-            # above the literal limit kmeans_model is a distributed
-            # training lineage — cache it so the probe-cell ranking and
-            # the assignment don't train twice (inline models are
-            # local_frame k-row relations: caching them only adds scan jobs)
-            model = track_cached(model)
+        model = kmeans_model(embeddings, n_clusters=n_clusters, iters=iters)
     assigned = track_cached(
-        ivf_assign_trained(
-            embeddings, n_clusters=n_clusters, iters=iters, dim=dim, model=model
-        )
+        ivf_assign_trained(embeddings, n_clusters=n_clusters, iters=iters, model=model)
     )
     an = assigned.withColumn("en", F.sqrt(dot_col(F.col("e"), F.col("e"))))
-    probes = an.filter(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), F.col("e").alias("pe"),
-        F.col("en").alias("pn"),
-    )
-    rows_sorted = _model_rows(model) if inline else None
-    if rows_sorted:
-        # r14 (fresh-plan floor): a driver-known k-row model embeds as
-        # literal arrays — the probe-cell ranking becomes array_sort over
-        # a transform instead of broadcast-join + row_number window (no
-        # BroadcastExchange of the model, no window exchange).  Identical
-        # output: the per-cell dist uses the same dot_col folds over the
-        # same doubles (cd·cd folded driver-side by _py_dot — the
-        # IEEE-identical equivalence the inline assignment pins), and
-        # lexicographic array_sort over (dist, cluster) structs replays
-        # row_number over ORDER BY dist, cluster exactly (cluster ids are
-        # distinct).  slice() past the array end returns the whole array,
-        # matching the rn <= nprobe filter when nprobe >= k.
-        ids = lit_longs(c for c, _ in rows_sorted)
-        cds = lit_doubles2d(cd for _, cd in rows_sorted)
-        ccs = lit_doubles(_py_dot(cd, cd) for _, cd in rows_sorted)
-        scored = F.transform(
-            F.sequence(F.lit(0), F.lit(len(rows_sorted) - 1)),
-            lambda i: F.struct(
-                (
-                    F.col("pp")
-                    - 2 * dot_col(F.col("pe"), F.get(cds, i))
-                    + F.get(ccs, i)
-                ).alias("dist"),
-                F.get(ids, i).cast("long").alias("cluster"),
+    probe_cells = (
+        an.filter(F.col("vec_id").isin(probe_ids))
+        .select(
+            F.col("vec_id").alias("probe_id"),
+            F.col("e").alias("pe"),
+            F.col("en").alias("pn"),
+            dot_col(F.col("e"), F.col("e")).alias("pp"),
+            _centroids(embeddings.sparkSession, _model_rows(model)).alias("m"),
+        )
+        .select(
+            "probe_id",
+            "pe",
+            "pn",
+            F.posexplode(
+                F.slice(
+                    F.array_sort(_scores(F.col("m"), F.col("pe"), F.col("pp"))),
+                    1,
+                    nprobe,
+                )
             ),
         )
-        probe_cells = (
-            probes.withColumn("pp", dot_col(F.col("pe"), F.col("pe")))
-            .select(
-                "probe_id",
-                "pe",
-                "pn",
-                F.posexplode(F.slice(F.array_sort(scored), 1, nprobe)),
-            )
-            .select(
-                "probe_id",
-                "pe",
-                "pn",
-                F.col("col.cluster").alias("centroid_id"),
-                (F.col("pos") + 1).cast("int").alias("cell_rank"),
-            )
+        .select(
+            "probe_id",
+            "pe",
+            "pn",
+            F.col("col.c").alias("centroid_id"),
+            (F.col("pos") + 1).cast("int").alias("cell_rank"),
         )
-    else:
-        pw = Window.partitionBy("probe_id").orderBy(F.asc("dist"), F.asc("cluster"))
-        probe_cells = (
-            probes.join(F.broadcast(model))
-            .select(
-                "probe_id",
-                "pe",
-                "pn",
-                "cluster",
-                (
-                    dot_col(F.col("pe"), F.col("pe"))
-                    - 2 * dot_col(F.col("pe"), F.col("cd"))
-                    + dot_col(F.col("cd"), F.col("cd"))
-                ).alias("dist"),
-            )
-            .withColumn("rn", F.row_number().over(pw))
-            .filter(F.col("rn") <= nprobe)
-            .select(
-                "probe_id",
-                "pe",
-                "pn",
-                F.col("cluster").alias("centroid_id"),
-                F.col("rn").alias("cell_rank"),
-            )
-        )
+    )
     return (
         an.join(F.broadcast(probe_cells), ["centroid_id"])
         .filter(F.col("vec_id") != F.col("probe_id"))
@@ -3292,7 +2979,6 @@ def ivf_topk_trained_multiprobe(
     nprobe: int = 2,
     n_clusters: int = 8,
     iters: int = 2,
-    dim: int = 64,
 ) -> DataFrame:
     """IVF multiprobe over TRAINED fixed-K cells (VERDICT r11 #7: the
     recall knob existed only for the stride path) — each probe scans its
@@ -3301,7 +2987,7 @@ def ivf_topk_trained_multiprobe(
     one.  The candidate frame comes from the shared
     :func:`trained_multiprobe_scored` builder."""
     scored = trained_multiprobe_scored(
-        embeddings, probe_ids, nprobe, n_clusters=n_clusters, iters=iters, dim=dim
+        embeddings, probe_ids, nprobe, n_clusters=n_clusters, iters=iters
     )
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (

@@ -550,7 +550,7 @@ def q_retrain_reassignment_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused across arms (bit-identical per arm — associative integer
     # sums; pinned by test_kmeans_models_fused_matches_separate), and
     # the full arm assigns from its fused model instead of re-training
-    # in-lineage (same literals — the model rows ARE the final sums)
+    # in-lineage (same centroids — the model rows ARE the final sums)
     m_half, m_full = _sim.kmeans_models_fused(
         emb,
         [F.col("vec_id") < mid, None],
@@ -758,7 +758,7 @@ def q_stale_model_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13-opt: both arms' models train over ONE shared cached scan with
     # the per-iteration sum jobs fused (bit-identical per arm; the
     # retrained arm's explicit model= is the same local relation the
-    # in-lineage path would fold — identical literal arrays)
+    # in-lineage path would fold — identical centroids)
     m_half, m_full = _sim.kmeans_models_fused(
         emb,
         [F.col("vec_id") < mid, None],

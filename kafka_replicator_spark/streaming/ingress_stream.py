@@ -122,7 +122,8 @@ class IngressState:
     @classmethod
     def load(cls, path: str) -> "IngressState":
         if os.path.exists(path):
-            raw = json.load(open(path))
+            with open(path) as f:
+                raw = json.load(f)
             return cls(
                 path=path,
                 checkpoints=raw.get("checkpoints", {}),

@@ -25,6 +25,15 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def oracle_rows(sf_dir: str, sql: str) -> list[tuple]:
+    """The DuckDB oracle's rows for ``sql`` over the ``sf_dir`` corpus."""
+    con = duck_connection(sf_dir)
+    try:
+        return con.execute(sql).fetchall()
+    finally:
+        con.close()
+
+
 def _norm_cell(v):
     if v is None or (isinstance(v, float) and math.isnan(v)):
         return None

@@ -116,7 +116,7 @@ def test_kmeans_recovers_blobs(spark):
         (2, [10.0, 10.0]), (3, [10.1, 10.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    model = kmeans_train(emb, k=2, iters=2, dim=2).collect()
+    model = kmeans_train(emb, k=2, iters=2).collect()
     by_cluster = {}
     for r in model:
         by_cluster.setdefault(r["cluster"], r["n_members"])

@@ -1,7 +1,7 @@
 """litfast array literals must be drop-in bit-identical to ``F.lit`` —
-the r13 optimization replaced the element-wise py4j conversion (the
-trained-model family's construct floor) with one SQL rendering per
-array; these tests pin the value contract the swap relies on."""
+the r13 optimization replaced the element-wise py4j conversion with one
+SQL rendering per array; these tests pin the value contract the swap
+relies on."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_replicator_spark.functions.litfast import (
-    lit_doubles,
-    lit_doubles2d,
-    lit_longs,
-)
+from kafka_replicator_spark.functions.litfast import lit_doubles, lit_longs
 
 
 def _bits(x: float) -> bytes:
@@ -46,19 +42,6 @@ def test_lit_doubles_bit_identical(spark):
     assert all(_bits(x) == _bits(y) for x, y in zip(row["a"], row["b"]))
 
 
-def test_lit_doubles2d_bit_identical(spark):
-    nested = [_HARD_DOUBLES, [x * 3.0 for x in _HARD_DOUBLES]]
-    row = (
-        spark.range(1)
-        .select(F.lit(nested).alias("a"), lit_doubles2d(nested).alias("b"))
-        .collect()[0]
-    )
-    fa = [x for sub in row["a"] for x in sub]
-    fb = [x for sub in row["b"] for x in sub]
-    assert len(fa) == len(fb)
-    assert all(_bits(x) == _bits(y) for x, y in zip(fa, fb))
-
-
 def test_lit_longs_identical(spark):
     xs = [0, -1, 7, -(2**62), 2**62, 123456789012345]
     row = (
@@ -88,7 +71,7 @@ def test_empty_and_nonfinite_fall_back(spark):
 
 def test_folds_to_plain_literal(spark):
     # ConstantFolding must collapse the rendered array(...) into a single
-    # Literal, so serve-path plans are unchanged by the swap
-    df = spark.range(1).select(lit_doubles2d([[1.5, 2.5]]).alias("r"))
+    # Literal, so plans are unchanged by the swap
+    df = spark.range(1).select(lit_doubles([1.5, 2.5]).alias("r"))
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "[[1.5,2.5]]" in plan and "array(" not in plan
+    assert "[1.5,2.5]" in plan and "array(" not in plan

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from kafka_replicator_spark.cacheutil import release_cached
 from kafka_replicator_spark.functions import similarity as sim
 from kafka_replicator_spark.sources.tables import load_table
+from tests.oracle_utils import oracle_rows
 from tests.test_local_frame import _jobs_launched
 
 
@@ -126,12 +127,11 @@ def test_derive_n_planes_sql_empty_relation_matches_spark(spark):
     assert got == 4
 
 
-def test_ivf_assign_trained_inline_matches_join_path(spark, sf_dir, monkeypatch):
-    """VERDICT r12 #4: the inline-literal argmin (model collected once,
-    zero exchanges) must be BIT-IDENTICAL to the broadcast-join +
-    min(struct) path — same fold chain, same (dist, cluster) tie-break —
-    both over one shared model frame and with in-lineage training (the
-    distributed run also trains through the window path)."""
+def test_ivf_assign_trained_inline_matches_join_path(spark, sf_dir):
+    """The scalar-subquery argmin (model read once, zero exchanges) must
+    equal the DuckDB oracle's cross-join + row_number assignment row for
+    row — same fold chain, same (dist, cluster) tie-break — both over a
+    supplied model frame and with in-lineage training."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=16, iters=2)
 
@@ -141,29 +141,78 @@ def test_ivf_assign_trained_inline_matches_join_path(spark, sf_dir, monkeypatch)
             for r in sim.ivf_assign_trained(emb, n_clusters=16, iters=2, **kw).collect()
         )
 
-    inline_model, inline_lineage = assign(model=model), assign()
-    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
-    assert assign(model=model) == inline_model and len(inline_model) > 0
-    assert assign() == inline_lineage == inline_model
+    want = sorted(
+        oracle_rows(
+            sf_dir,
+            sim.ivf_assign_trained_sql_ctes(16, 2, 64)
+            + "\nSELECT vec_id, centroid_id FROM assigned",
+        )
+    )
+    assert assign(model=model) == assign() == want and len(want) > 0
 
 
-def test_kmeans_train_inline_matches_window_path(spark, sf_dir, monkeypatch):
-    """The per-iteration inline argmin (centroids collected per round)
-    must reproduce the N*K row_number window path bit-for-bit, including
-    the next-round integer micro-mean."""
+def test_kmeans_train_inline_matches_window_path(spark, sf_dir):
+    """The per-iteration argmin (centroids collected per round) must
+    reproduce the DuckDB oracle's N*K row_number window bit-for-bit,
+    including the next-round integer micro-mean."""
     emb = _emb(spark, sf_dir)
-    a = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2).collect())
-    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
-    b = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2).collect())
-    assert a == b and len(a) == 8 * 64
+    got = sorted(tuple(r) for r in sim.kmeans_train(emb, k=8, iters=2).collect())
+    want = sorted(oracle_rows(sf_dir, sim.kmeans_train_sql(k=8, iters=2, dim=64)))
+    assert got == want and len(got) == 8 * 64
 
 
-@pytest.mark.parametrize("regime", ["inline", "distributed"])
-def test_kmeans_rejects_iters_below_one(spark, sf_dir, monkeypatch, regime):
-    """iters < 1 has no model: every trainer raises the same error in
-    both regimes instead of returning an empty model or crashing."""
-    if regime == "distributed":
-        monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+def test_kmeans_past_plan_literal_scale_matches_oracle(spark):
+    """k·dim past what plan literals once carried (65,536): k=520 over 600
+    seeded vectors of dim 128.  The scalar-subquery model has no size
+    limit — kmeans_train and the assignment equal the DuckDB oracle row
+    for row, and the assignment plan has no join."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    from kafka_replicator_spark.core.schema import local_frame
+    from kafka_replicator_spark.plans.explain import physical_plan
+
+    n, dim, k = 600, 128, 520
+    # float32 values, so both engines read the identical components
+    vecs = np.random.default_rng(20261019).uniform(-1, 1, (n, dim)).astype(np.float32)
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    synth = local_frame(spark, rows, "vec_id bigint, embedding array<float>")
+    con = duckdb.connect()
+    con.register(
+        "synth",
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array([v for _, v in rows], pa.list_(pa.float32())),
+            }
+        ),
+    )
+    try:
+        want_train = sorted(
+            con.execute(sim.kmeans_train_sql(k, 1, dim, rel="synth")).fetchall()
+        )
+        want_assign = sorted(
+            con.execute(
+                sim.ivf_assign_trained_sql_ctes(k, 1, dim, rel="synth")
+                + "\nSELECT vec_id, centroid_id FROM assigned"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    got_train = sorted(tuple(r) for r in sim.kmeans_train(synth, k=k, iters=1).collect())
+    assert got_train == want_train and len(got_train) > k * dim // 2
+    assigned = sim.ivf_assign_trained(synth, n_clusters=k, iters=1)
+    assert "Join" not in physical_plan(assigned)
+    got_assign = sorted(
+        (r["vec_id"], r["centroid_id"]) for r in assigned.collect()
+    )
+    assert got_assign == want_assign and len(got_assign) == n
+
+
+def test_kmeans_rejects_iters_below_one(spark, sf_dir):
+    """iters < 1 has no model: every trainer raises the same error instead
+    of returning an empty model or crashing."""
     emb = _emb(spark, sf_dir)
     calls = [
         lambda: sim.kmeans_train(emb, k=8, iters=0),
@@ -178,9 +227,8 @@ def test_kmeans_rejects_iters_below_one(spark, sf_dir, monkeypatch, regime):
 
 
 def test_kmeans_empty_corpus_gives_empty_frames(spark, sf_dir):
-    """An empty corpus has no literal centroids: training, the model and
-    the assignment take the distributed paths and return empty frames
-    with their declared columns."""
+    """An empty corpus has no centroids: training, the model and the
+    assignment return empty frames with their declared columns."""
     empty = _emb(spark, sf_dir).limit(0)
     frames = {
         ("cluster", "dim", "centroid_micro", "n_members"): sim.kmeans_train(empty),
@@ -193,8 +241,9 @@ def test_kmeans_empty_corpus_gives_empty_frames(spark, sf_dir):
 
 
 def test_ivf_assign_trained_inline_plan_has_no_join_or_shuffle(spark, sf_dir):
-    """The restructured serve-path plan: per-vector argmin is ONE map
-    expression — no join of any kind, no aggregate exchange, no window.
+    """The serve-path plan: per-vector argmin is ONE map expression over
+    the scalar-subquery model — no join of any kind, no aggregate
+    exchange, no window.
     (The only exchange allowed is spread()'s round-robin input spread.)"""
     from kafka_replicator_spark.plans.explain import physical_plan
 
@@ -267,9 +316,8 @@ def test_kmeans_models_fused_matches_separate(spark, sf_dir):
 
 
 def test_kmeans_models_fused_empty_arm_falls_back(spark, sf_dir):
-    """An empty filter-arm must fall back to the per-arm path (empty
-    literal arrays have no type) and reproduce kmeans_model's empty
-    output, while sibling arms still train fused."""
+    """An empty filter-arm gets kmeans_model's empty output, while
+    sibling arms still train fused."""
     emb = _emb(spark, sf_dir)
     lo = int(emb.agg(F.min("vec_id")).collect()[0][0])
     fused = sim.kmeans_models_fused(

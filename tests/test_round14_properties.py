@@ -1,5 +1,5 @@
-"""Round-14 optimization property tests: the driver-known-model fast paths
-must be bit-identical to the collect/broadcast-join paths they replace."""
+"""Round-14 optimization property tests: the driver-side fast paths must be
+bit-identical to the distributed paths or the oracles they replace."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from kafka_replicator_spark.cacheutil import release_cached
 from kafka_replicator_spark.functions import similarity as sim
 from kafka_replicator_spark.sources.tables import load_table
+from tests.oracle_utils import oracle_rows
 
 
 @pytest.fixture(autouse=True)
@@ -28,57 +29,55 @@ def _probes(emb, n=4):
     ]
 
 
-def test_multiprobe_inline_probe_cells_matches_join(spark, sf_dir, monkeypatch):
-    """trained_multiprobe_scored's literal-embedded probe-cell ranking
-    (the default at K·dim within the literal limit) must be bit-identical
-    to the broadcast-join + row_number window path over the SAME model
-    frame (forced by setting the limit to 0)."""
+def test_multiprobe_inline_probe_cells_matches_join(spark, sf_dir):
+    """trained_multiprobe_scored's array_sort probe-cell ranking over the
+    scalar-subquery model must reproduce the DuckDB oracle's probes x
+    model join + row_number window: the multiprobe top-k equals the
+    oracle row for row, rounded cos_sim included."""
     emb = _emb(spark, sf_dir)
-    model = sim.kmeans_model(emb, n_clusters=8, iters=2)
     probes = _probes(emb)
-
-    def scored():
-        return sorted(
-            tuple(r)
-            for r in sim.trained_multiprobe_scored(
-                emb, probes, nprobe=2, model=model
-            ).collect()
-        )
-
-    a = scored()
-    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
-    assert scored() == a and a  # exact — including the cos doubles
+    got = sorted(
+        tuple(r)
+        for r in sim.ivf_topk_trained_multiprobe(emb, probes, k=5, nprobe=2).collect()
+    )
+    want = sorted(
+        oracle_rows(sf_dir, sim.ivf_topk_trained_multiprobe_sql(probes, k=5, nprobe=2))
+    )
+    assert got == want and got
 
 
-def test_multiprobe_inline_nprobe_past_k(spark, sf_dir, monkeypatch):
+def test_multiprobe_inline_nprobe_past_k(spark, sf_dir):
     """nprobe beyond the cluster count: slice() past the array end must
-    reproduce the window path's rn <= nprobe (keep all k cells)."""
-    emb = _emb(spark, sf_dir)
-    model = sim.kmeans_model(emb, n_clusters=4, iters=1, dim=64)
-    probes = _probes(emb, n=2)
-
-    def scored():
-        return sorted(
-            tuple(r)
-            for r in sim.trained_multiprobe_scored(
-                emb, probes, nprobe=9, n_clusters=4, iters=1, model=model
-            ).collect()
-        )
-
-    a = scored()
-    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
-    assert scored() == a
-    assert max(r[1] for r in a) == 4  # every cell probed, rank caps at k
-
-
-def test_attribute_rows_validation_still_fires(spark, sf_dir, monkeypatch):
-    """The model= k-mismatch guard must fire on the inline path's
-    collected rows exactly as it does on the distributed path's count."""
+    keep all k cells, as the oracle's rn <= nprobe does — every other
+    vector is a candidate, the rank caps at k, and the top-k equals the
+    oracle's."""
     emb = _emb(spark, sf_dir)
     model = sim.kmeans_model(emb, n_clusters=4, iters=1)
-    with pytest.raises(ValueError, match="expects a 8-row"):
-        sim.ivf_assign_trained(emb, n_clusters=8, iters=2, model=model)
-    monkeypatch.setattr(sim, "_INLINE_MAX_LITERALS", 0)
+    probes = _probes(emb, n=2)
+    scored = sim.trained_multiprobe_scored(
+        emb, probes, nprobe=9, n_clusters=4, iters=1, model=model
+    ).collect()
+    assert len(scored) == len(probes) * (emb.count() - 1)
+    assert max(r["cell_rank"] for r in scored) == 4  # rank caps at k
+    got = sorted(
+        tuple(r)
+        for r in sim.ivf_topk_trained_multiprobe(
+            emb, probes, k=5, nprobe=9, n_clusters=4, iters=1
+        ).collect()
+    )
+    want = sorted(
+        oracle_rows(
+            sf_dir,
+            sim.ivf_topk_trained_multiprobe_sql(probes, k=5, nprobe=9, n_clusters=4, iters=1),
+        )
+    )
+    assert got == want and got
+
+
+def test_attribute_rows_validation_still_fires(spark, sf_dir):
+    """The model= k-mismatch guard fires on the model's collected rows."""
+    emb = _emb(spark, sf_dir)
+    model = sim.kmeans_model(emb, n_clusters=4, iters=1)
     with pytest.raises(ValueError, match="expects a 8-row"):
         sim.ivf_assign_trained(emb, n_clusters=8, iters=2, model=model)
 
