@@ -88,10 +88,6 @@ WRITTEN_SEGMENT_ARROW = pa.schema(
 )
 WRITTEN_SEGMENT_SCHEMA = from_arrow_schema(WRITTEN_SEGMENT_ARROW)
 
-#: Message rows with their segment identity (the ``kafka_segments`` source).
-SEGMENT_ROWS_ARROW = pa.schema(_SEGMENT_ID_ARROW + list(SEGMENT_DATA_ARROW))
-SEGMENT_ROWS_SCHEMA = from_arrow_schema(SEGMENT_ROWS_ARROW)
-
 
 def conform_segment_data(data, cols: list[str] = SEGMENT_DATA_COLS):
     """``data`` (an Arrow Table or RecordBatch) as exactly the at-rest

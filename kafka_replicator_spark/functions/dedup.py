@@ -969,11 +969,7 @@ WHERE a.doc_id < b.doc_id
 _SMALL_GRAPH_EDGES = 200_000
 
 
-def _two_phase_cc(
-    edges: DataFrame,
-    max_iters: int = 25,
-    small_graph_edges: int = _SMALL_GRAPH_EDGES,
-) -> tuple[DataFrame, int]:
+def _two_phase_cc(edges: DataFrame, max_iters: int = 25) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star/small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014): O(log n) rounds on ANY graph — including adversarial
@@ -998,20 +994,19 @@ def _two_phase_cc(
     signed — the first comparison happens after round 2, since a
     non-trivial graph can't be a star fixpoint before small-star ran once.
 
-    Graphs at or below ``small_graph_edges`` edges skip the rounds entirely:
-    collect + union-by-min on the driver (broadcast-small-side logic — see
-    ``_SMALL_GRAPH_EDGES``), reported as 0 rounds.  Pass 0 to force the
-    distributed path (tests do, to pin the round bound).
+    Graphs at or below ``_SMALL_GRAPH_EDGES`` edges skip the rounds
+    entirely: collect + union-by-min on the driver (broadcast-small-side
+    logic), reported as 0 rounds.  One ``limit(_SMALL_GRAPH_EDGES + 1)``
+    collect answers both "is the graph small?" and "what are its edges?";
+    only a graph past the guard is checkpointed and built once more.
 
     ``edges`` must have long columns ``a < b``; returns (membership frame
     ``node, comp`` covering every non-isolated node, rounds used).
     """
     from pyspark.sql import Observation
 
-    obs0 = Observation()
-    edges = edges.observe(obs0, F.count(F.lit(1)).alias("c")).localCheckpoint()
-
-    if obs0.get["c"] <= small_graph_edges:
+    head = edges.limit(_SMALL_GRAPH_EDGES + 1).collect()
+    if len(head) <= _SMALL_GRAPH_EDGES:
         # union-by-min: roots are always their component's minimum id, so
         # find(v) IS the cluster label — no second pass needed.
         parent: dict[int, int] = {}
@@ -1024,7 +1019,7 @@ def _two_phase_cc(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in edges.collect():
+        for row in head:
             a, b = row["a"], row["b"]
             parent.setdefault(a, a)
             parent.setdefault(b, b)
@@ -1038,6 +1033,7 @@ def _two_phase_cc(
         )
         return members, 0
 
+    edges = edges.localCheckpoint()
     prev = None
     rounds = 0
     for _ in range(max_iters):

@@ -16,7 +16,6 @@ integer arithmetic on both engines, no overflow, no float.
 These are pure column expressions (JVM codegen on the Spark side); md5 is
 not the *fastest* choice, but the hot path at scale is dominated by the
 shuffle/agg around it, and portability is what the correctness gate buys.
-Swap in xxhash64 via ``fast=True`` when oracle parity is not required.
 """
 
 from __future__ import annotations
@@ -69,10 +68,8 @@ def spread_by_key(df, *cols: str | Column, multiplier: int = 1):
     return df.repartition(target, *[_col(c) for c in cols])
 
 
-def portable_hash60(c: str | Column, fast: bool = False) -> Column:
+def portable_hash60(c: str | Column) -> Column:
     """60-bit positive hash of a string column, reproducible in DuckDB."""
-    if fast:
-        return F.xxhash64(_col(c))  # not oracle-portable; for production paths
     return F.conv(F.substring(F.md5(_col(c)), 1, 15), 16, 10).cast("long")
 
 

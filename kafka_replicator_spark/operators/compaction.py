@@ -164,15 +164,14 @@ def plan_compaction(
 
 
 def merge_segments(
-    spark: SparkSession, plan: DataFrame | list, root: str, region: str,
+    spark: SparkSession, plan: list, root: str, region: str,
     max_output_messages: int | None = None,
 ) -> DataFrame:
     """M1: execute a compaction plan → one merged segment per partition.
 
-    ``plan`` may be the planner DataFrame or its already-collected rows —
-    the plan is metadata-scale (the reference holds the same list in
-    memory), and collecting once in the caller avoids re-running the
-    planner's tiny Spark jobs.
+    ``plan`` is the planner's collected rows — the plan is metadata-scale
+    (the reference holds the same list in memory), and the caller collects
+    it once.
 
     ``max_output_messages`` (optional) chunks the merged output into
     multiple contiguous segments of at most that many messages.  The
@@ -196,19 +195,12 @@ def merge_segments(
     ``missing message range``, compactor.go:219-221); the gapped partition
     publishes nothing.
     """
-    if isinstance(plan, DataFrame):
-        meta = plan.select(
-            "topic", "partition_id", "level", "start_offset", "end_offset",
-            "path", "compact_floor",
-        ).collect()
-    else:
-        meta = plan
-    if not meta:
+    if not plan:
         return local_frame(spark, [], WRITTEN_SEGMENT_SCHEMA)
     out_levels = {}  # (topic, partition) -> max input level + 1
     floors = {}
     by_part: dict = {}
-    for r in meta:
+    for r in plan:
         k = (r["topic"], r["partition_id"])
         out_levels[k] = max(out_levels.get(k, 0), r["level"] + 1)
         floors[k] = max(floors.get(k, 0), r["compact_floor"])
@@ -332,7 +324,6 @@ def compact(
     spark: SparkSession,
     root: str,
     region: str,
-    delete_inputs: bool = True,
     max_output_messages: int | None = None,
     **plan_kwargs,
 ) -> DataFrame:
@@ -367,6 +358,6 @@ def compact(
             )
             raise ValueError(first.strip()) from e
         raise
-    if delete_inputs and result:
+    if result:
         delete_segment_files(input_paths)
     return local_frame(spark, result, WRITTEN_SEGMENT_SCHEMA)

@@ -535,9 +535,7 @@ _KCORE_SCHEMA = "round long, n_alive long, n_edges long"
     "force the distributed path and assert identical output); pure "
     "integer counts, 3 output rows",
 )
-def q_kcore_peel(
-    spark: SparkSession, sf_dir: str, small_graph_edges: int = _KCORE_SMALL_EDGES
-) -> DataFrame:
+def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_replicator_spark.functions import graph, similarity
 
     e = graph.undirect(
@@ -545,8 +543,8 @@ def q_kcore_peel(
     )
     # one job answers both "is the graph small?" and "what are its edges?";
     # a graph past the guard is built once more, by its first cached round
-    head = e.limit(small_graph_edges + 1).collect()
-    if len(head) <= small_graph_edges:
+    head = e.limit(_KCORE_SMALL_EDGES + 1).collect()
+    if len(head) <= _KCORE_SMALL_EDGES:
         edges = [(r["u"], r["v"]) for r in head]
         stats = []
         for i in range(1, _KCORE_ROUNDS + 1):

@@ -33,7 +33,8 @@ class IncrementalAggState:
     def _current_path(self) -> str | None:
         ptr = os.path.join(self.state_dir, "_CURRENT")
         if os.path.exists(ptr):
-            return os.path.join(self.state_dir, open(ptr).read().strip())
+            with open(ptr) as f:
+                return os.path.join(self.state_dir, f.read().strip())
         return None
 
     def read(self) -> DataFrame | None:

@@ -182,7 +182,7 @@ def test_duplicate_clusters_matches_union_find(spark_global, edges):
     assert got == expected
 
 
-def test_two_phase_cc_adversarial_chain_logarithmic_rounds(spark):
+def test_two_phase_cc_adversarial_chain_logarithmic_rounds(spark, monkeypatch):
     """Kiveris et al. 2014 upper bound in practice: a 10k-node path graph
     (diameter 9 999 — min-label propagation's worst case) must converge in
     ≤ 2·log2(n) large+small rounds and still label every node with the
@@ -191,9 +191,36 @@ def test_two_phase_cc_adversarial_chain_logarithmic_rounds(spark):
 
     n = 10_000
     edges = spark.range(n - 1).selectExpr("id AS a", "id + 1 AS b")
-    # small_graph_edges=0 forces the distributed contraction path (the
-    # round bound is the subject; the default would broadcast this graph)
-    members, rounds = dedup._two_phase_cc(edges, max_iters=40, small_graph_edges=0)
+    # a guard of 0 forces the distributed contraction path (the round
+    # bound is the subject; the default would union-find this graph)
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 0)
+    members, rounds = dedup._two_phase_cc(edges, max_iters=40)
     assert 0 < rounds <= 2 * math.log2(n), f"{rounds} rounds for n={n}"
     got = members.groupBy("comp").agg(F.count(F.lit(1)).alias("c")).collect()
     assert len(got) == 1 and got[0]["comp"] == 0 and got[0]["c"] == n
+
+
+def test_two_phase_cc_guard_boundary_agrees(spark, monkeypatch):
+    """At a guard equal to the graph's edge count the components come from
+    the driver union-find in exactly one Spark job (the guard's
+    ``limit + collect``, nothing checkpointed); one below it, the
+    distributed contraction runs.  Same membership."""
+    from tests.test_local_frame import _jobs_launched
+
+    # 32 disjoint 8-node paths, one input partition and no shuffle, so the
+    # guard's limit-collect scans the whole frame in one job
+    edges = spark.range(0, 256, 1, 1).filter("id % 8 <> 7").selectExpr(
+        "id AS a", "id + 1 AS b"
+    )
+    n_edges = 256 - 32
+    got = {}
+    for guard, driver in ((n_edges, True), (n_edges - 1, False)):
+        monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", guard)
+        with _jobs_launched(spark) as n:
+            members, rounds = dedup._two_phase_cc(edges)
+        assert (rounds == 0) == driver, (guard, rounds)
+        if driver:
+            assert n == [1], n
+        got[driver] = sorted(tuple(r) for r in members.select("node", "comp").collect())
+    assert got[True] == got[False]
+    assert got[True] == [(v, v - v % 8) for v in range(256)]

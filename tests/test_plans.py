@@ -802,29 +802,30 @@ def test_nation_share_drift_broadcasts_dims(spark, sf_dir):
     release_cached()
 
 
-def test_kcore_driver_and_distributed_paths_agree(spark, sf_dir):
+def test_kcore_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
     from kafka_replicator_spark.cacheutil import release_cached
+    from kafka_replicator_spark.queries import pipeline_r6
     from kafka_replicator_spark.queries.pipeline_r6 import q_kcore_peel
 
     spark.catalog.clearCache()
     release_cached()
     fast = sorted(tuple(r) for r in q_kcore_peel(spark, sf_dir).collect())
     release_cached()
-    # small_graph_edges=0 forces the distributed peel (the guarded driver
-    # fast path must be a pure optimization, never a semantic change)
-    slow = sorted(
-        tuple(r) for r in q_kcore_peel(spark, sf_dir, small_graph_edges=0).collect()
-    )
+    # a guard of 0 forces the distributed peel (the guarded driver fast
+    # path must be a pure optimization, never a semantic change)
+    monkeypatch.setattr(pipeline_r6, "_KCORE_SMALL_EDGES", 0)
+    slow = sorted(tuple(r) for r in q_kcore_peel(spark, sf_dir).collect())
     release_cached()
     assert fast == slow, (fast, slow)
 
 
-def test_kcore_guard_boundary_agrees(spark, sf_dir):
-    """At ``small_graph_edges`` = the graph's edge count the peel runs on
-    the driver (one collect, nothing cached); one below it, the
-    distributed peel runs on the cached edge frame.  Same rows."""
+def test_kcore_guard_boundary_agrees(spark, sf_dir, monkeypatch):
+    """At a guard equal to the graph's edge count the peel runs on the
+    driver (one collect, nothing cached); one below it, the distributed
+    peel runs on the cached edge frame.  Same rows."""
     from kafka_replicator_spark.cacheutil import _TRACKED, release_cached
     from kafka_replicator_spark.functions import graph, similarity
+    from kafka_replicator_spark.queries import pipeline_r6
     from kafka_replicator_spark.queries.pipeline_r6 import q_kcore_peel
     from kafka_replicator_spark.sources.tables import load_table
 
@@ -835,7 +836,8 @@ def test_kcore_guard_boundary_agrees(spark, sf_dir):
     release_cached()
     rows = {}
     for limit, driver in ((n_edges, True), (n_edges - 1, False)):
-        df = q_kcore_peel(spark, sf_dir, small_graph_edges=limit)
+        monkeypatch.setattr(pipeline_r6, "_KCORE_SMALL_EDGES", limit)
+        df = q_kcore_peel(spark, sf_dir)
         assert (not _TRACKED) == driver, limit
         rows[driver] = sorted(tuple(r) for r in df.collect())
         release_cached()

@@ -194,3 +194,39 @@ def test_message_size_includes_headers(spark):
     )
     got = df.select(message_size_col().alias("sz")).collect()[0]["sz"]
     assert got == 16 + 1 + 3 + (2 + 2) + (4 + 4)
+
+
+@pytest.fixture(scope="module")
+def scoped_root(spark, tmp_path_factory):
+    """Region r1 holds topics a, b × partitions 0, 1; region r2 holds a/0."""
+    root = str(tmp_path_factory.mktemp("scoped"))
+    for region, parts in (("r1", [("a", 0), ("a", 1), ("b", 0), ("b", 1)]), ("r2", [("a", 0)])):
+        rows = [(t, p, o, b"k", b"v", 0) for t, p in parts for o in range(3)]
+        df = spark.createDataFrame(
+            rows, "topic string, partition_id int, msg_offset long, "
+            "msg_key binary, payload binary, ts_ns long",
+        ).withColumn("segment_seq", F.lit(0))
+        write_segments(df, root=root, region=region, level=0).collect()
+    return root
+
+
+@pytest.mark.parametrize("via", ["list_segments"])
+@pytest.mark.parametrize(
+    "filters, expected",
+    [
+        ({"region": "r2"}, {("r2", "a", 0)}),
+        ({"region": "r1", "topic": "b"}, {("r1", "b", 0), ("r1", "b", 1)}),
+        ({"topic": "a"}, {("r1", "a", 0), ("r1", "a", 1), ("r2", "a", 0)}),
+        ({"partition": 1}, {("r1", "a", 1), ("r1", "b", 1)}),
+        ({"region": "r1", "partition": 1}, {("r1", "a", 1), ("r1", "b", 1)}),
+        ({"topic": "a", "partition": 0}, {("r1", "a", 0), ("r2", "a", 0)}),
+    ],
+    ids=["region", "region+topic", "topic", "partition", "region+partition", "topic+partition"],
+)
+def test_scope_filters_apply_without_the_level_above(spark, scoped_root, via, filters, expected):
+    """Every given scope filter applies, also one given without the level
+    above it (the walk prefix covers only the leading run of filters)."""
+    kwargs = {("partition_id" if k == "partition" else k): v for k, v in filters.items()}
+    df = list_segments(spark, scoped_root, **kwargs)
+    got = {tuple(r) for r in df.select("region", "topic", "partition_id").distinct().collect()}
+    assert got == expected
